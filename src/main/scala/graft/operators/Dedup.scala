@@ -4,6 +4,7 @@ import graft.Tables
 import graft.functions.{TextFunctions => TF}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
 
 /** Deduplication family (SURVEY §2.5 D1/D6, §2.3 J3): exact key dedup,
   * content-hash dedup, n-gram Jaccard near-dup, MinHash+LSH near-dup,
@@ -1120,7 +1121,106 @@ object Dedup {
     spark.read.schema(schema).parquet(root)
   }
 
-  /** Connected components over an undirected edge set by the
+  /** Connected components over an undirected edge set, as
+    * `(id, lbl)` with `lbl` the minimum id of `id`'s component (isolated
+    * vertices label themselves). The edges are canonicalized to (hi > lo),
+    * deduplicated and checkpointed once; then one of two routes finishes:
+    *
+    *   - LOCAL, for graphs that fit under
+    *     `spark.sql.autoBroadcastJoinThreshold` at [[LocalFinishEdgeBytes]]
+    *     per edge (about 650k edges at the 10 MB default) with integral
+    *     ids: ONE bounded collect both decides the route and ships the
+    *     edges to the driver, a min-label union-find resolves them, and the
+    *     star map goes back as a broadcast relation. Near-dup graphs are
+    *     this size at any corpus scale the fixtures reach, and the
+    *     distributed fixpoint spends ~40 fixed-cost jobs on them.
+    *   - DISTRIBUTED, over the bound, when the threshold is ≤ 0, or for
+    *     non-integral ids: [[starLabelsByAlternation]].
+    *
+    * Either route's star map `(id → component min, non-minimum ids only)`
+    * is left-joined to `vertices`, and the labeling is VALIDATED: every
+    * original edge must connect identically-labeled vertices, else throw.
+    * An unconverged or inconsistent label table silently mislabels
+    * clusters, which a dedup pipeline must never ship.
+    */
+  def connectedComponents(vertices: DataFrame, edges: DataFrame,
+                          maxIter: Int = 25): DataFrame = {
+    val e0 = edges.select(col("src"), col("dst"))
+      .filter(col("src") =!= col("dst"))
+      .select(greatest(col("src"), col("dst")).as("hi"),
+        least(col("src"), col("dst")).as("lo"))
+      .distinct().localCheckpoint(true)
+    val spark = e0.sparkSession
+    val idType = e0.schema("hi").dataType
+    val bound = idType match {
+      case ByteType | ShortType | IntegerType | LongType =>
+        math.min(spark.sessionState.conf.autoBroadcastJoinThreshold /
+          LocalFinishEdgeBytes, Int.MaxValue - 1L).toInt
+      case _ => 0
+    }
+    // coalesce(1): the bounded take is one single-task job, not a scan
+    // that widens over the partitions job by job
+    val small = if (bound <= 0) None
+      else Some(e0.coalesce(1).limit(bound + 1).collect()).filter(_.length <= bound)
+    val starLabels = small match {
+      case Some(rows) => broadcast(localStarLabels(spark, rows)
+        .select(col("id").cast(idType), col("lbl").cast(idType)))
+      case None => starLabelsByAlternation(e0, maxIter)
+    }
+    val labels = vertices.select(col("id"))
+      .join(starLabels, Seq("id"), "left")
+      .select(col("id"), coalesce(col("lbl"), col("id")).as("lbl"))
+      .localCheckpoint(true)
+    // soundness gate on both routes: a split component always leaves some
+    // original edge whose endpoints carry two labels. Each edge is keyed by
+    // both endpoints so ONE join over the labels finds both; the count runs
+    // per partition on the RDD, without the exchange Dataset.count adds
+    val endpoints = e0.select(col("hi").as("id"), col("hi"), col("lo"))
+      .union(e0.select(col("lo").as("id"), col("hi"), col("lo")))
+    val inconsistent = labels.join(endpoints, "id")
+      .groupBy(col("hi"), col("lo"))
+      .agg(min(col("lbl")).as("la"), max(col("lbl")).as("lb"))
+      .filter(col("la") =!= col("lb")).rdd.count()
+    if (inconsistent > 0)
+      throw new IllegalStateException(
+        s"connectedComponents converged to an inconsistent labeling ($inconsistent crossing edges)")
+    labels
+  }
+
+  /** Bytes one canonical (hi, lo) edge is charged against
+    * `spark.sql.autoBroadcastJoinThreshold` when [[connectedComponents]]
+    * picks its route: two 8-byte ids. */
+  private val LocalFinishEdgeBytes: Long = 16L
+
+  /** Min-label union-find over collected (hi, lo) integral edges, on the
+    * driver. Every union hangs the larger root under the smaller, so each
+    * root is its component's minimum; the result is the star map
+    * `(id, lbl)` of the non-root ids, as Longs. */
+  private def localStarLabels(spark: SparkSession,
+                              rows: Array[org.apache.spark.sql.Row]): DataFrame = {
+    val slot = new scala.collection.mutable.LongMap[Int](2 * rows.length)
+    val ids = new Array[Long](2 * rows.length)
+    val parent = Array.range(0, 2 * rows.length)
+    var n = 0
+    def slotOf(v: Long): Int = slot.getOrElseUpdate(v, { ids(n) = v; n += 1; n - 1 })
+    def find(x0: Int): Int = {
+      var x = x0
+      while (parent(x) != x) { parent(x) = parent(parent(x)); x = parent(x) }
+      x
+    }
+    rows.foreach { r =>
+      val a = find(slotOf(r.getAs[Number](0).longValue))
+      val b = find(slotOf(r.getAs[Number](1).longValue))
+      if (a != b) { if (ids(a) < ids(b)) parent(b) = a else parent(a) = b }
+    }
+    import spark.implicits._
+    (0 until n).flatMap { i =>
+      val root = find(i)
+      if (root == i) None else Some(ids(i) -> ids(root))
+    }.toDF("id", "lbl")
+  }
+
+  /** The distributed finish of [[connectedComponents]]: the
     * large-star/small-star alternation (Kiveris et al., "Connected
     * Components in MapReduce and Beyond", SoCC'14) — the O(log² n)-round
     * algorithm, vs graph-diameter rounds for plain min-label propagation.
@@ -1146,22 +1246,11 @@ object Dedup {
     * one full alternation, decided by ONE action per round (a left-join
     * aggregate over the checkpointed, distinct edge relations yields
     * |new| and |new ∖ old| together; with the previous count remembered,
-    * both equality conditions read off one row); the returned labeling is
-    * additionally
-    * VALIDATED: every original edge must connect identically-labeled
-    * vertices, else throw.
-    * An unconverged or inconsistent label table silently mislabels
-    * clusters, which a dedup pipeline must never ship. Per-round
-    * localCheckpoints keep lineage flat; on a real cluster these become
-    * checkpoints to durable storage.
+    * both equality conditions read off one row). Throws when `maxIter`
+    * rounds do not converge. Per-round localCheckpoints keep lineage
+    * flat; on a real cluster these become checkpoints to durable storage.
     */
-  def connectedComponents(vertices: DataFrame, edges: DataFrame,
-                          maxIter: Int = 25): DataFrame = {
-    val e0 = edges.select(col("src"), col("dst"))
-      .filter(col("src") =!= col("dst"))
-      .select(greatest(col("src"), col("dst")).as("hi"),
-        least(col("src"), col("dst")).as("lo"))
-      .distinct().localCheckpoint(true)
+  private def starLabelsByAlternation(e0: DataFrame, maxIter: Int): DataFrame = {
     // exact fixpoint test: both edge sets are distinct, localCheckpointed
     // relations, so a count gate (previous round's count is remembered,
     // not recomputed) + one-direction containment decides set equality
@@ -1208,21 +1297,7 @@ object Dedup {
     if (!converged)
       throw new IllegalStateException(
         s"connectedComponents did not converge in $maxIter rounds")
-    val starLabels = e.groupBy(col("hi").as("id")).agg(min(col("lo")).as("lbl"))
-    val labels = vertices.select(col("id"))
-      .join(starLabels, Seq("id"), "left")
-      .select(col("id"), coalesce(col("lbl"), col("id")).as("lbl"))
-      .localCheckpoint(true)
-    // soundness gate for the sum-based convergence test: a split component
-    // always leaves some original edge crossing two labels
-    val la = labels.select(col("id").as("hi"), col("lbl").as("la"))
-    val lb = labels.select(col("id").as("lo"), col("lbl").as("lb"))
-    val inconsistent = e0.join(la, "hi").join(lb, "lo")
-      .filter(col("la") =!= col("lb")).count()
-    if (inconsistent > 0)
-      throw new IllegalStateException(
-        s"connectedComponents converged to an inconsistent labeling ($inconsistent crossing edges)")
-    labels
+    e.groupBy(col("hi").as("id")).agg(min(col("lo")).as("lbl"))
   }
 
   /** D31 [EXT] — DEDUP THRESHOLD SENSITIVITY CURVE: the knob-tuning query
@@ -1242,11 +1317,13 @@ object Dedup {
     * magnitude below corpus size. The same one-pass-many-gates shape as
     * the q165/q178/q180 sweeps. The per-threshold legs are INDEPENDENT
     * (each filters its own edge set and runs its own CC), so they run
-    * on concurrent driver threads over the persisted pair leaf — an
-    * iterative CC is many small barrier-synchronized jobs, and
-    * interleaving the sweeps fills the idle cores each barrier leaves
-    * (the r18 fresh-JVM attribution: 7.1 s sequential → the CC loops,
-    * not leaf re-reads). */
+    * on concurrent driver threads over the persisted pair leaf. A leg is
+    * a short chain of small jobs even when its CC takes the local finish
+    * (edge checkpoint, bounded collect, label join, validation gate,
+    * stats), each too small to fill the cores, so interleaving the legs
+    * fills the cores one leg leaves idle; an over-bound edge set runs
+    * the alternation's many barrier-synchronized rounds, where the
+    * interleaving matters most. */
   def dedupThresholdCurve(spark: SparkSession, dir: String,
                           ts: Seq[Double] = Seq(0.5, 0.6, 0.7, 0.8, 0.9)): DataFrame = {
     require(ts.nonEmpty && ts.forall(t => t > 0 && t <= 1), s"need 0<t<=1; got $ts")

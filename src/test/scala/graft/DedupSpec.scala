@@ -1,6 +1,7 @@
 package graft
 
 import graft.operators.Dedup
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -122,13 +123,103 @@ class DedupSpec extends AnyFunSuite {
   test("connectedComponents refuses to return unconverged labels") {
     // a 6-hop path needs ~5 rounds; maxIter=2 must throw, not silently
     // mislabel — an unconverged label table shipped to a dedup pipeline
-    // would drop the wrong documents
+    // would drop the wrong documents. The local finish never iterates, so
+    // the distributed route is forced to reach the round limit.
     val vertices = (1L to 7L).toDF("id")
     val edges = (1L to 6L).map(i => (i, i + 1)).toDF("src", "dst")
     val e = intercept[IllegalStateException] {
-      Dedup.connectedComponents(vertices, edges, maxIter = 2)
+      withBroadcastThreshold("-1")(
+        Dedup.connectedComponents(vertices, edges, maxIter = 2))
     }
     assert(e.getMessage.contains("converge"))
+  }
+
+  /** Runs `f` under another broadcast threshold, which moves
+    * connectedComponents' local-finish bound; "-1" forces the distributed
+    * (alternation) route. */
+  private def withBroadcastThreshold[T](value: String)(f: => T): T = {
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val saved = spark.conf.getOption(key)
+    spark.conf.set(key, value)
+    try f finally saved.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
+  /** Jobs `f` starts on this thread, counted by a SparkListener on the
+    * job group. The listener bus is asynchronous but ordered, so once a
+    * marker job run after `f` has been seen, every job of `f` has been
+    * counted. */
+  private def jobsStartedBy(f: => Any): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val marked = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit =
+        Option(js.properties).map(_.getProperty("spark.jobGroup.id")) match {
+          case Some("jobs-started-by") => jobs.incrementAndGet(); ()
+          case Some("jobs-started-by-marker") => marked.countDown()
+          case _ =>
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup("jobs-started-by", "counted")
+      try f finally sc.clearJobGroup()
+      sc.setJobGroup("jobs-started-by-marker", "marker")
+      try spark.range(1).count() finally sc.clearJobGroup()
+      assert(marked.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      jobs.get
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("connectedComponents: local finish and distributed alternation return identical labels") {
+    def labels(vertices: DataFrame, edges: DataFrame): Map[Long, Long] =
+      Dedup.connectedComponents(vertices, edges).as[(Long, Long)].collect().toMap
+    def sameOnBothRoutes(what: String, vertices: DataFrame,
+                         edges: DataFrame): Map[Long, Long] = {
+      val local = labels(vertices, edges)
+      val distributed = withBroadcastThreshold("-1")(labels(vertices, edges))
+      assert(local == distributed, s"$what: routes disagree")
+      local
+    }
+    val chain = sameOnBothRoutes("chain", Seq(1L, 2L, 3L, 4L).toDF("id"),
+      Seq((1L, 2L), (2L, 3L), (3L, 4L)).toDF("src", "dst"))
+    assert(chain == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L))
+    val n = 200L
+    val pathVertices = (1L to n).toDF("id")
+    val pathEdges = (1L until n).map(i => (i, i + 1)).toDF("src", "dst")
+    val path = sameOnBothRoutes("200-vertex path", pathVertices, pathEdges)
+    assert(path.size == n && path.values.forall(_ == 1L))
+    val isolated = sameOnBothRoutes("isolated vertices", (1L to 6L).toDF("id"),
+      Seq((5L, 3L)).toDF("src", "dst"))
+    assert(isolated == Map(1L -> 1L, 2L -> 2L, 3L -> 3L, 4L -> 4L, 5L -> 3L, 6L -> 6L))
+    val loops = sameOnBothRoutes("self-loops", (1L to 4L).toDF("id"),
+      Seq((1L, 1L), (2L, 2L), (2L, 4L), (4L, 4L)).toDF("src", "dst"))
+    assert(loops == Map(1L -> 1L, 2L -> 2L, 3L -> 3L, 4L -> 2L))
+    val dupRev = sameOnBothRoutes("duplicate and reversed edges", (1L to 5L).toDF("id"),
+      Seq((1L, 2L), (2L, 1L), (1L, 2L), (5L, 4L), (4L, 5L), (3L, 5L)).toDF("src", "dst"))
+    assert(dupRev == Map(1L -> 1L, 2L -> 1L, 3L -> 3L, 4L -> 3L, 5L -> 3L))
+    val empty = sameOnBothRoutes("empty edge set", (1L to 3L).toDF("id"),
+      Seq.empty[(Long, Long)].toDF("src", "dst"))
+    assert(empty == Map(1L -> 1L, 2L -> 2L, 3L -> 3L))
+    val emb = sameOnBothRoutes("sf0.001 embedding pairs",
+      Tables.embeddings(spark, TestSpark.Sf0001).select(col("vec_id").as("id")),
+      Dedup.ensureEmbedPairs(spark, TestSpark.Sf0001, 0.4)
+        .select(col("id_a").as("src"), col("id_b").as("dst")))
+    assert(emb.exists { case (id, lbl) => id != lbl }, "embedding graph has no edges")
+    // the point of the local finish: a fixed handful of jobs, not a chain
+    // of per-round ones (the call runs every job, as it returns
+    // checkpointed labels). An 80-byte threshold bounds the local finish
+    // at 5 edges, so the 199-edge path is over the bound and alternates.
+    val localJobs = jobsStartedBy(Dedup.connectedComponents(pathVertices, pathEdges))
+    assert(localJobs <= 8, s"local route started $localJobs jobs")
+    withBroadcastThreshold("80") {
+      assert(labels(pathVertices, pathEdges) == path, "over-bound labels differ")
+      val overBoundJobs =
+        jobsStartedBy(Dedup.connectedComponents(pathVertices, pathEdges))
+      assert(overBoundJobs > 2 * localJobs,
+        s"over the bound: $overBoundJobs jobs vs $localJobs on the local route")
+    }
   }
 
   test("connectedComponents: labels propagate transitively along chains") {
