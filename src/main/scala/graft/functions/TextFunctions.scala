@@ -4,9 +4,17 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 /** Text-analysis building blocks for the documents pipeline: tokenization,
-  * shingling, fingerprints, quality metrics, language ID. All pure built-in
-  * expressions (codegen'd, no UDFs), so Catalyst can prune/push as usual
-  * and every function has an exact ANSI-SQL twin for the DuckDB oracle.
+  * shingling, fingerprints, quality metrics, language ID. No UDFs: built-in
+  * expressions plus native codegen'd nodes, so Catalyst can prune/push as
+  * usual and every function has an exact ANSI-SQL twin for the DuckDB
+  * oracle.
+  *
+  * The per-document counts (tokens, subwords, characters, letters,
+  * stopword and language-marker hits) are field reads of ONE
+  * [[TextStatsExpr]] node per word-set list: a single compiled pass over
+  * the UTF-8 bytes per row, shared by every metric through subexpression
+  * elimination. The ratio, `least` and `round` arithmetic on top stays
+  * ordinary Column arithmetic.
   *
   * Reference analog: the reference's string surface is concat/split/replace
   * (/root/reference/src/preprocessing_pipeline.py:145,265-268,
@@ -25,12 +33,6 @@ object TextFunctions {
   def nfcNormalize(text: Column): Column =
     org.apache.spark.sql.GraftSql.column(
       NfcNormalizeExpr(org.apache.spark.sql.GraftSql.expression(text)))
-
-  /** BPE-ish subword segmentation: runs of letters, runs of digits, or a
-    * single non-alphanumeric character — the standard pre-tokenizer shape.
-    */
-  def subwordTokens(text: Column): Column =
-    regexp_extract_all(text, lit("[A-Za-z]+|[0-9]+|[^A-Za-z0-9 ]"), lit(0))
 
   /** Word n-gram shingles, each a space-joined string; empty array when the
     * document has fewer than n tokens.
@@ -63,22 +65,39 @@ object TextFunctions {
   /** Exact content hash (sha-256 hex, lowercase — identical in DuckDB). */
   def contentHash(text: Column): Column = sha2(text, 256)
 
-  // --- quality metrics (per-row arithmetic: deterministic, oracle-exact) ---
-
-  def nTokens(text: Column): Column = size(tokens(text))
-
-  def meanTokenLen(text: Column): Column =
-    (length(text) - nTokens(text) + 1).cast("double") / nTokens(text).cast("double")
+  // --- per-document counts: field reads of one TextStatsExpr node ---
 
   private val enStopwords = Seq("the", "a", "of", "and", "in", "to", "is")
 
+  private def stats(text: Column, wordSets: Seq[Seq[String]]): Column =
+    org.apache.spark.sql.GraftSql.column(
+      TextStatsExpr(org.apache.spark.sql.GraftSql.expression(text), wordSets))
+
+  /** A field of the canonical stats node (English stopwords): every metric
+    * below reads this one instance, so a projection of several metrics
+    * computes it once per row. */
+  private def enStat(text: Column, field: String): Column =
+    stats(text, Seq(enStopwords)).getField(field)
+
+  /** Whitespace token count, `size(tokens(text))` (INT). */
+  def nTokens(text: Column): Column = enStat(text, "n_tokens")
+
+  /** BPE-ish subword count: runs of letters, runs of digits, or a single
+    * non-alphanumeric, non-space character — the standard pre-tokenizer
+    * shape, `[A-Za-z]+|[0-9]+|[^A-Za-z0-9 ]` (INT). */
+  def nSubwords(text: Column): Column = enStat(text, "n_subwords")
+
+  /** Character count, `length(text)` (INT). */
+  def nChars(text: Column): Column = enStat(text, "n_chars")
+
+  // --- quality metrics (per-row arithmetic: deterministic, oracle-exact) ---
+
   def stopwordRatio(text: Column): Column =
-    size(filter(tokens(text), t => t.isInCollection(enStopwords))).cast("double") /
+    enStat(text, TextStatsExpr.hitsField(0)).cast("double") /
       nTokens(text).cast("double")
 
   def alphaRatio(text: Column): Column =
-    (length(regexp_replace(text, "[^A-Za-z]", "")).cast("double") /
-      length(text).cast("double"))
+    enStat(text, "n_alpha").cast("double") / nChars(text).cast("double")
 
   /** Composite quality score in [0,1]: long-enough, word-like, not
     * stopword-soup. The formula is arbitrary but fixed — the point is the
@@ -102,14 +121,14 @@ object TextFunctions {
     "fr" -> Seq("le", "la", "de", "et", "est"),
     "zh" -> Seq("de5", "shi4", "le5"))
 
-  def langScore(text: Column, markers: Seq[String]): Column =
-    size(filter(tokens(text), t => t.isInCollection(markers)))
-
-  /** argmax over langScore with first-wins tie-break in declaration order
+  /** argmax over the per-language marker-token counts (one stats node over
+    * all five marker sets) with first-wins tie-break in declaration order
     * (en > es > de > fr > zh), mirrored exactly by a CASE chain in the
     * oracle SQL. */
   def langId(text: Column): Column = {
-    val scores = langMarkers.map { case (l, m) => l -> langScore(text, m) }
+    val node = stats(text, langMarkers.map(_._2))
+    val scores = langMarkers.zipWithIndex.map { case ((l, _), k) =>
+      l -> node.getField(TextStatsExpr.hitsField(k)) }
     val maxAll = greatest(scores.map(_._2): _*)
     scores.foldRight(lit("und")) { case ((l, s), acc) =>
       when(s === maxAll && maxAll > 0, lit(l)).otherwise(acc)

@@ -1278,12 +1278,17 @@ object Relational {
 
   /** [[ensureLiKeyHist]] generalized to a named derived expression over
     * lineitem — the q207/q212 estimator audits' deterministic histogram
-    * inputs (the expression is part of the session key). */
+    * inputs. The session key is the expression's SQL text, not `name`
+    * (which only labels the spill): one name over two expressions builds
+    * two histograms. */
   private[graft] def ensureLiExprHist(spark: SparkSession, dir: String,
-                                      name: String, expr0: => Column,
+                                      name: String, expr0: Column,
                                       nBuckets: Int = 16): DataFrame = {
+    // Column.toString is the column node's SQL text, e.g.
+    // "CAST(floor(l_quantity) AS BIGINT)"; the converted Catalyst
+    // expression would print only an opaque wrapper here
     val root = graft.sources.Sources.ensureStore(spark, "lixhist",
-        s"$dir|$name|$nBuckets") { p =>
+        s"$dir|$expr0|$nBuckets") { p =>
       equiDepthBuckets(Tables.lineitem(spark, dir).select(expr0.as("v")),
           nBuckets, name)
         .write.mode("overwrite").parquet(p)

@@ -592,6 +592,17 @@ object Similarity {
       "assign_mismatches", "probe_mismatches")
   }
 
+  /** q94's persisted (codebook, index) scratch paths. Both names carry
+    * every part of the bootstrap's memo key (`dir` and `nLists`): a
+    * same-session call with another list count builds beside, never over,
+    * a store the memo still vouches for. */
+  private[graft] def ivfIncrementalPaths(spark: SparkSession, dir: String,
+                                         nLists: Int): (String, String) = {
+    val tag = graft.sources.Sources.dirTag(dir) + s"_l$nLists"
+    (graft.sources.Sources.scratchDir(spark, "ivf_codebook_" + tag),
+      graft.sources.Sources.scratchDir(spark, "ivf_index_" + tag))
+  }
+
   /** q94 fixture entry — the invariant row (q34 discipline: the RNG-free
     * facts DuckDB can recount plus violation counters that must be zero):
     * settled corpus (vec_id % 5 ≠ 0) bootstraps the persisted index, the
@@ -607,9 +618,7 @@ object Similarity {
                               nQueries: Int = 10, k: Int = 5): DataFrame = {
     val e = Tables.embeddings(spark, dir).select(col("vec_id"), col("embedding"))
     val isNew = col("vec_id") % 5 === 0
-    val hex = graft.sources.Sources.dirTag(dir)
-    val cbPath = graft.sources.Sources.scratchDir(spark, "ivf_codebook_" + hex)
-    val idxPath = graft.sources.Sources.scratchDir(spark, "ivf_index_" + hex)
+    val (cbPath, idxPath) = ivfIncrementalPaths(spark, dir, nLists)
     // bootstrap ONCE per session (deterministic content — codebook seeds
     // and assignment are seeded/exact): the tick owns its batch partition
     // and OVERWRITES it (dynamic partition overwrite), so a same-session

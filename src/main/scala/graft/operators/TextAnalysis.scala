@@ -13,14 +13,15 @@ import org.apache.spark.sql.functions._
 object TextAnalysis {
 
   /** Per-document metrics: whitespace tokens, BPE-ish subword tokens,
-    * quality score, stopword/alpha ratios. Pure per-row expressions (one
-    * scan, no shuffle). */
+    * characters, quality score, stopword/alpha ratios. Every column reads
+    * the same [[graft.functions.TextStatsExpr]] node, so each row's text is
+    * scanned once, inside whole-stage codegen (one scan, no shuffle). */
   def docMetrics(spark: SparkSession, dir: String): DataFrame =
     Tables.documents(spark, dir).select(
       col("doc_id"),
       TF.nTokens(col("text")).cast("long").as("n_tokens"),
-      size(TF.subwordTokens(col("text"))).cast("long").as("n_subwords"),
-      length(col("text")).cast("long").as("n_chars_c"),
+      TF.nSubwords(col("text")).cast("long").as("n_subwords"),
+      TF.nChars(col("text")).cast("long").as("n_chars_c"),
       round(TF.stopwordRatio(col("text")), 6).as("stopword_ratio"),
       round(TF.alphaRatio(col("text")), 6).as("alpha_ratio"),
       TF.qualityScore(col("text")).as("quality"))
@@ -2012,17 +2013,18 @@ object TextAnalysis {
     * pre-tokenizer (letter runs / digit runs / single punctuation — the
     * q25 column, so doc grain and corpus grain can never disagree).
     *
-    * Scale: one scan, three in-row expression columns, one map-side-
-    * combined hash agg on the ≤|langs| key. Ratios through DECIMAL (q92
-    * discipline). Fully oracle-checked.
+    * Scale: one scan, the three counts read off one in-row
+    * [[graft.functions.TextStatsExpr]] pass over each document, one
+    * map-side-combined hash agg on the ≤|langs| key. Ratios through
+    * DECIMAL (q92 discipline). Fully oracle-checked.
     */
   def tokenizerFertilityAudit(spark: SparkSession, dir: String): DataFrame = {
     val dec = org.apache.spark.sql.types.DecimalType(38, 18)
     Tables.documents(spark, dir)
       .select(col("lang"),
         TF.nTokens(col("text")).cast("long").as("w"),
-        size(TF.subwordTokens(col("text"))).cast("long").as("s"),
-        length(col("text")).cast("long").as("c"))
+        TF.nSubwords(col("text")).cast("long").as("s"),
+        TF.nChars(col("text")).cast("long").as("c"))
       .groupBy(col("lang"))
       .agg(count(lit(1)).as("n_docs"), sum(col("w")).as("n_words"),
         sum(col("s")).as("n_subwords"), sum(col("c")).as("n_chars"))

@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.{Relational, Similarity}
+import graft.operators.{Relational, Similarity, TextAnalysis}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Physical-plan regression guards: the scale posture depends on specific
@@ -21,6 +21,18 @@ class PlanSpec extends AnyFunSuite {
     assert(!plan.contains("l_shipdate"), "untouched columns must be pruned from the scan")
     assert(plan.contains("WholeStageCodegen") || plan.contains("*(1)"),
       "projection should run inside whole-stage codegen")
+  }
+
+  test("q25/q26 text metrics: one compiled projection, no lambda or regex") {
+    Seq("q25" -> TextAnalysis.docMetrics _, "q26" -> TextAnalysis.langId _).foreach {
+      case (q, build) =>
+        val plan = planOf(build(spark, TestSpark.Sf0001))
+        assert(!plan.contains("lambdafunction") && !plan.contains("regexp_"),
+          s"$q: per-row lambda or regex left in the plan:\n$plan")
+        assert(plan.contains("text_stats"), s"$q: native text-stats node missing:\n$plan")
+        assert("""\*\(\d+\) Project""".r.findFirstIn(plan).isDefined,
+          s"$q: Project must run inside whole-stage codegen:\n$plan")
+    }
   }
 
   test("q03 join: all three dimension sides broadcast") {

@@ -8,6 +8,17 @@ class RelationalSpec extends AnyFunSuite {
   private val spark = TestSpark.spark
   import spark.implicits._
 
+  test("ensureLiExprHist: one name over two expressions builds two histograms") {
+    def hist(e: org.apache.spark.sql.Column) =
+      Relational.ensureLiExprHist(spark, TestSpark.Sf0001, "spec_same_name", e)
+        .orderBy("bucket").as[(Long, Long, Long, Long)].collect().toSeq
+    val qty = hist(floor(col("l_quantity")).cast("long"))
+    val part = hist(floor(col("l_partkey")).cast("long"))
+    assert(qty != part, "the second expression must not reuse the first's histogram")
+    assert(qty.map(_._3).max <= 50L && part.map(_._3).max > 50L,
+      s"bucket bounds must follow each expression's domain: $qty vs $part")
+  }
+
   test("A6: approx_count_distinct within tolerance of the exact count") {
     // the raw estimate, range-checked (the query itself only exposes the
     // boolean; this pins the underlying HLL++ accuracy)

@@ -189,6 +189,19 @@ class SimilaritySpec extends AnyFunSuite {
       "every union vector must sit in exactly one list partition")
   }
 
+  test("q94 bootstrap: nLists A, then B, then A leaves an A-list codebook for the third call") {
+    val (a, b) = (8, 4)
+    Seq(a, b, a).foreach { nLists =>
+      val r = Similarity.ivfIncrementalInvariant(spark, TestSpark.Sf0001, nLists = nLists).head()
+      assert(r.getAs[Long]("assign_mismatches") == 0L && r.getAs[Long]("probe_mismatches") == 0L,
+        s"nLists=$nLists: $r")
+    }
+    // the third call's memo hit vouches for the A build: its codebook must
+    // still hold A lists, not the B codebook the second call wrote
+    val (cbPath, _) = Similarity.ivfIncrementalPaths(spark, TestSpark.Sf0001, a)
+    assert(Similarity.loadCentroids(spark, cbPath).length == a)
+  }
+
   test("IVF partitions the corpus: every vector lands in exactly one list") {
     // k > corpus size forces every probed vector to surface, so a vector
     // assigned to 0 or 2 lists would show up as a missing/duplicate cand
