@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.operators._
+import graft.optimizer.JoinGraph
 import graft.pipeline.Preprocess
 import graft.multimodal.Multimodal
 import graft.streaming.EventWindows
@@ -704,8 +705,8 @@ object SparkEntry {
       Relational.rfmSegments(s, d)),
     // q154's estimator-audit discipline on the trained-float retrieval
     // routes: exact top-k re-derived by the oracle, the routed engine's
-    // per-query recall floor pinned TRUE (floors from RecallFloorProbe
-    // minima with one-neighbor margin)
+    // per-query recall floor pinned TRUE (floors from the measured
+    // minima in BENCH_NOTES.md, one-neighbor margin)
     "q198_ivf_recall_audit" -> ((s: SparkSession, d: String) =>
       Similarity.ivfRecallAudit(s, d)),
     "q199_pq_recall_audit" -> ((s: SparkSession, d: String) =>
@@ -1782,8 +1783,8 @@ object SparkEntry {
     * a CTE `st$sfx` providing nli, nord, ncust, npart, nsupp, d0..d3;
     * emits CTEs `e$sfx`/`c3$sfx`/`c4$sfx`/`c5$sfx` with the final
     * chosen plan/cost as `p_all`/`c_all`. Splits enumerate by cut-edge
-    * index with first-minimal ties — the engine's `selingerGraphDp`
-    * order verbatim. */
+    * index with first-minimal ties — the engine's C_out tree DP
+    * (`selingerPhysicalDp` at betaE2 = 0) order verbatim. */
   private def starDpChainSql(sfx: String): String =
     s"""e$sfx AS (
        |  SELECT *,
@@ -1870,27 +1871,10 @@ object SparkEntry {
     val edges = Seq((0, 1), (1, 2), (2, 3), (3, 4), (4, 0))
     val rowCols = Seq("nli", "nord", "ncust", "nnat", "nsupp")
     val names = Seq("lineitem", "orders", "customer", "nation", "supplier")
-    def inM(i: Int, m: Int): Boolean = (m & (1 << i)) != 0
-    def induced(m: Int): Seq[Int] = edges.indices.filter { e =>
-      inM(edges(e)._1, m) && inM(edges(e)._2, m)
-    }
-    def connected(m: Int): Boolean = {
-      if (m == 0) return false
-      val seed = java.lang.Integer.numberOfTrailingZeros(m)
-      var comp = 1 << seed
-      var frontier = List(seed)
-      while (frontier.nonEmpty) {
-        val v = frontier.head; frontier = frontier.tail
-        edges.foreach { case (a, b) =>
-          val next = if (a == v) b else if (b == v) a else -1
-          if (next >= 0 && inM(next, m) && !inM(next, comp)) {
-            comp |= 1 << next
-            frontier = next :: frontier
-          }
-        }
-      }
-      comp == m
-    }
+    // the graph topology only: divisors are emitted as SQL columns
+    val topo = JoinGraph(Seq.fill(n)(("", 1L)),
+      edges.map { case (a, b) => (a, b, 1L) })
+    import topo.{connected, induced, inMask => inM}
     def estExpr(m: Int): String = {
       // first factor promoted to HUGEINT: five warehouse-scale row
       // counts (and four divisors) overflow a BIGINT product — the
@@ -1994,9 +1978,10 @@ object SparkEntry {
        |$outRows) t, fin""".stripMargin
   }
 
-  /** q254's oracle, GENERATED by replaying the engine's
-    * `dpCcpExchange` symbolically over the Q5 cycle — the state DP
-    * with interesting partitionings. For every (connected subset,
+  /** q254's oracle, GENERATED by replaying the engine's exchange-aware
+    * DP (`dpCcpUnified` with broadcast off, minus its sentinel states)
+    * symbolically over the Q5 cycle — the state DP with interesting
+    * partitionings. For every (connected subset,
     * output partitioning) state the generator emits: per candidate
     * split (ascending S1, the dpCcp order) the reuse-vs-fresh side
     * CASE (reuse the child's same-partitioning state when its cost ≤
@@ -2013,27 +1998,10 @@ object SparkEntry {
     val classNames = Seq("orderkey", "custkey", "nationkey", "suppkey")
     val rowCols = Seq("nli", "nord", "ncust", "nnat", "nsupp")
     val names = Seq("lineitem", "orders", "customer", "nation", "supplier")
-    def inM(i: Int, m: Int): Boolean = (m & (1 << i)) != 0
-    def induced(m: Int): Seq[Int] = edges.indices.filter { e =>
-      inM(edges(e)._1, m) && inM(edges(e)._2, m)
-    }
-    def connected(m: Int): Boolean = {
-      if (m == 0) return false
-      val seed = java.lang.Integer.numberOfTrailingZeros(m)
-      var comp = 1 << seed
-      var frontier = List(seed)
-      while (frontier.nonEmpty) {
-        val v = frontier.head; frontier = frontier.tail
-        edges.foreach { case (a, b) =>
-          val next = if (a == v) b else if (b == v) a else -1
-          if (next >= 0 && inM(next, m) && !inM(next, comp)) {
-            comp |= 1 << next
-            frontier = next :: frontier
-          }
-        }
-      }
-      comp == m
-    }
+    // the graph topology only: divisors are emitted as SQL columns
+    val topo = JoinGraph(Seq.fill(n)(("", 1L)),
+      edges.map { case (a, b) => (a, b, 1L) })
+    import topo.{connected, induced, inMask => inM}
     def single(m: Int): Boolean = java.lang.Integer.bitCount(m) == 1
     def tz(m: Int): Int = java.lang.Integer.numberOfTrailingZeros(m)
     def estExpr(m: Int): String = {
@@ -2303,7 +2271,7 @@ object SparkEntry {
     * risk. */
   /** q258's oracle, GENERATED by replaying BOTH of the probe's
     * enumerations symbolically — the star's cut-edge DP
-    * (`selingerGraphDp` order: candidates by ascending cut edge,
+    * (`selingerPhysicalDp` order: candidates by ascending cut edge,
     * component with the smallest table index left) and the cycle's
     * csg-cmp DP (`dpCcp` order: ascending-S1 proper submasks) — with
     * TWO extra columns threaded through the same first-minimal CASE
@@ -2323,48 +2291,13 @@ object SparkEntry {
                   rowCols: Seq[String], edges: Seq[(Int, Int)],
                   divCols: Seq[String], classes: Seq[Int],
                   cutEdgeOrder: Boolean, prev0: String): String = {
-      def inM(i: Int, m: Int): Boolean = (m & (1 << i)) != 0
-      def induced(m: Int): Seq[Int] = edges.indices.filter { e =>
-        inM(edges(e)._1, m) && inM(edges(e)._2, m)
-      }
-      def connected(m: Int): Boolean = {
-        if (m == 0) return false
-        val seed = java.lang.Integer.numberOfTrailingZeros(m)
-        var comp = 1 << seed
-        var frontier = List(seed)
-        while (frontier.nonEmpty) {
-          val v = frontier.head; frontier = frontier.tail
-          edges.foreach { case (a, b) =>
-            val next = if (a == v) b else if (b == v) a else -1
-            if (next >= 0 && inM(next, m) && !inM(next, comp)) {
-              comp |= 1 << next
-              frontier = next :: frontier
-            }
-          }
-        }
-        comp == m
-      }
+      // the graph topology only: divisors are emitted as SQL columns
+      val topo = JoinGraph(Seq.fill(n)(("", 1L)),
+        edges.map { case (a, b) => (a, b, 1L) })
+      import topo.{connected, induced, inMask => inM}
       def single(m: Int): Boolean = java.lang.Integer.bitCount(m) == 1
       def tz(m: Int): Int = java.lang.Integer.numberOfTrailingZeros(m)
-      // component of `from` inside `mask` with edge `cut` removed
-      def component(from: Int, mask: Int, cut: Int): Int = {
-        var comp = 1 << from
-        var frontier = List(from)
-        while (frontier.nonEmpty) {
-          val v = frontier.head; frontier = frontier.tail
-          edges.indices.foreach { e =>
-            if (e != cut) {
-              val (a, b) = edges(e)
-              val next = if (a == v) b else if (b == v) a else -1
-              if (next >= 0 && inM(next, mask) && !inM(next, comp)) {
-                comp |= 1 << next
-                frontier = next :: frontier
-              }
-            }
-          }
-        }
-        comp
-      }
+      import topo.component
       val masks = (3 to (1 << n) - 1)
         .filter(m => java.lang.Integer.bitCount(m) >= 2 && connected(m))
       // candidate splits per mask, in the ENGINE's enumeration order
@@ -2559,27 +2492,10 @@ object SparkEntry {
       "supplier" -> Seq("s_suppkey", "s_nationkey"))
     val Sent = "1000000000000000"
     val Planted = "2500000000"
-    def inM(i: Int, m: Int): Boolean = (m & (1 << i)) != 0
-    def induced(m: Int): Seq[Int] = edges.indices.filter { e =>
-      inM(edges(e)._1, m) && inM(edges(e)._2, m)
-    }
-    def connected(m: Int): Boolean = {
-      if (m == 0) return false
-      val seed = java.lang.Integer.numberOfTrailingZeros(m)
-      var comp = 1 << seed
-      var frontier = List(seed)
-      while (frontier.nonEmpty) {
-        val v = frontier.head; frontier = frontier.tail
-        edges.foreach { case (a, b) =>
-          val next = if (a == v) b else if (b == v) a else -1
-          if (next >= 0 && inM(next, m) && !inM(next, comp)) {
-            comp |= 1 << next
-            frontier = next :: frontier
-          }
-        }
-      }
-      comp == m
-    }
+    // the graph topology only: divisors are emitted as SQL columns
+    val topo = JoinGraph(Seq.fill(n)(("", 1L)),
+      edges.map { case (a, b) => (a, b, 1L) })
+    import topo.{connected, induced, inMask => inM}
     def single(m: Int): Boolean = java.lang.Integer.bitCount(m) == 1
     def tz(m: Int): Int = java.lang.Integer.numberOfTrailingZeros(m)
     // per-suffix pred variant (narrow/wide fact) and width arm
@@ -3041,27 +2957,10 @@ object SparkEntry {
       "supplier" -> Seq("s_suppkey", "s_nationkey"))
     val Sent = "1000000000000000"
     val Planted = "2500000000"
-    def inM(i: Int, m: Int): Boolean = (m & (1 << i)) != 0
-    def induced(m: Int): Seq[Int] = edges.indices.filter { e =>
-      inM(edges(e)._1, m) && inM(edges(e)._2, m)
-    }
-    def connected(m: Int): Boolean = {
-      if (m == 0) return false
-      val seed = java.lang.Integer.numberOfTrailingZeros(m)
-      var comp = 1 << seed
-      var frontier = List(seed)
-      while (frontier.nonEmpty) {
-        val v = frontier.head; frontier = frontier.tail
-        edges.foreach { case (a, b) =>
-          val next = if (a == v) b else if (b == v) a else -1
-          if (next >= 0 && inM(next, m) && !inM(next, comp)) {
-            comp |= 1 << next
-            frontier = next :: frontier
-          }
-        }
-      }
-      comp == m
-    }
+    // the graph topology only: divisors are emitted as SQL columns
+    val topo = JoinGraph(Seq.fill(n)(("", 1L)),
+      edges.map { case (a, b) => (a, b, 1L) })
+    import topo.{connected, induced, inMask => inM}
     def single(m: Int): Boolean = java.lang.Integer.bitCount(m) == 1
     def tz(m: Int): Int = java.lang.Integer.numberOfTrailingZeros(m)
     def estExpr(m: Int): String = {
@@ -3454,27 +3353,10 @@ object SparkEntry {
     val names = Seq("lineitem", "orders", "customer", "nation", "supplier")
     val restCols = Seq("nord", "ncust", "nnat", "nsupp")
     val Sent = "1000000000000000"
-    def inM(i: Int, m: Int): Boolean = (m & (1 << i)) != 0
-    def induced(m: Int): Seq[Int] = edges.indices.filter { e =>
-      inM(edges(e)._1, m) && inM(edges(e)._2, m)
-    }
-    def connected(m: Int): Boolean = {
-      if (m == 0) return false
-      val seed = java.lang.Integer.numberOfTrailingZeros(m)
-      var comp = 1 << seed
-      var frontier = List(seed)
-      while (frontier.nonEmpty) {
-        val v = frontier.head; frontier = frontier.tail
-        edges.foreach { case (a, b) =>
-          val next = if (a == v) b else if (b == v) a else -1
-          if (next >= 0 && inM(next, m) && !inM(next, comp)) {
-            comp |= 1 << next
-            frontier = next :: frontier
-          }
-        }
-      }
-      comp == m
-    }
+    // the graph topology only: divisors are emitted as SQL columns
+    val topo = JoinGraph(Seq.fill(n)(("", 1L)),
+      edges.map { case (a, b) => (a, b, 1L) })
+    import topo.{connected, induced, inMask => inM}
     def single(m: Int): Boolean = java.lang.Integer.bitCount(m) == 1
     def tz(m: Int): Int = java.lang.Integer.numberOfTrailingZeros(m)
     def rowCol(i: Int, sfx: String): String =
@@ -3913,27 +3795,10 @@ object SparkEntry {
     val rowCols = Seq("nli", "nord", "ncust", "nnat", "nsupp")
     val names = Seq("lineitem", "orders", "customer", "nation", "supplier")
     val Sent = "1000000000000000"
-    def inM(i: Int, m: Int): Boolean = (m & (1 << i)) != 0
-    def induced(m: Int): Seq[Int] = edges.indices.filter { e =>
-      inM(edges(e)._1, m) && inM(edges(e)._2, m)
-    }
-    def connected(m: Int): Boolean = {
-      if (m == 0) return false
-      val seed = java.lang.Integer.numberOfTrailingZeros(m)
-      var comp = 1 << seed
-      var frontier = List(seed)
-      while (frontier.nonEmpty) {
-        val v = frontier.head; frontier = frontier.tail
-        edges.foreach { case (a, b) =>
-          val next = if (a == v) b else if (b == v) a else -1
-          if (next >= 0 && inM(next, m) && !inM(next, comp)) {
-            comp |= 1 << next
-            frontier = next :: frontier
-          }
-        }
-      }
-      comp == m
-    }
+    // the graph topology only: divisors are emitted as SQL columns
+    val topo = JoinGraph(Seq.fill(n)(("", 1L)),
+      edges.map { case (a, b) => (a, b, 1L) })
+    import topo.{connected, induced, inMask => inM}
     def single(m: Int): Boolean = java.lang.Integer.bitCount(m) == 1
     def tz(m: Int): Int = java.lang.Integer.numberOfTrailingZeros(m)
     def estExpr(m: Int): String = {
@@ -4246,31 +4111,13 @@ object SparkEntry {
     val edges = Seq((0, 1), (1, 2), (0, 3), (0, 4))
     val rowCols = Seq("nli", "nord", "ncust", "npart", "nsupp")
     val names = Seq("lineitem", "orders", "customer", "part", "supplier")
-    def inM(i: Int, m: Int): Boolean = (m & (1 << i)) != 0
-    def induced(m: Int): Seq[Int] = edges.indices.filter { e =>
-      inM(edges(e)._1, m) && inM(edges(e)._2, m)
-    }
-    // star graph is a tree: connected ⇔ induced edge count = |S| − 1
+    // the graph topology only: divisors are emitted as SQL columns
+    val topo = JoinGraph(Seq.fill(n)(("", 1L)),
+      edges.map { case (a, b) => (a, b, 1L) })
+    import topo.{component, induced, inMask => inM}
+    // composite connected subsets only
     def connected(m: Int): Boolean =
-      java.lang.Integer.bitCount(m) >= 2 &&
-        induced(m).length == java.lang.Integer.bitCount(m) - 1
-    def component(from: Int, m: Int, cut: Int): Int = {
-      var comp = 1 << from
-      var frontier = List(from)
-      while (frontier.nonEmpty) {
-        val v = frontier.head; frontier = frontier.tail
-        edges.indices.foreach { e =>
-          if (e != cut) {
-            val (a, b) = edges(e)
-            val next = if (a == v) b else if (b == v) a else -1
-            if (next >= 0 && inM(next, m) && !inM(next, comp)) {
-              comp |= 1 << next; frontier = next :: frontier
-            }
-          }
-        }
-      }
-      comp
-    }
+      java.lang.Integer.bitCount(m) >= 2 && topo.connected(m)
     def tz(m: Int): Int = java.lang.Integer.numberOfTrailingZeros(m)
     def single(m: Int): Boolean = java.lang.Integer.bitCount(m) == 1
     def estRef(m: Int): String = if (single(m)) rowCols(tz(m)) else s"e_$m"
@@ -4683,7 +4530,7 @@ object SparkEntry {
     // the q154 discipline on the trained-float routes: exact neighbor
     // sets re-derived from the q21 chain, the routed engine's per-query
     // recall floor pinned TRUE (floors = measured fixture minima − 1
-    // neighbor; RecallFloorProbe, all three sf scales)
+    // neighbor; BENCH_NOTES.md, all three sf scales)
     "q198_ivf_recall_audit" -> recallAuditSql,
     "q199_pq_recall_audit" -> recallAuditSql,
     "q200_lsh_recall_audit" -> recallAuditSql,

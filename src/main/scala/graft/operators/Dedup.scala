@@ -841,7 +841,7 @@ object Dedup {
     * exact kernel.
     *
     * Band width is where this route lives or dies, and the round-12
-    * crossover measurement (RouteCrossover, BENCH_NOTES) rewrote it: the
+    * crossover measurement (BENCH_NOTES.md) rewrote it: the
     * original 16×4-bit default had per-band random collision 2⁻⁴, so
     * expected candidate mass was 16·(n²/2)/16 = n²/2 — NO pruning, and
     * measured wall 295 s vs 72.5 s for plain exact broadcast at n = 40k.
@@ -883,10 +883,11 @@ object Dedup {
     // A pair colliding in k bands appears k times in the band join; the
     // round-12 form deduplicated with a pair-grain `distinct()`, whose
     // hash-agg sort-spill was the measured 160k memory/disk wall
-    // (RouteCrossover round 13: SPILL_OUT_OF_MEMORY) — the candidate
-    // relation is the n²/64 mass and must never be SHUFFLED whole. The
-    // standard LSH fix makes dedup a PER-ROW filter instead: both sides
-    // carry their 8-byte signature, and a candidate is emitted only from
+    // (round-13 crossover run: SPILL_OUT_OF_MEMORY, BENCH_NOTES.md) —
+    // the candidate relation is the n²/64 mass and must never be
+    // SHUFFLED whole. The standard LSH fix makes dedup a PER-ROW
+    // filter instead: both sides carry their 8-byte signature, and a
+    // candidate is emitted only from
     // the lowest band the two signatures agree on (for every b' < band_id
     // the bands must differ) — exactly one emission per colliding pair,
     // zero pair-grain state. The verification joins are hinted
@@ -1037,9 +1038,9 @@ object Dedup {
     * The routing count is one metadata-cheap action against the scan,
     * memoized per (session, dir).
     *
-    * maxExactRows = 50k is MEASURED, not guessed (round-12 RouteCrossover,
-    * BENCH_NOTES): the exact broadcast kernel walls 3.4 / 9.5 / 34.8 s at
-    * n = 10k / 20k / 40k on local[32] (clean quadratic, ≈ 22 s per
+    * maxExactRows = 50k is MEASURED, not guessed (round-12 crossover
+    * measurement, BENCH_NOTES.md): the exact broadcast kernel walls
+    * 3.4 / 9.5 / 34.8 s at n = 10k / 20k / 40k on local[32] (clean quadratic, ≈ 22 s per
     * (10 k)² beyond JVM floor), putting the 50k boundary at ≈ 55 s —
     * the single-JVM minute-class budget (the knnEdgesRouted cap
     * discipline; its 10k cap guards a heavier |V|²·d re-scoring pass,
@@ -1330,38 +1331,27 @@ object Dedup {
     val dec = org.apache.spark.sql.types.DecimalType(38, 18)
     val pairs = ensureJaccardPairs(spark, dir, ts.min).persist()
     try {
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.duration.Duration
-      val pool = java.util.concurrent.Executors
-        .newFixedThreadPool(math.min(ts.length, 5))
-      implicit val ec: scala.concurrent.ExecutionContext =
-        scala.concurrent.ExecutionContext.fromExecutorService(pool)
-      try {
-        val legs = ts.sorted.map { t =>
-          Future {
-            val pt = pairs.filter(col("jaccard") >= t)
-            val touched = pt.select(col("doc_a").as("id"))
-              .unionByName(pt.select(col("doc_b").as("id"))).distinct()
-            val cc = connectedComponents(touched,
-              pt.select(col("doc_a").as("src"), col("doc_b").as("dst")))
-            val stats = pt.agg(
-              count(lit(1)).as("n_pairs"),
-              round(avg(col("jaccard")).cast(dec), 6).cast("double")
-                .as("mean_jaccard"))
-            val clusters = cc.agg(
-              count(lit(1)).as("n_docs_in_pairs"),
-              countDistinct(col("lbl")).as("n_clusters"))
-            stats.crossJoin(clusters)
-              .select(lit(t).as("threshold"), col("n_pairs"),
-                col("n_docs_in_pairs"), col("n_clusters"),
-                (col("n_docs_in_pairs") - col("n_clusters"))
-                  .as("n_docs_dropped"),
-                col("mean_jaccard"))
-              .localCheckpoint(true) // 1 row — materialized in the leg
-          }
-        }
-        legs.map(Await.result(_, Duration.Inf)).reduce(_.unionByName(_))
-      } finally { pool.shutdown(); () }
+      graft.DriverLegs.map(spark, ts.sorted) { t =>
+        val pt = pairs.filter(col("jaccard") >= t)
+        val touched = pt.select(col("doc_a").as("id"))
+          .unionByName(pt.select(col("doc_b").as("id"))).distinct()
+        val cc = connectedComponents(touched,
+          pt.select(col("doc_a").as("src"), col("doc_b").as("dst")))
+        val stats = pt.agg(
+          count(lit(1)).as("n_pairs"),
+          round(avg(col("jaccard")).cast(dec), 6).cast("double")
+            .as("mean_jaccard"))
+        val clusters = cc.agg(
+          count(lit(1)).as("n_docs_in_pairs"),
+          countDistinct(col("lbl")).as("n_clusters"))
+        stats.crossJoin(clusters)
+          .select(lit(t).as("threshold"), col("n_pairs"),
+            col("n_docs_in_pairs"), col("n_clusters"),
+            (col("n_docs_in_pairs") - col("n_clusters"))
+              .as("n_docs_dropped"),
+            col("mean_jaccard"))
+          .localCheckpoint(true) // 1 row — materialized in the leg
+      }.reduce(_.unionByName(_))
     } finally { pairs.unpersist(); () }
   }
 
@@ -2066,7 +2056,7 @@ object Dedup {
     * (64 fair coin flips), so a 16-bit band sits 4σ below noise — a
     * violation means the vote kernel is broken, not an unlucky pair —
     * while measured fixture margins (max disagreement 12 bits across
-    * sf0.001/0.01/0.1 for J ≥ 0.5 pairs, AuditProbe) keep real pairs
+    * sf0.001/0.01/0.1 for J ≥ 0.5 pairs, BENCH_NOTES.md) keep real pairs
     * clear of it. Deterministic hashes → a green row is stable. What
     * this row does NOT claim: detection at the q19 production radius
     * (hamming ≤ 3 recalls only ~75% of J ≥ 0.9 pairs on this fixture —
@@ -2126,7 +2116,7 @@ object Dedup {
     * ≥ k+2w−1 = 31-char run or two separate runs), and J ≥ 0.5 over
     * 3-token shingles implies far more shared-run mass than that —
     * measured fixture margin: min shared-fp count 5 across
-    * sf0.001/0.01/0.1 (AuditProbe) vs the pinned 2. Deterministic
+    * sf0.001/0.01/0.1 (BENCH_NOTES.md) vs the pinned 2. Deterministic
     * rolling hashes → green rows are stable. The fp-JACCARD score's
     * correlation with shingle Jaccard stays spec-measured (q63's
     * declared gate); this row pins the candidate-recall half of the

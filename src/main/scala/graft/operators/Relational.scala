@@ -1,6 +1,8 @@
 package graft.operators
 
-import graft.Tables
+import graft.{DriverLegs, Tables}
+import graft.optimizer.{JoinGraph, JoinTree}
+import graft.optimizer.JoinEnumeration._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -1305,21 +1307,6 @@ object Relational {
     (r.getLong(0), r.getLong(1))
   }
 
-  /** Run independent per-predicate audit legs on concurrent driver
-    * threads (the q181 sweep discipline, guide §2.6): each leg executes
-    * its own joins and aggregates, so one leg's stage tails back-fill
-    * the other's idle cores. Legs must not mutate session conf. */
-  private def parFlatMap[A, B](xs: Seq[A])(f: A => Seq[B]): Seq[B] = {
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    val pool = java.util.concurrent.Executors
-      .newFixedThreadPool(math.max(1, xs.length))
-    implicit val ec: scala.concurrent.ExecutionContext =
-      scala.concurrent.ExecutionContext.fromExecutorService(pool)
-    try xs.map(x => Future(f(x))).map(Await.result(_, Duration.Inf)).flatten
-    finally { pool.shutdown(); () }
-  }
-
   /** Uniform-within-bucket range estimate of each predicate in `preds`
     * (pred_id, p_lo, p_hi) against a histogram, in millionths of a row —
     * div-first fixed point, every intermediate under 2^63 at any SF.
@@ -1586,9 +1573,10 @@ object Relational {
     * suppresses the split does not hold on this shape — the groupBy key
     * (`grp`) differs from the join key, so the aggregate needs its own
     * Exchange regardless and the split introduces no extra shuffle;
-    * `SkewFoldProbe` measured `skew=true` in the aggregate query's own
-    * final adaptive plan at sf0.001/0.01/0.1 (force still required at
-    * sf0.001, whose shuffle blocks sit under the thresholds otherwise).
+    * a measurement (BENCH_NOTES.md) found `skew=true` in the aggregate
+    * query's own final adaptive plan at sf0.001/0.01/0.1 (force still
+    * required at sf0.001, whose shuffle blocks sit under the thresholds
+    * otherwise).
     * The marker is therefore read from the answer pass itself and the
     * instrumented pure-join pre-pass is gone — the one registry query
     * that executed its join twice now executes it once. */
@@ -1624,7 +1612,7 @@ object Relational {
         .withColumn("grp", pmod(col("k"), lit(7L)))
       // ONE execution: the answer pass's own final adaptive plan carries
       // the marker (see the scaladoc — the split survives the grouping
-      // stage because grp is not the join key, SkewFoldProbe-measured)
+      // stage because grp is not the join key, measured: BENCH_NOTES.md)
       val agg = fact.join(dim, Seq("k"))
         .groupBy(col("grp"))
         .agg(count(lit(1)).as("n_rows"), sum(col("l_quantity")).as("sum_qty"))
@@ -2304,11 +2292,11 @@ object Relational {
       import spark.implicits._
       // both arms execute inside ONE static conf scope and share no
       // state — concurrent driver threads (guide §2.6, the q253 form)
-      parFlatMap(Seq(("lineitem_orders_first", estLiOrd, actLiOrd),
+      DriverLegs.map(spark, Seq(("lineitem_orders_first", estLiOrd, actLiOrd),
           ("orders_customer_first", estOrdCust, actOrdCust))) {
         case (order, est, act) =>
           val (inner, outer, n, sq, sc) = run(order)
-          Seq((order, order == chosen, est, act, inner, outer, n, sq, sc))
+          (order, order == chosen, est, act, inner, outer, n, sq, sc)
       }.toDF("order_label", "chosen", "est_intermediate",
         "actual_intermediate", "inner_join", "outer_join",
         "n_rows", "sum_qty", "sum_cust")
@@ -2536,7 +2524,7 @@ object Relational {
         .agg(count(lit(1)).as("cb")), "k")
       .agg(coalesce(sum(col("ca") * col("cb")), lit(0L))).head().getLong(0)
     import spark.implicits._
-    val out = parFlatMap(predDefs) { case (label, pLo, pHi) =>
+    val out = DriverLegs.map(spark, predDefs) { case (label, pLo, pHi) =>
       val pred = spark.range(1).select(lit(0L).as("pred_id"),
         lit(pLo).as("p_lo"), lit(pHi).as("p_hi"))
       val estE6 = estimateRanges(pred, hist, "est_e6")
@@ -2554,13 +2542,7 @@ object Relational {
         .join(ord.groupBy(col("o_orderkey").cast("long").as("k"))
           .agg(count(lit(1)).as("cb")), "k")
         .agg(coalesce(sum(col("ca") * col("cb")), lit(0L))).head().getLong(0)
-      def agg(full: DataFrame): (Long, Long, Long) = {
-        val r = full.agg(count(lit(1)), sum(col("l_quantity").cast("long")),
-          sum(col("c_custkey").cast("long"))).head()
-        (r.getLong(0),
-          if (r.isNullAt(1)) 0L else r.getLong(1),
-          if (r.isNullAt(2)) 0L else r.getLong(2))
-      }
+      def agg(full: DataFrame) = answerAgg(full, "c_custkey")
       val onLi = col("l_orderkey") === col("o_orderkey")
       val onCust = col("o_custkey") === col("c_custkey")
       // the CHOSEN order runs full-size (the production plan; its
@@ -2588,7 +2570,7 @@ object Relational {
         (label, pLo, pHi, estE6, "orders_customer_first",
           chosen == "orders_customer_first", estOrdCust, actOrdCust,
           aggA._1, aggA._2, aggA._3, identical))
-    }
+    }.flatten
     out.toDF("pred_label", "p_lo", "p_hi", "est_filtered_e6",
       "order_label", "chosen", "est_intermediate", "actual_intermediate",
       "n_rows", "sum_qty", "sum_cust", "orders_identical")
@@ -2667,7 +2649,7 @@ object Relational {
       ("wide", lo, lo + 4L * d / 5L - 1L))
     val estOrdCust = estimateJoinRows(nOrd, ndvOc, nCust, ndvCc)
     import spark.implicits._
-    val out = parFlatMap(predDefs) { case (label, pLo, pHi) =>
+    val out = DriverLegs.map(spark, predDefs) { case (label, pLo, pHi) =>
       val pred = spark.range(1).select(lit(0L).as("pred_id"),
         lit(pLo).as("p_lo"), lit(pHi).as("p_hi"))
       def estOf(hist: DataFrame): Long =
@@ -2697,67 +2679,136 @@ object Relational {
         if (chosenUsed == "lineitem_orders_first")
           liF.join(ord, onLi).join(cust, onCust)
         else liF.join(ord.join(cust, onCust), onLi)
-      val r = full.agg(count(lit(1)), sum(col("l_quantity").cast("long")),
-        sum(col("c_custkey").cast("long"))).head()
-      val (n, sq, sc) = (r.getLong(0),
-        if (r.isNullAt(1)) 0L else r.getLong(1),
-        if (r.isNullAt(2)) 0L else r.getLong(2))
+      val (n, sq, sc) = answerAgg(full, "c_custkey")
       Seq(
         (label, pLo, pHi, "exact", estE, err(estE), estLiE, chosenE,
           robust, route, agrees, n, sq, sc),
         (label, pLo, pHi, "sampled", estS, err(estS), estLiS, chosenS,
           robust, route, agrees, n, sq, sc))
-    }
+    }.flatten
     out.toDF("pred_label", "p_lo", "p_hi", "route", "est_filtered_e6",
       "err_ppm", "est_intermediate", "chosen_order", "margin_robust",
       "route_used", "choice_agrees", "n_rows", "sum_qty", "sum_cust")
   }
 
-  /** One dynamic-programming cell of the Selinger chain enumeration:
-    * estimated cardinality of the interval's join, the C_out cost of its
-    * best tree (Σ of estimated intermediate sizes over the tree —
-    * Selinger et al., "Access Path Selection in a Relational DBMS",
-    * SIGMOD 1979; the cost model every textbook enumerator starts from),
-    * the winning split point (−1 for leaves), and the parenthesized best
-    * plan. */
-  private[graft] case class DpCell(est: Long, cost: Long, split: Int,
-                                   plan: String)
+  /** The stats-backed fixture the join-enumeration audits share: the
+    * ANALYZE-store star (lineitem ⋈ orders ⋈ customer + part + supplier;
+    * orders chains on to customer, making it a snowflake arm) and the
+    * TPC-H Q5 cycle (lineitem–orders–customer–nation–supplier–lineitem;
+    * the local-supplier constraint c_nationkey = s_nationkey expressed
+    * through the shared nation edge closes it) as [[JoinGraph]]s. Every
+    * row count and join-key ndv comes from the persisted store (the q224
+    * discipline, no live recount); each edge divides by the larger of its
+    * two keys' ndv (q208). Conditions are one per edge, index-aligned;
+    * table DataFrames open on first use, so a metadata-only audit reads
+    * nothing but the store. */
+  private[graft] final class EnumFixture(spark: SparkSession, dir: String) {
+    private val statRows = ensureTableStats(spark, dir)
+      .select(col("table_name"), col("column_name"), col("n_rows"),
+        col("ndv"), col("avg_width")).collect()
+    val stats: Map[(String, String), (Long, Long)] = statRows
+      .map(r => (r.getString(0), r.getString(1)) -> (r.getLong(2), r.getLong(3)))
+      .toMap
+    private def rowsOf(t: String, c: String): Long = stats((t, c))._1
+    private def div(a: (String, String), b: (String, String)): Long =
+      math.max(stats(a)._2, stats(b)._2)
+    /** Row width per table in millionths of a byte: Σ over its audited
+      * columns of round(avg_width × 10⁶), rounded per column BEFORE the
+      * integer sum, so oracle parity never rides a double sum. */
+    lazy val widthE6: Map[String, Long] = statRows
+      .groupBy(_.getString(0))
+      .map { case (t, rs) =>
+        t -> rs.map(r => math.round(r.getDouble(4) * 1000000.0)).sum
+      }
 
-  /** Selinger DP over a JOIN CHAIN: tables t0 ⋈ t1 ⋈ … ⋈ t(n−1) where
-    * edges exist only between neighbors, so the connected subsets are
-    * exactly the intervals [i, j] and the DP is O(n³) over O(n²) cells —
-    * the smallest real instance of the enumeration a production CBO runs
-    * over arbitrary join graphs. est([i,j]) = Π rows / Π edge divisors
-    * (the q208 formula chained under independence), computed in BigInt
-    * and divided ONCE (staged integer division truncates differently —
-    * the oracle divides full products, so must we). Ties break to the
-    * FIRST minimal split (smallest split index) — the deterministic
-    * order the oracle's CASE chain reproduces. Exposed for the
-    * planted-stats flip spec. */
-  private[graft] def selingerChainDp(rows: Seq[(String, Long)],
-                                     edgeDivisors: Seq[Long])
-      : Map[(Int, Int), DpCell] = {
-    val n = rows.length
-    require(n >= 2 && edgeDivisors.length == n - 1,
-      s"need a chain: ${rows.length} tables, ${edgeDivisors.length} edges")
-    require(edgeDivisors.forall(_ > 0), s"need positive divisors")
-    val memo = scala.collection.mutable.Map.empty[(Int, Int), DpCell]
-    def est(i: Int, j: Int): Long =
-      ((i to j).map(k => BigInt(rows(k)._2)).product /
-        (i until j).map(k => BigInt(edgeDivisors(k))).product).toLong
-    for (i <- 0 until n)
-      memo((i, i)) = DpCell(rows(i)._2, 0L, -1, rows(i)._1)
-    for (len <- 2 to n; i <- 0 to n - len) {
-      val j = i + len - 1
-      val e = est(i, j)
-      val (cost, split, plan) = (i until j).map { s =>
-        val (l, r) = (memo((i, s)), memo((s + 1, j)))
-        (l.cost + r.cost, s, s"(${l.plan}*${r.plan})")
-      }.minBy(_._1) // minBy keeps the FIRST minimum — the tie-break
-      memo((i, j)) = DpCell(e, cost + e, split, plan)
-    }
-    memo.toMap
+    val star: JoinGraph = JoinGraph(
+      Seq(("lineitem", rowsOf("lineitem", "l_orderkey")),
+        ("orders", rowsOf("orders", "o_orderkey")),
+        ("customer", rowsOf("customer", "c_custkey")),
+        ("part", rowsOf("part", "p_partkey")),
+        ("supplier", rowsOf("supplier", "s_suppkey"))),
+      Seq((0, 1, div(("lineitem", "l_orderkey"), ("orders", "o_orderkey"))),
+        (1, 2, div(("orders", "o_custkey"), ("customer", "c_custkey"))),
+        (0, 3, div(("lineitem", "l_partkey"), ("part", "p_partkey"))),
+        (0, 4, div(("lineitem", "l_suppkey"), ("supplier", "s_suppkey")))))
+    val starConds: Seq[Column] = Seq(
+      col("l_orderkey") === col("o_orderkey"),
+      col("o_custkey") === col("c_custkey"),
+      col("l_partkey") === col("p_partkey"),
+      col("l_suppkey") === col("s_suppkey"))
+    /** Every star edge joins its own key class. */
+    val starClasses: Seq[Int] = star.edges.indices
+
+    val cycle: JoinGraph = JoinGraph(
+      Seq(("lineitem", rowsOf("lineitem", "l_orderkey")),
+        ("orders", rowsOf("orders", "o_orderkey")),
+        ("customer", rowsOf("customer", "c_custkey")),
+        ("nation", rowsOf("nation", "n_nationkey")),
+        ("supplier", rowsOf("supplier", "s_suppkey"))),
+      Seq((0, 1, div(("lineitem", "l_orderkey"), ("orders", "o_orderkey"))),
+        (1, 2, div(("orders", "o_custkey"), ("customer", "c_custkey"))),
+        (2, 3, div(("customer", "c_nationkey"), ("nation", "n_nationkey"))),
+        (3, 4, div(("nation", "n_nationkey"), ("supplier", "s_nationkey"))),
+        (4, 0, div(("supplier", "s_suppkey"), ("lineitem", "l_suppkey")))))
+    val cycleConds: Seq[Column] = Seq(
+      col("l_orderkey") === col("o_orderkey"),
+      col("o_custkey") === col("c_custkey"),
+      col("c_nationkey") === col("n_nationkey"),
+      col("n_nationkey") === col("s_nationkey"),
+      col("s_suppkey") === col("l_suppkey"))
+
+    lazy val starDfs: Seq[DataFrame] =
+      star.tables.map(t => Tables.table(spark, dir, t._1))
+    lazy val cycleDfs: Seq[DataFrame] =
+      cycle.tables.map(t => Tables.table(spark, dir, t._1))
+    def runStar(t: JoinTree, dfs: Seq[DataFrame] = starDfs): DataFrame =
+      executeTree(t, dfs, starConds)
+    def runCycle(t: JoinTree, dfs: Seq[DataFrame] = cycleDfs): DataFrame =
+      executeTree(t, dfs, cycleConds)
   }
+
+  /** Builds a join tree over `dfs`: each join applies ALL its edges'
+    * conditions (a cyclic graph's split can cross two) and its hint —
+    * broadcast() on the shipped side, merge on both sides of a hinted
+    * shuffle — so an annotated tree runs the operators its DP cells
+    * priced. */
+  private[graft] def executeTree(t: JoinTree, dfs: Seq[DataFrame],
+                                 conds: Seq[Column]): DataFrame = t match {
+    case JoinTree.Scan(i) => dfs(i)
+    case JoinTree.Join(l, r, es, hint) =>
+      val (ld, rd) = (executeTree(l, dfs, conds), executeTree(r, dfs, conds))
+      val (lh, rh) = hint match {
+        case JoinTree.BroadcastLeft => (broadcast(ld), rd)
+        case JoinTree.BroadcastRight => (ld, broadcast(rd))
+        case JoinTree.Merge => (ld.hint("merge"), rd.hint("merge"))
+        case JoinTree.NoHint => (ld, rd)
+      }
+      lh.join(rh, es.map(conds).reduce(_ && _))
+  }
+
+  /** An audit's executed answer: (rows, Σ l_quantity, Σ `third`), each
+    * sum null-guarded — an empty join sums to NULL, not 0. */
+  private[graft] def answerAgg(full: DataFrame, third: String): (Long, Long, Long) = {
+    val r = full.agg(count(lit(1)), sum(col("l_quantity").cast("long")),
+      sum(col(third).cast("long"))).head()
+    (r.getLong(0),
+      if (r.isNullAt(1)) 0L else r.getLong(1),
+      if (r.isNullAt(2)) 0L else r.getLong(2))
+  }
+
+  /** The deterministic 1/8 key partition (keys ≡ 1 mod 8) the audits'
+    * identity arms run on (the q235 sampled-arm discipline): arithmetic,
+    * so every sampled number stays oracle-re-derivable, and closed under
+    * an equi-join on the key. */
+  private[graft] def keySample8(df: DataFrame, key: String): DataFrame =
+    df.filter(pmod(col(key).cast("long"), lit(8L)) === 1L)
+
+  /** Star or cycle inputs on the 1/8 partition of l_orderkey AND
+    * o_orderkey (tables 0 and 1 of both graphs — closed under the fact
+    * edge; the dims ride whole). */
+  private[graft] def sample8(dfs: Seq[DataFrame]): Seq[DataFrame] =
+    keySample8(dfs(0), "l_orderkey") +: keySample8(dfs(1), "o_orderkey") +:
+      dfs.drop(2)
 
   /** J20 [EXT] — SELINGER JOIN ENUMERATION FROM PERSISTED STATS (q230):
     * q226 chooses between the two associations of a 3-table join; this
@@ -2765,13 +2816,16 @@ object Relational {
     * optimizer runs over every join it plans — on the 4-table chain
     * lineitem⋈orders⋈customer⋈nation, with every input read from the
     * persisted ANALYZE store (row counts + the six join-key ndv — the
-    * q224/q226 discipline, no live recount). Output: the ENTIRE DP
-    * table, one row per connected subset (interval) — estimated join
+    * q224/q226 discipline, no live recount). The chain is the Q5
+    * cycle's first four tables and three edges, enumerated by the C_out
+    * tree DP ([[graft.optimizer.JoinEnumeration.selingerPhysicalDp]] at
+    * betaE2 = 0): on a path the connected subsets are the intervals and the
+    * cut edge is the split point, first-minimal splits on ties. Output: the
+    * ENTIRE DP table, one row per connected subset (interval) — estimated join
     * cardinality, best C_out cost, the winning parenthesized tree — plus
-    * the executed proof columns: the engine BUILDS the chosen tree (a
-    * recursive join construction from the DP's split points), executes
-    * it AND the canonical left-deep tree, and every row carries the
-    * 4-table aggregate both trees returned (identical or the row set
+    * the executed proof columns: the engine BUILDS the chosen tree,
+    * executes it AND the canonical left-deep tree, and every row carries
+    * the 4-table aggregate both trees returned (identical or the row set
     * can't hash-match). The oracle re-derives the whole table: estimates
     * as single-division integer products, costs/plans through the same
     * first-minimal-split CASE chain, the aggregate from the raw join —
@@ -2787,179 +2841,40 @@ object Relational {
     * tables; hint-free — q226 owns the operator-shape proof, this row
     * owns the TREE). */
   def cboJoinEnumerationAudit(spark: SparkSession, dir: String): DataFrame = {
-    val stats = ensureTableStats(spark, dir)
-      .select(col("table_name"), col("column_name"), col("n_rows"),
-        col("ndv")).collect()
-      .map(r => (r.getString(0), r.getString(1)) -> (r.getLong(2), r.getLong(3)))
-      .toMap
-    def rowsOf(t: String, c: String): Long = stats((t, c))._1
-    def ndvOf(t: String, c: String): Long = stats((t, c))._2
-    val chain = Seq(
-      ("lineitem", rowsOf("lineitem", "l_orderkey")),
-      ("orders", rowsOf("orders", "o_orderkey")),
-      ("customer", rowsOf("customer", "c_custkey")),
-      ("nation", rowsOf("nation", "n_nationkey")))
-    val divisors = Seq(
-      math.max(ndvOf("lineitem", "l_orderkey"), ndvOf("orders", "o_orderkey")),
-      math.max(ndvOf("orders", "o_custkey"), ndvOf("customer", "c_custkey")),
-      math.max(ndvOf("customer", "c_nationkey"), ndvOf("nation", "n_nationkey")))
-    val dp = selingerChainDp(chain, divisors)
-    // build and run the chosen tree + the canonical left-deep reference
-    val dfs = Seq(Tables.lineitem(spark, dir), Tables.orders(spark, dir),
-      Tables.customer(spark, dir), Tables.nation(spark, dir))
-    val edgeCond = Seq(
-      col("l_orderkey") === col("o_orderkey"),
-      col("o_custkey") === col("c_custkey"),
-      col("c_nationkey") === col("n_nationkey"))
-    def build(i: Int, j: Int): DataFrame =
-      if (i == j) dfs(i)
-      else {
-        val s = dp((i, j)).split
-        build(i, s).join(build(s + 1, j), edgeCond(s))
-      }
-    def agg(full: DataFrame): (Long, Long, Long) = {
-      val r = full.agg(count(lit(1)), sum(col("l_quantity").cast("long")),
-        sum(col("n_nationkey").cast("long"))).head()
-      // null-guarded: an empty chain join sums to NULL, not 0
-      (r.getLong(0),
-        if (r.isNullAt(1)) 0L else r.getLong(1),
-        if (r.isNullAt(2)) 0L else r.getLong(2))
-    }
-    val chosen = agg(build(0, chain.length - 1))
-    val leftDeep = agg((1 until dfs.length).foldLeft(dfs.head) {
-      (acc, k) => acc.join(dfs(k), edgeCond(k - 1))
-    })
+    val fx = new EnumFixture(spark, dir)
+    val chain = JoinGraph(fx.cycle.tables.take(4), fx.cycle.edges.take(3))
+    val dp = selingerPhysicalDp(chain, betaE2 = 0L)
+    def run(t: JoinTree): (Long, Long, Long) = answerAgg(
+      executeTree(t, fx.cycleDfs.take(4), fx.cycleConds.take(3)), "n_nationkey")
+    val chosen = run(physTree(dp, chain.fullMask, hinted = false))
+    val leftDeep = run(JoinTree.leftDeep(chain))
     require(chosen == leftDeep,
       s"join tree changed the answer: $chosen vs $leftDeep")
     import spark.implicits._
-    dp.toSeq.sortBy { case ((i, j), _) => (i, j) }.map {
-      case ((i, j), cell) =>
-        (chain.slice(i, j + 1).map(_._1).mkString(","), (j - i + 1).toLong,
-          cell.est, cell.cost, cell.plan,
-          chosen._1, chosen._2, chosen._3)
+    dp.toSeq.sortBy { case (m, _) =>
+      (java.lang.Integer.numberOfTrailingZeros(m), java.lang.Integer.bitCount(m))
+    }.map { case (m, cell) =>
+      (chain.subsetLabel(m), java.lang.Integer.bitCount(m).toLong,
+        cell.est, cell.cost, cell.plan, chosen._1, chosen._2, chosen._3)
     }.toDF("subset", "n_tables", "est_rows", "best_cost", "best_plan",
       "n_rows", "sum_qty", "sum_nat")
   }
 
-  /** One cell of the join-GRAPH enumeration: estimated cardinality, best
-    * C_out cost, the winning cut edge (−1 for leaves), the two component
-    * bitmasks, and the parenthesized best plan. */
-  private[graft] case class GraphDpCell(est: Long, cost: Long, cutEdge: Int,
-                                        leftMask: Int, rightMask: Int,
-                                        plan: String)
-
-  /** Selinger DP over an ACYCLIC JOIN GRAPH (the csg-cmp generalization
-    * of [[selingerChainDp]], restricted to trees — the warehouse
-    * star/snowflake shape): tables are graph nodes, equi-join edges
-    * carry the q208 divisor, and the DP runs over every CONNECTED
-    * subset (enumerated by ascending bitmask, so sub-results always
-    * exist). For a tree, the csg-cmp pairs of a connected subset are
-    * exactly its induced-edge cuts: removing edge e splits the subset
-    * into the two connected components around e's endpoints — so
-    * candidate splits are enumerated by ascending CUT-EDGE index and
-    * ties break to the FIRST minimal edge, the deterministic order the
-    * oracle's CASE chain replays (a cyclic graph would need the full
-    * Moerkotte–Neumann csg-cmp enumeration; the acyclicity is
-    * `require`d, never assumed). est(S) = Π rows / Π induced-edge
-    * divisors, BigInt product divided ONCE (staged integer division
-    * truncates differently from the oracle's full-product division);
-    * cost = Selinger C_out. Plan strings put the component containing
-    * the smallest table index on the left. Exposed for the
-    * planted-stats flip spec. */
-  private[graft] def selingerGraphDp(tables: Seq[(String, Long)],
-                                     edges: Seq[(Int, Int, Long)])
-      : Map[Int, GraphDpCell] = {
-    val n = tables.length
-    require(n >= 2 && n <= 20, s"need 2..20 tables; got $n")
-    require(edges.nonEmpty && edges.forall { case (a, b, d) =>
-      a >= 0 && a < n && b >= 0 && b < n && a != b && d > 0
-    }, s"edges must connect distinct in-range tables with positive divisors")
-    // acyclicity: union-find over the edge list
-    val uf = Array.tabulate(n)(identity)
-    def find(x: Int): Int = if (uf(x) == x) x else { uf(x) = find(uf(x)); uf(x) }
-    edges.foreach { case (a, b, _) =>
-      val (ra, rb) = (find(a), find(b))
-      require(ra != rb, s"join graph must be acyclic (tree/forest); " +
-        s"edge ($a,$b) closes a cycle")
-      uf(ra) = rb
-    }
-    def inMask(i: Int, mask: Int): Boolean = (mask & (1 << i)) != 0
-    def induced(mask: Int): Seq[Int] = edges.indices.filter { e =>
-      inMask(edges(e)._1, mask) && inMask(edges(e)._2, mask)
-    }
-    // component of `from` inside `mask` with edge `cut` removed
-    def component(from: Int, mask: Int, cut: Int): Int = {
-      var comp = 1 << from
-      var frontier = List(from)
-      while (frontier.nonEmpty) {
-        val v = frontier.head; frontier = frontier.tail
-        edges.indices.foreach { e =>
-          if (e != cut) {
-            val (a, b, _) = edges(e)
-            val next = if (a == v) b else if (b == v) a else -1
-            if (next >= 0 && inMask(next, mask) && !inMask(next, comp)) {
-              comp |= 1 << next
-              frontier = next :: frontier
-            }
-          }
-        }
-      }
-      comp
-    }
-    def est(mask: Int): Long = {
-      val num = tables.indices.filter(inMask(_, mask))
-        .map(i => BigInt(tables(i)._2)).product
-      val den = induced(mask).map(e => BigInt(edges(e)._3)).product
-      (num / den).toLong
-    }
-    val memo = scala.collection.mutable.Map.empty[Int, GraphDpCell]
-    tables.indices.foreach { i =>
-      memo(1 << i) = GraphDpCell(tables(i)._2, 0L, -1, 0, 0, tables(i)._1)
-    }
-    // ascending mask order: every proper submask is numerically smaller,
-    // so component cells always exist when a composite is reached
-    (3 to (1 << n) - 1).foreach { mask =>
-      if (java.lang.Integer.bitCount(mask) >= 2) {
-        val cuts = induced(mask)
-        // connected ⇔ the induced tree has |S|−1 edges
-        if (cuts.length == java.lang.Integer.bitCount(mask) - 1) {
-          val candidates = cuts.map { e =>
-            val compA = component(edges(e)._1, mask, e)
-            val compB = mask & ~compA
-            val (l, r) =
-              if (java.lang.Integer.numberOfTrailingZeros(compA) <
-                  java.lang.Integer.numberOfTrailingZeros(compB))
-                (compA, compB)
-              else (compB, compA)
-            (memo(l).cost + memo(r).cost, e, l, r,
-              s"(${memo(l).plan}*${memo(r).plan})")
-          }
-          val (cost, e, l, r, plan) = candidates.minBy(_._1) // first min
-          val eMask = est(mask)
-          memo(mask) = GraphDpCell(eMask, cost + eMask, e, l, r, plan)
-        }
-      }
-    }
-    memo.toMap
-  }
-
   /** J27 [EXT] — SELINGER ENUMERATION OVER A JOIN GRAPH (q245): q230's
-    * chain DP is an interval DP — correct for a chain, but the actual
+    * chain is an interval DP — correct for a chain, but the actual
     * 100 TB warehouse query is a STAR (fact joined to several dims),
-    * whose connected subsets are not intervals. This row runs the
-    * csg-cmp generalization ([[selingerGraphDp]]) on the 5-table star
-    * lineitem ⋈ orders ⋈ customer + part + supplier (edges
-    * l_orderkey/o_custkey/l_partkey/l_suppkey — orders chains on to
-    * customer, making it a snowflake arm), every row count and all
-    * eight join-key ndv read from the persisted ANALYZE store (the
-    * q224/q226/q230 discipline — `DefaultStatsSpecs` gained
-    * p_partkey/s_suppkey for exactly this). Output: the ENTIRE DP table
-    * — one row per CONNECTED subset (17 of the 31 non-empty subsets;
-    * disconnected ones have no join without a cartesian product and are
-    * correctly absent) with estimated cardinality, best C_out cost, and
-    * the winning parenthesized tree — plus the executed proof: the
-    * engine BUILDS the chosen tree from the DP's cut edges, runs it AND
-    * the canonical left-deep tree, and emits both aggregates with
+    * whose connected subsets are not intervals. This row runs the C_out
+    * tree DP ([[graft.optimizer.JoinEnumeration.selingerPhysicalDp]] at
+    * betaE2 = 0) on the fixture star (edges
+    * l_orderkey/o_custkey/l_partkey/l_suppkey), every row count and all eight join-key ndv read from the persisted
+    * ANALYZE store (the q224/q226/q230 discipline — `DefaultStatsSpecs`
+    * gained p_partkey/s_suppkey for exactly this). Output: the ENTIRE DP
+    * table — one row per CONNECTED subset (17 of the 31 non-empty
+    * subsets; disconnected ones have no join without a cartesian product
+    * and are correctly absent) with estimated cardinality, best C_out
+    * cost, and the winning parenthesized tree — plus the executed proof:
+    * the engine BUILDS the chosen tree from the DP's cut edges, runs it
+    * AND the canonical left-deep tree, and emits both aggregates with
     * `trees_identical` as a COLUMN (the q240 failure surface). On this
     * fixture the winner is genuinely BUSHY —
     * (((lineitem*supplier)*part)*(orders*customer)) — the shape no
@@ -2974,57 +2889,12 @@ object Relational {
     * price — hint-free, q226 owns operator shapes, this row owns the
     * TREE. */
   def cboGraphEnumerationAudit(spark: SparkSession, dir: String): DataFrame = {
-    val stats = ensureTableStats(spark, dir)
-      .select(col("table_name"), col("column_name"), col("n_rows"),
-        col("ndv")).collect()
-      .map(r => (r.getString(0), r.getString(1)) -> (r.getLong(2), r.getLong(3)))
-      .toMap
-    def rowsOf(t: String, c: String): Long = stats((t, c))._1
-    def ndvOf(t: String, c: String): Long = stats((t, c))._2
-    val tables = Seq(
-      ("lineitem", rowsOf("lineitem", "l_orderkey")),
-      ("orders", rowsOf("orders", "o_orderkey")),
-      ("customer", rowsOf("customer", "c_custkey")),
-      ("part", rowsOf("part", "p_partkey")),
-      ("supplier", rowsOf("supplier", "s_suppkey")))
-    val edges = Seq(
-      (0, 1, math.max(ndvOf("lineitem", "l_orderkey"),
-        ndvOf("orders", "o_orderkey"))),
-      (1, 2, math.max(ndvOf("orders", "o_custkey"),
-        ndvOf("customer", "c_custkey"))),
-      (0, 3, math.max(ndvOf("lineitem", "l_partkey"),
-        ndvOf("part", "p_partkey"))),
-      (0, 4, math.max(ndvOf("lineitem", "l_suppkey"),
-        ndvOf("supplier", "s_suppkey"))))
-    val dp = selingerGraphDp(tables, edges)
-    val dfs = Seq(Tables.lineitem(spark, dir), Tables.orders(spark, dir),
-      Tables.customer(spark, dir), Tables.part(spark, dir),
-      Tables.supplier(spark, dir))
-    val conds = Seq(
-      col("l_orderkey") === col("o_orderkey"),
-      col("o_custkey") === col("c_custkey"),
-      col("l_partkey") === col("p_partkey"),
-      col("l_suppkey") === col("s_suppkey"))
-    def build(mask: Int): DataFrame = {
-      val cell = dp(mask)
-      if (cell.cutEdge < 0) dfs(java.lang.Integer.numberOfTrailingZeros(mask))
-      else build(cell.leftMask).join(build(cell.rightMask),
-        conds(cell.cutEdge))
-    }
-    def agg(full: DataFrame): (Long, Long, Long) = {
-      val r = full.agg(count(lit(1)), sum(col("l_quantity").cast("long")),
-        sum(col("s_suppkey").cast("long"))).head()
-      // null-guarded like the cyclic/feedback-graph siblings: an empty
-      // 5-way join (degenerate dataset) sums to NULL, not 0
-      (r.getLong(0),
-        if (r.isNullAt(1)) 0L else r.getLong(1),
-        if (r.isNullAt(2)) 0L else r.getLong(2))
-    }
-    val fullMask = (1 << tables.length) - 1
-    val chosen = agg(build(fullMask))
-    val leftDeep = agg(
-      dfs.head.join(dfs(1), conds(0)).join(dfs(2), conds(1))
-        .join(dfs(3), conds(2)).join(dfs(4), conds(3)))
+    val fx = new EnumFixture(spark, dir)
+    val g = fx.star
+    val dp = selingerPhysicalDp(g, betaE2 = 0L)
+    val chosen = answerAgg(
+      fx.runStar(physTree(dp, g.fullMask, hinted = false)), "s_suppkey")
+    val leftDeep = answerAgg(fx.runStar(JoinTree.leftDeep(g)), "s_suppkey")
     val identical = chosen == leftDeep
     import spark.implicits._
     dp.toSeq
@@ -3032,126 +2902,21 @@ object Relational {
         (java.lang.Integer.bitCount(mask), mask)
       }
       .map { case (mask, cell) =>
-        val names = tables.indices.filter(i => (mask & (1 << i)) != 0)
-          .map(tables(_)._1).mkString(",")
-        (names, java.lang.Integer.bitCount(mask).toLong, cell.est,
-          cell.cost, cell.plan, chosen._1, chosen._2, chosen._3, identical)
+        (g.subsetLabel(mask), java.lang.Integer.bitCount(mask).toLong,
+          cell.est, cell.cost, cell.plan, chosen._1, chosen._2, chosen._3,
+          identical)
       }
       .toDF("subset", "n_tables", "est_rows", "best_cost", "best_plan",
         "n_rows", "sum_qty", "sum_supp", "trees_identical")
   }
 
-  /** One cell of the GENERAL csg-cmp enumeration: estimated
-    * cardinality, best C_out cost, the winning components, EVERY cross
-    * edge between them (a cyclic graph's split can cross several — the
-    * executed join must apply them all), and the plan string. */
-  private[graft] case class CcpCell(est: Long, cost: Long, leftMask: Int,
-                                    rightMask: Int, crossEdges: Seq[Int],
-                                    plan: String)
-
-  /** The full Moerkotte–Neumann-style csg-cmp DP — [[selingerGraphDp]]
-    * without the acyclicity restriction: candidate splits of a
-    * connected subset S are ALL partitions (S1, S2) with S1 containing
-    * S's lowest table index (each split once), both sides connected,
-    * and ≥ 1 cross edge; enumerated by ASCENDING S1 bitmask with
-    * first-minimal ties — the deterministic order the oracle's CASE
-    * chain replays. est(S) = Π rows / Π ALL induced-edge divisors
-    * (cycle-closing predicates multiply in — the textbook independence
-    * model a production CBO applies), BigInt divided once. Plan strings
-    * put S1 (which holds the globally smallest index) left. The tree
-    * specialization ([[selingerGraphDp]], O(edges) splits per subset
-    * via edge cuts) remains the fast path for acyclic graphs; this is
-    * the generic route a cyclic query needs. Split enumeration walks
-    * proper submasks (`s1 = (s1 − 1) & mask`), so the total work is the
-    * textbook O(3ⁿ) — ~43e6 iterations at the admitted n = 16 bound,
-    * driver-affordable metadata work. */
-  private[graft] def dpCcp(tables: Seq[(String, Long)],
-                           edges: Seq[(Int, Int, Long)])
-      : Map[Int, CcpCell] = {
-    val n = tables.length
-    require(n >= 2 && n <= 16, s"need 2..16 tables; got $n")
-    require(edges.nonEmpty && edges.forall { case (a, b, d) =>
-      a >= 0 && a < n && b >= 0 && b < n && a != b && d > 0
-    }, s"edges must connect distinct in-range tables with positive divisors")
-    def inMask(i: Int, mask: Int): Boolean = (mask & (1 << i)) != 0
-    def induced(mask: Int): Seq[Int] = edges.indices.filter { e =>
-      inMask(edges(e)._1, mask) && inMask(edges(e)._2, mask)
-    }
-    def connected(mask: Int): Boolean = {
-      if (mask == 0) return false
-      val seed = java.lang.Integer.numberOfTrailingZeros(mask)
-      var comp = 1 << seed
-      var frontier = List(seed)
-      while (frontier.nonEmpty) {
-        val v = frontier.head; frontier = frontier.tail
-        edges.foreach { case (a, b, _) =>
-          val next = if (a == v) b else if (b == v) a else -1
-          if (next >= 0 && inMask(next, mask) && !inMask(next, comp)) {
-            comp |= 1 << next
-            frontier = next :: frontier
-          }
-        }
-      }
-      comp == mask
-    }
-    def est(mask: Int): Long = {
-      val num = tables.indices.filter(inMask(_, mask))
-        .map(i => BigInt(tables(i)._2)).product
-      val den = induced(mask).map(e => BigInt(edges(e)._3)).product
-      (num / den).toLong
-    }
-    val memo = scala.collection.mutable.Map.empty[Int, CcpCell]
-    tables.indices.foreach { i =>
-      memo(1 << i) = CcpCell(tables(i)._2, 0L, 0, 0, Nil, tables(i)._1)
-    }
-    (3 to (1 << n) - 1).foreach { mask =>
-      if (java.lang.Integer.bitCount(mask) >= 2 && connected(mask)) {
-        val low = 1 << java.lang.Integer.numberOfTrailingZeros(mask)
-        // proper submasks of `mask` via s1 = (s1 − 1) & mask — Σ over
-        // connected masks is the true O(3ⁿ) the scaladoc claims (the
-        // r18 form iterated EVERY integer below the mask and filtered:
-        // O(4ⁿ), ~4e9 driver iterations at the admitted n = 16). The
-        // trick walks DESCENDING; the buffer is reversed so candidates
-        // enumerate by ASCENDING S1 bitmask with first-minimal ties —
-        // the exact order the oracle's CASE chain replays (pinned
-        // cell-for-cell against the old enumeration by spec).
-        val subs = scala.collection.mutable.ArrayBuffer.empty[Int]
-        var sub = (mask - 1) & mask
-        while (sub != 0) { subs += sub; sub = (sub - 1) & mask }
-        val candidates = subs.reverseIterator.flatMap { s1 =>
-          val s2 = mask & ~s1
-          // s1 is a proper non-empty submask by construction, so s2 ≠ 0;
-          // memo membership ⇔ the side is connected (singles + composites)
-          if ((s1 & low) != 0 && memo.contains(s1) && memo.contains(s2)) {
-            val cross = edges.indices.filter { e =>
-              val (a, b, _) = edges(e)
-              (inMask(a, s1) && inMask(b, s2)) ||
-                (inMask(a, s2) && inMask(b, s1))
-            }
-            if (cross.nonEmpty)
-              Some((memo(s1).cost + memo(s2).cost, s1, s2, cross,
-                s"(${memo(s1).plan}*${memo(s2).plan})"))
-            else None
-          } else None
-        }.toVector
-        require(candidates.nonEmpty, s"connected subset $mask has no split")
-        val (cost, s1, s2, cross, plan) = candidates.minBy(_._1) // first min
-        val eMask = est(mask)
-        memo(mask) = CcpCell(eMask, cost + eMask, s1, s2, cross, plan)
-      }
-    }
-    memo.toMap
-  }
-
   /** J30 [EXT] — CSG-CMP ENUMERATION ON A CYCLIC JOIN GRAPH (q249):
     * J27's tree DP declared cyclic graphs out of scope; this row runs
-    * the general enumeration ([[dpCcp]]) on the classic cyclic instance
-    * — TPC-H Q5's 5-cycle lineitem–orders–customer–nation–supplier–
-    * lineitem (the local-supplier constraint c_nationkey = s_nationkey
-    * expressed through the shared nation edge closes the cycle). Every
-    * row count and all the join-key ndv come from the persisted ANALYZE
-    * store (`DefaultStatsSpecs` gained s_nationkey). The cyclic
-    * specifics this row exists to pin:
+    * the general enumeration ([[graft.optimizer.JoinEnumeration.dpCcp]]) on
+    * the classic cyclic instance — the fixture's TPC-H Q5 5-cycle. Every
+    * row count and all the join-key ndv come from the persisted ANALYZE store
+    * (`DefaultStatsSpecs` gained s_nationkey). The cyclic specifics this
+    * row exists to pin:
     *
     *  - connected subsets are the cycle's ARCS (21 of 31), enumerated
     *    without any interval/edge-cut shortcut;
@@ -3174,69 +2939,11 @@ object Relational {
     * a generated per-cell CASE chain. Scale: O(3ⁿ) on metadata with n
     * = tables in ONE query; execution arms are the audit price. */
   def cboCyclicEnumerationAudit(spark: SparkSession, dir: String): DataFrame = {
-    val stats = ensureTableStats(spark, dir)
-      .select(col("table_name"), col("column_name"), col("n_rows"),
-        col("ndv")).collect()
-      .map(r => (r.getString(0), r.getString(1)) -> (r.getLong(2), r.getLong(3)))
-      .toMap
-    def rowsOf(t: String, c: String): Long = stats((t, c))._1
-    def ndvOf(t: String, c: String): Long = stats((t, c))._2
-    val tables = Seq(
-      ("lineitem", rowsOf("lineitem", "l_orderkey")),
-      ("orders", rowsOf("orders", "o_orderkey")),
-      ("customer", rowsOf("customer", "c_custkey")),
-      ("nation", rowsOf("nation", "n_nationkey")),
-      ("supplier", rowsOf("supplier", "s_suppkey")))
-    val edges = Seq(
-      (0, 1, math.max(ndvOf("lineitem", "l_orderkey"),
-        ndvOf("orders", "o_orderkey"))),
-      (1, 2, math.max(ndvOf("orders", "o_custkey"),
-        ndvOf("customer", "c_custkey"))),
-      (2, 3, math.max(ndvOf("customer", "c_nationkey"),
-        ndvOf("nation", "n_nationkey"))),
-      (3, 4, math.max(ndvOf("nation", "n_nationkey"),
-        ndvOf("supplier", "s_nationkey"))),
-      (4, 0, math.max(ndvOf("supplier", "s_suppkey"),
-        ndvOf("lineitem", "l_suppkey"))))
-    val dp = dpCcp(tables, edges)
-    val dfs = Seq(Tables.lineitem(spark, dir), Tables.orders(spark, dir),
-      Tables.customer(spark, dir), Tables.nation(spark, dir),
-      Tables.supplier(spark, dir))
-    val conds = Seq(
-      col("l_orderkey") === col("o_orderkey"),
-      col("o_custkey") === col("c_custkey"),
-      col("c_nationkey") === col("n_nationkey"),
-      col("n_nationkey") === col("s_nationkey"),
-      col("s_suppkey") === col("l_suppkey"))
-    def build(mask: Int): DataFrame = {
-      val cell = dp(mask)
-      if (cell.crossEdges.isEmpty)
-        dfs(java.lang.Integer.numberOfTrailingZeros(mask))
-      else build(cell.leftMask).join(build(cell.rightMask),
-        cell.crossEdges.map(conds).reduce(_ && _))
-    }
-    def agg(full: DataFrame): (Long, Long, Long) = {
-      val r = full.agg(count(lit(1)), sum(col("l_quantity").cast("long")),
-        sum(col("s_suppkey").cast("long"))).head()
-      (r.getLong(0),
-        if (r.isNullAt(1)) 0L else r.getLong(1),
-        if (r.isNullAt(2)) 0L else r.getLong(2))
-    }
-    val fullMask = (1 << tables.length) - 1
-    val chosen = agg(build(fullMask))
-    // canonical left-deep: join tables in index order, each step
-    // applying EVERY edge that becomes internal (the supplier join
-    // carries both the N–S and S–L predicates)
-    val leftDeep = agg((1 until tables.length).foldLeft(dfs.head) {
-      (acc, k) =>
-        val priorMask = (1 << k) - 1
-        val cs = edges.indices.filter { e =>
-          val (a, b, _) = edges(e)
-          (a == k && (priorMask & (1 << b)) != 0) ||
-            (b == k && (priorMask & (1 << a)) != 0)
-        }
-        acc.join(dfs(k), cs.map(conds).reduce(_ && _))
-    })
+    val fx = new EnumFixture(spark, dir)
+    val g = fx.cycle
+    val dp = dpCcp(g)
+    val chosen = answerAgg(fx.runCycle(ccpTree(dp, g.fullMask)), "s_suppkey")
+    val leftDeep = answerAgg(fx.runCycle(JoinTree.leftDeep(g)), "s_suppkey")
     val identical = chosen == leftDeep
     import spark.implicits._
     dp.toSeq
@@ -3244,144 +2951,12 @@ object Relational {
         (java.lang.Integer.bitCount(mask), mask)
       }
       .map { case (mask, cell) =>
-        val names = tables.indices.filter(i => (mask & (1 << i)) != 0)
-          .map(tables(_)._1).mkString(",")
-        (names, java.lang.Integer.bitCount(mask).toLong, cell.est,
-          cell.cost, cell.plan, chosen._1, chosen._2, chosen._3, identical)
+        (g.subsetLabel(mask), java.lang.Integer.bitCount(mask).toLong,
+          cell.est, cell.cost, cell.plan, chosen._1, chosen._2, chosen._3,
+          identical)
       }
       .toDF("subset", "n_tables", "est_rows", "best_cost", "best_plan",
         "n_rows", "sum_qty", "sum_supp", "trees_identical")
-  }
-
-  /** One cell of the OPERATOR-AWARE enumeration: estimated cardinality,
-    * best total cost (C_out + β·exchanged), the winning cut edge, the
-    * two component bitmasks, the PHYSICAL operator the winning join
-    * runs ("broadcast"/"shuffle"; "leaf" for singles), the rows that
-    * join exchanges under its operator, and the plan string. */
-  private[graft] case class PhysDpCell(est: Long, cost: Long, cutEdge: Int,
-                                       leftMask: Int, rightMask: Int,
-                                       op: String, exchanged: Long,
-                                       plan: String)
-
-  /** The default physical-operator parameters for
-    * [[selingerPhysicalDp]]: a join whose smaller side is estimated at
-    * ≤ `PhysBroadcastLimitRows` broadcasts (the q221/q224 row-threshold
-    * rule as the enumerator's operator model), and exchanged rows are
-    * charged at β = `PhysBetaE2`/100 of a produced row (β = 1: moving
-    * a row across the cluster priced like materializing one — the
-    * deliberately simple first form; the honest coupling is the
-    * STRUCTURE, not the coefficient). */
-  private[graft] val PhysBroadcastLimitRows = 10000L
-  private[graft] val PhysBetaE2 = 100L
-
-  /** Selinger DP over an acyclic join graph WITH the physical-operator
-    * dimension priced inside the cells — the System-R access-path
-    * coupling [[selingerGraphDp]] lacks (Selinger et al. 1979 priced
-    * access paths per DP cell; C_out alone cannot see that a tree
-    * keeping one side under the broadcast threshold avoids an
-    * exchange). Identical enumeration order to the tree DP (connected
-    * subsets ascending, splits by ascending cut-edge index,
-    * first-minimal ties — the oracle's CASE-chain order), but each
-    * candidate split is costed
-    *
-    *   cost(L) + cost(R) + est(S) + β·exchanged(L, R)
-    *
-    * where the operator follows the threshold rule: min(est_L, est_R)
-    * ≤ `bcastLimit` → broadcast, exchanged = the smaller side (the
-    * build side ships; the big side stays in place); otherwise →
-    * shuffle, exchanged = est_L + est_R (both sides repartition on the
-    * join key). β is integer millionths-free: `betaE2`/100, applied as
-    * a single BigInt product-and-divide so the oracle's HUGEINT `//`
-    * reproduces every truncation. With betaE2 = 0 this reduces CELL FOR
-    * CELL to [[selingerGraphDp]] (same candidates, same order, same
-    * tie-breaks — pinned by spec), which is exactly the point: the
-    * operator term is the only new force, so a plan difference between
-    * the two pricings is ATTRIBUTABLE. Exposed for the planted-flip
-    * spec. */
-  private[graft] def selingerPhysicalDp(tables: Seq[(String, Long)],
-                                        edges: Seq[(Int, Int, Long)],
-                                        bcastLimit: Long = PhysBroadcastLimitRows,
-                                        betaE2: Long = PhysBetaE2)
-      : Map[Int, PhysDpCell] = {
-    val n = tables.length
-    require(n >= 2 && n <= 20, s"need 2..20 tables; got $n")
-    require(bcastLimit >= 0L && betaE2 >= 0L,
-      s"need non-negative limit/beta; got ($bcastLimit, $betaE2)")
-    require(edges.nonEmpty && edges.forall { case (a, b, d) =>
-      a >= 0 && a < n && b >= 0 && b < n && a != b && d > 0
-    }, s"edges must connect distinct in-range tables with positive divisors")
-    val uf = Array.tabulate(n)(identity)
-    def find(x: Int): Int = if (uf(x) == x) x else { uf(x) = find(uf(x)); uf(x) }
-    edges.foreach { case (a, b, _) =>
-      val (ra, rb) = (find(a), find(b))
-      require(ra != rb, s"join graph must be acyclic (tree/forest); " +
-        s"edge ($a,$b) closes a cycle")
-      uf(ra) = rb
-    }
-    def inMask(i: Int, mask: Int): Boolean = (mask & (1 << i)) != 0
-    def induced(mask: Int): Seq[Int] = edges.indices.filter { e =>
-      inMask(edges(e)._1, mask) && inMask(edges(e)._2, mask)
-    }
-    def component(from: Int, mask: Int, cut: Int): Int = {
-      var comp = 1 << from
-      var frontier = List(from)
-      while (frontier.nonEmpty) {
-        val v = frontier.head; frontier = frontier.tail
-        edges.indices.foreach { e =>
-          if (e != cut) {
-            val (a, b, _) = edges(e)
-            val next = if (a == v) b else if (b == v) a else -1
-            if (next >= 0 && inMask(next, mask) && !inMask(next, comp)) {
-              comp |= 1 << next
-              frontier = next :: frontier
-            }
-          }
-        }
-      }
-      comp
-    }
-    def est(mask: Int): Long = {
-      val num = tables.indices.filter(inMask(_, mask))
-        .map(i => BigInt(tables(i)._2)).product
-      val den = induced(mask).map(e => BigInt(edges(e)._3)).product
-      (num / den).toLong
-    }
-    val memo = scala.collection.mutable.Map.empty[Int, PhysDpCell]
-    tables.indices.foreach { i =>
-      memo(1 << i) = PhysDpCell(tables(i)._2, 0L, -1, 0, 0, "leaf", 0L,
-        tables(i)._1)
-    }
-    (3 to (1 << n) - 1).foreach { mask =>
-      if (java.lang.Integer.bitCount(mask) >= 2) {
-        val cuts = induced(mask)
-        if (cuts.length == java.lang.Integer.bitCount(mask) - 1) {
-          val candidates = cuts.map { e =>
-            val compA = component(edges(e)._1, mask, e)
-            val compB = mask & ~compA
-            val (l, r) =
-              if (java.lang.Integer.numberOfTrailingZeros(compA) <
-                  java.lang.Integer.numberOfTrailingZeros(compB))
-                (compA, compB)
-              else (compB, compA)
-            val (estL, estR) = (memo(l).est, memo(r).est)
-            val small = math.min(estL, estR)
-            val (op, exchanged) =
-              if (small <= bcastLimit) ("broadcast", small)
-              else ("shuffle", estL + estR)
-            val exCost =
-              (BigInt(exchanged) * BigInt(betaE2) / BigInt(100L)).toLong
-            (memo(l).cost + memo(r).cost + exCost, e, l, r, op, exchanged,
-              s"(${memo(l).plan}*${memo(r).plan})")
-          }
-          val (cost, e, l, r, op, exchanged, plan) =
-            candidates.minBy(_._1) // first min — the oracle's tie order
-          val eMask = est(mask)
-          memo(mask) = PhysDpCell(eMask, cost + eMask, e, l, r, op,
-            exchanged, plan)
-        }
-      }
-    }
-    memo.toMap
   }
 
   /** J31 [EXT] — PHYSICAL OPERATORS PRICED INSIDE THE ENUMERATOR
@@ -3390,29 +2965,29 @@ object Relational {
     * (q221/q224's threshold consumers) — but System R's actual
     * contribution was pricing access paths PER CELL, so a plan that
     * keeps a broadcastable side small can beat a lower-C_out order that
-    * forces two exchanges. This row runs [[selingerPhysicalDp]] on the
-    * q245 star (same tables, same edges, all inputs from the persisted
-    * ANALYZE store) TWICE over identical inputs — betaE2 = 0 (pure
-    * C_out: reduces cell-for-cell to q245's DP) vs the default β = 1 —
-    * and emits, per connected subset: the estimate, the C_out cost and
-    * plan, the operator-aware cost and plan, the cell's chosen PHYSICAL
-    * OPERATOR, and the rows its winning join exchanges under that
-    * operator. `plans_differ` (full set: did the operator term change
-    * the chosen tree?) is derived, never hard-coded — on the natural
-    * TPC-H-shaped fixture it honestly reads false (e_oc = n_orders
-    * exactly on an FK join, so every tree pays the same exchanges; the
-    * spec plants a filtered-orders star where the operator-aware winner
-    * genuinely differs). Executed proof: the operator-aware tree runs
-    * at FULL size with each join HINTED to the operator its DP cell
-    * chose (broadcast() on the smaller-estimate side — the annotation
-    * is real, not decorative), its aggregate is the answer; BOTH
-    * winners additionally execute on the deterministic 1/8 key
-    * partition (the q248 sampled-arm discipline), identity emitted as
-    * `trees_identical`. The oracle re-derives both complete DP tables
-    * via a GENERATED per-cell CASE chain (the cyclicDpSql discipline —
-    * the generator replays the engine's enumeration symbolically,
-    * including every exchange CASE and tie-break) plus the raw star
-    * aggregate.
+    * forces two exchanges. This row runs
+    * [[graft.optimizer.JoinEnumeration.selingerPhysicalDp]] on the q245
+    * star (same tables, same edges, all inputs from the persisted ANALYZE
+    * store) TWICE over identical inputs — betaE2 = 0 (pure C_out: q245's DP)
+    * vs the default β = 1 — and emits, per connected subset: the
+    * estimate, the C_out cost and plan, the operator-aware cost and
+    * plan, the cell's chosen PHYSICAL OPERATOR, and the rows its winning
+    * join exchanges under that operator. `plans_differ` (full set: did
+    * the operator term change the chosen tree?) is derived, never
+    * hard-coded — on the natural TPC-H-shaped fixture it honestly reads
+    * false (e_oc = n_orders exactly on an FK join, so every tree pays
+    * the same exchanges; the spec plants a filtered-orders star where
+    * the operator-aware winner genuinely differs). Executed proof: the
+    * operator-aware tree runs at FULL size with each join HINTED to the
+    * operator its DP cell chose (broadcast() on the smaller-estimate
+    * side — the annotation is real, not decorative), its aggregate is
+    * the answer; BOTH winners additionally execute on the deterministic
+    * 1/8 key partition (the q248 sampled-arm discipline), identity
+    * emitted as `trees_identical`. The oracle re-derives both complete
+    * DP tables via a GENERATED per-cell CASE chain (the cyclicDpSql
+    * discipline — the generator replays the engine's enumeration
+    * symbolically, including every exchange CASE and tie-break) plus
+    * the raw star aggregate.
     *
     * Scale: the DP stays O(edges) splits per connected subset on
     * metadata; the operator dimension adds O(1) per candidate. The
@@ -3420,88 +2995,29 @@ object Relational {
     * 100 TB this is the difference between an optimizer that picks the
     * cheapest JOIN ORDER and one that picks the cheapest PLAN. */
   def cboPhysicalEnumerationAudit(spark: SparkSession, dir: String): DataFrame = {
-    val stats = ensureTableStats(spark, dir)
-      .select(col("table_name"), col("column_name"), col("n_rows"),
-        col("ndv")).collect()
-      .map(r => (r.getString(0), r.getString(1)) -> (r.getLong(2), r.getLong(3)))
-      .toMap
-    def rowsOf(t: String, c: String): Long = stats((t, c))._1
-    def ndvOf(t: String, c: String): Long = stats((t, c))._2
-    val tables = Seq(
-      ("lineitem", rowsOf("lineitem", "l_orderkey")),
-      ("orders", rowsOf("orders", "o_orderkey")),
-      ("customer", rowsOf("customer", "c_custkey")),
-      ("part", rowsOf("part", "p_partkey")),
-      ("supplier", rowsOf("supplier", "s_suppkey")))
-    val edges = Seq(
-      (0, 1, math.max(ndvOf("lineitem", "l_orderkey"),
-        ndvOf("orders", "o_orderkey"))),
-      (1, 2, math.max(ndvOf("orders", "o_custkey"),
-        ndvOf("customer", "c_custkey"))),
-      (0, 3, math.max(ndvOf("lineitem", "l_partkey"),
-        ndvOf("part", "p_partkey"))),
-      (0, 4, math.max(ndvOf("lineitem", "l_suppkey"),
-        ndvOf("supplier", "s_suppkey"))))
-    val dpCout = selingerPhysicalDp(tables, edges, betaE2 = 0L)
-    val dpPhys = selingerPhysicalDp(tables, edges)
-    val fullMask = (1 << tables.length) - 1
+    val fx = new EnumFixture(spark, dir)
+    val g = fx.star
+    val dpCout = selingerPhysicalDp(g, betaE2 = 0L)
+    val dpPhys = selingerPhysicalDp(g)
+    val fullMask = g.fullMask
     val plansDiffer = dpCout(fullMask).plan != dpPhys(fullMask).plan
-    val dfs = Seq(Tables.lineitem(spark, dir), Tables.orders(spark, dir),
-      Tables.customer(spark, dir), Tables.part(spark, dir),
-      Tables.supplier(spark, dir))
-    val conds = Seq(
-      col("l_orderkey") === col("o_orderkey"),
-      col("o_custkey") === col("c_custkey"),
-      col("l_partkey") === col("p_partkey"),
-      col("l_suppkey") === col("s_suppkey"))
-    // the operator annotation is REAL: each join of the executed tree
-    // is hinted to what its DP cell chose — broadcast() wraps the
-    // smaller-ESTIMATE side (the side the cell priced as shipping)
-    def build(dp: Map[Int, PhysDpCell], ds: Seq[DataFrame],
-              mask: Int): DataFrame = {
-      val cell = dp(mask)
-      if (cell.cutEdge < 0) ds(java.lang.Integer.numberOfTrailingZeros(mask))
-      else {
-        var l = build(dp, ds, cell.leftMask)
-        var r = build(dp, ds, cell.rightMask)
-        if (cell.op == "broadcast") {
-          if (dp(cell.leftMask).est <= dp(cell.rightMask).est)
-            l = broadcast(l)
-          else r = broadcast(r)
-        }
-        l.join(r, conds(cell.cutEdge))
-      }
-    }
-    def agg(full: DataFrame): (Long, Long, Long) = {
-      val r = full.agg(count(lit(1)), sum(col("l_quantity").cast("long")),
-        sum(col("s_suppkey").cast("long"))).head()
-      (r.getLong(0),
-        if (r.isNullAt(1)) 0L else r.getLong(1),
-        if (r.isNullAt(2)) 0L else r.getLong(2))
-    }
-    val answer = agg(build(dpPhys, dfs, fullMask))
-    // both winners on the 1/8 key partition (keys ≡ 1 mod 8 on
-    // l_orderkey AND o_orderkey — closed under the fact edge; dims ride
-    // whole, the q248 discipline)
-    val li8 = dfs.head.filter(
-      pmod(col("l_orderkey").cast("long"), lit(8L)) === 1L)
-    val ord8 = dfs(1).filter(
-      pmod(col("o_orderkey").cast("long"), lit(8L)) === 1L)
-    val dfs8 = li8 +: ord8 +: dfs.drop(2)
-    val identical =
-      agg(build(dpPhys, dfs8, fullMask)) == agg(build(dpCout, dfs8, fullMask))
+    val physWinner = physTree(dpPhys, fullMask, hinted = true)
+    val answer = answerAgg(fx.runStar(physWinner), "s_suppkey")
+    val dfs8 = sample8(fx.starDfs)
+    val identical = answerAgg(fx.runStar(physWinner, dfs8), "s_suppkey") ==
+      answerAgg(fx.runStar(physTree(dpCout, fullMask, hinted = true), dfs8),
+        "s_suppkey")
     import spark.implicits._
     dpPhys.toSeq
       .sortBy { case (mask, _) =>
         (java.lang.Integer.bitCount(mask), mask)
       }
       .map { case (mask, cell) =>
-        val names = tables.indices.filter(i => (mask & (1 << i)) != 0)
-          .map(tables(_)._1).mkString(",")
         val c0 = dpCout(mask)
-        (names, java.lang.Integer.bitCount(mask).toLong, cell.est,
-          c0.cost, c0.plan, cell.cost, cell.plan, cell.op, cell.exchanged,
-          plansDiffer, answer._1, answer._2, answer._3, identical)
+        (g.subsetLabel(mask), java.lang.Integer.bitCount(mask).toLong,
+          cell.est, c0.cost, c0.plan, cell.cost, cell.plan, cell.op,
+          cell.exchanged, plansDiffer, answer._1, answer._2, answer._3,
+          identical)
       }
       .toDF("subset", "n_tables", "est_rows", "cout_cost", "cout_plan",
         "phys_cost", "phys_plan", "phys_op", "phys_exchanged",
@@ -3509,19 +3025,38 @@ object Relational {
         "trees_identical")
   }
 
-  /** The pure exchange model shared by the q253 predictions, the q254
-    * exchange-aware DP, and their specs — exactly Spark's
-    * EnsureRequirements as measured by q253: a sort-merge join
-    * requires both sides hash-partitioned on EXACTLY its join-key
-    * class set; a leaf scan is unpartitioned; each side whose current
-    * partitioning differs inserts one Exchange. Input/output
-    * partitionings are sorted distinct key-class seqs (Nil =
-    * unpartitioned). Returns the join's (output partitioning,
-    * cumulative exchange count). */
-  private[graft] def joinExch(l: (Seq[Int], Long), r: (Seq[Int], Long),
-                              k: Seq[Int]): (Seq[Int], Long) =
-    (k, l._2 + r._2 + (if (l._1 == k) 0L else 1L) +
-      (if (r._1 == k) 0L else 1L))
+  /** The four arms of the exchange model (q253 measures them, q258
+    * oracle-checks them): star and Q5 cycle × the C_out DP's chosen tree
+    * and the canonical left-deep tree, each as (graph, arm, C_out, plan,
+    * predicted sort-merge Exchange count, tree). Predictions come from
+    * the pure model ([[graft.optimizer.JoinEnumeration.predictExchanges]]):
+    * star edges all join distinct key classes; the cycle's customer–nation
+    * and nation–supplier edges share the nationkey class
+    * ([[CycleKeyClasses]]) — the reuse the model must price. The
+    * left-deep plans and counts are fixture constants (a fixed tree's
+    * count is graph arithmetic); their C_out sums the prefix-subset
+    * estimates. */
+  private def exchangeModelArms(fx: EnumFixture)
+      : Seq[(String, String, Long, String, Long, JoinTree)] = {
+    val full = fx.star.fullMask
+    val starDp = selingerPhysicalDp(fx.star, betaE2 = 0L)
+    val cycDp = dpCcp(fx.cycle)
+    val (starTree, cycTree) =
+      (physTree(starDp, full, hinted = false), ccpTree(cycDp, full))
+    val (starLd, cycLd) =
+      (JoinTree.leftDeep(fx.star), JoinTree.leftDeep(fx.cycle))
+    Seq(
+      ("star", "chosen", starDp(full).cost, starDp(full).plan,
+        predictExchanges(starTree, fx.starClasses)._2, starTree),
+      ("star", "left_deep", coutOf(starLd, fx.star),
+        "((((lineitem*orders)*customer)*part)*supplier)",
+        predictExchanges(starLd, fx.starClasses)._2, starLd),
+      ("cycle", "chosen", cycDp(full).cost, cycDp(full).plan,
+        predictExchanges(cycTree, CycleKeyClasses)._2, cycTree),
+      ("cycle", "left_deep", coutOf(cycLd, fx.cycle),
+        "((((lineitem*orders)*customer)*nation)*supplier)",
+        predictExchanges(cycLd, CycleKeyClasses)._2, cycLd))
+  }
 
   /** J31b [EXT] — EXCHANGE-AWARENESS PROBE (q253): the cheap
     * forerunner of the full interesting-orders work (Selinger 1979's
@@ -3542,8 +3077,8 @@ object Relational {
     * `BroadcastExchange` nodes NEXT TO the arm's C_out — the
     * measurement column that quantifies what C_out misses and sizes
     * the interesting-orders payoff. Each arm also carries
-    * `n_shuffle_predicted` from the pure model ([[joinExch]] — the
-    * model the q254 exchange-aware DP prices with): the spec pins
+    * `n_shuffle_predicted` from the pure model ([[exchangeModelArms]]
+    * — the model the q254 exchange-aware DP prices with): the spec pins
     * predicted == measured on all four arms, which is the evidence
     * that the DP's exchange term prices what Spark's
     * EnsureRequirements actually does.
@@ -3588,20 +3123,7 @@ object Relational {
     val saved = scoped.map { case (k, _) => k -> conf.getOption(k) }
     scoped.foreach { case (k, v) => conf.set(k, v) }
     try {
-      val stats = ensureTableStats(spark, dir)
-        .select(col("table_name"), col("column_name"), col("n_rows"),
-          col("ndv")).collect()
-        .map(r => (r.getString(0), r.getString(1)) ->
-          (r.getLong(2), r.getLong(3)))
-        .toMap
-      def rowsOf(t: String, c: String): Long = stats((t, c))._1
-      def ndvOf(t: String, c: String): Long = stats((t, c))._2
-      def d(a: (String, String), b: (String, String)): Long =
-        math.max(ndvOf(a._1, a._2), ndvOf(b._1, b._2))
-      val li8 = Tables.lineitem(spark, dir)
-        .filter(pmod(col("l_orderkey").cast("long"), lit(8L)) === 1L)
-      val ord8 = Tables.orders(spark, dir)
-        .filter(pmod(col("o_orderkey").cast("long"), lit(8L)) === 1L)
+      val fx = new EnumFixture(spark, dir)
       def run(arm: DataFrame): (Long, Long, Long, Long, Long) = {
         val agg = arm.agg(count(lit(1)).as("n"),
           coalesce(sum(col("l_quantity").cast("long")), lit(0L)).as("s"))
@@ -3620,137 +3142,28 @@ object Relational {
         val nSort = " Sort \\[".r.findAllIn(plan).length.toLong
         (nShuffle, nBcast, nSort, r.getLong(0), r.getLong(1))
       }
-      // --- star (the q245 graph) ---
-      val starTables = Seq(
-        ("lineitem", rowsOf("lineitem", "l_orderkey")),
-        ("orders", rowsOf("orders", "o_orderkey")),
-        ("customer", rowsOf("customer", "c_custkey")),
-        ("part", rowsOf("part", "p_partkey")),
-        ("supplier", rowsOf("supplier", "s_suppkey")))
-      val starEdges = Seq(
-        (0, 1, d(("lineitem", "l_orderkey"), ("orders", "o_orderkey"))),
-        (1, 2, d(("orders", "o_custkey"), ("customer", "c_custkey"))),
-        (0, 3, d(("lineitem", "l_partkey"), ("part", "p_partkey"))),
-        (0, 4, d(("lineitem", "l_suppkey"), ("supplier", "s_suppkey"))))
-      val starDp = selingerGraphDp(starTables, starEdges)
-      val starDfs = Seq(li8, ord8, Tables.customer(spark, dir),
-        Tables.part(spark, dir), Tables.supplier(spark, dir))
-      val starConds = Seq(
-        col("l_orderkey") === col("o_orderkey"),
-        col("o_custkey") === col("c_custkey"),
-        col("l_partkey") === col("p_partkey"),
-        col("l_suppkey") === col("s_suppkey"))
-      def buildStar(mask: Int): DataFrame = {
-        val cell = starDp(mask)
-        if (cell.cutEdge < 0)
-          starDfs(java.lang.Integer.numberOfTrailingZeros(mask))
-        else buildStar(cell.leftMask)
-          .join(buildStar(cell.rightMask), starConds(cell.cutEdge))
-      }
-      val starFull = 31
-      val starLeftDeep = starDfs.head.join(starDfs(1), starConds(0))
-        .join(starDfs(2), starConds(1)).join(starDfs(3), starConds(2))
-        .join(starDfs(4), starConds(3))
-      def prefixCost(dp: Int => Long): Long =
-        (1 to 4).map(k => dp((1 << (k + 1)) - 1)).sum
-      val starLdCost = prefixCost(m => starDp(m).est)
-      // --- cycle (the q249 graph) ---
-      val cycTables = Seq(
-        ("lineitem", rowsOf("lineitem", "l_orderkey")),
-        ("orders", rowsOf("orders", "o_orderkey")),
-        ("customer", rowsOf("customer", "c_custkey")),
-        ("nation", rowsOf("nation", "n_nationkey")),
-        ("supplier", rowsOf("supplier", "s_suppkey")))
-      val cycEdges = Seq(
-        (0, 1, d(("lineitem", "l_orderkey"), ("orders", "o_orderkey"))),
-        (1, 2, d(("orders", "o_custkey"), ("customer", "c_custkey"))),
-        (2, 3, d(("customer", "c_nationkey"), ("nation", "n_nationkey"))),
-        (3, 4, d(("nation", "n_nationkey"), ("supplier", "s_nationkey"))),
-        (4, 0, d(("supplier", "s_suppkey"), ("lineitem", "l_suppkey"))))
-      val cycDp = dpCcp(cycTables, cycEdges)
-      val cycDfs = Seq(li8, ord8, Tables.customer(spark, dir),
-        Tables.nation(spark, dir), Tables.supplier(spark, dir))
-      val cycConds = Seq(
-        col("l_orderkey") === col("o_orderkey"),
-        col("o_custkey") === col("c_custkey"),
-        col("c_nationkey") === col("n_nationkey"),
-        col("n_nationkey") === col("s_nationkey"),
-        col("s_suppkey") === col("l_suppkey"))
-      def buildCyc(mask: Int): DataFrame = {
-        val cell = cycDp(mask)
-        if (cell.crossEdges.isEmpty)
-          cycDfs(java.lang.Integer.numberOfTrailingZeros(mask))
-        else buildCyc(cell.leftMask).join(buildCyc(cell.rightMask),
-          cell.crossEdges.map(cycConds).reduce(_ && _))
-      }
-      val cycLeftDeep = (1 until 5).foldLeft(cycDfs.head) { (acc, k) =>
-        val priorMask = (1 << k) - 1
-        val cs = cycEdges.indices.filter { e =>
-          val (a, b, _) = cycEdges(e)
-          (a == k && (priorMask & (1 << b)) != 0) ||
-            (b == k && (priorMask & (1 << a)) != 0)
-        }
-        acc.join(cycDfs(k), cs.map(cycConds).reduce(_ && _))
-      }
-      val cycLdCost = prefixCost(m => cycDp(m).est)
-      // PREDICTED exchange counts from the pure model ([[joinExch]]):
-      // star edges all join distinct key classes (class = edge index);
-      // the cycle's customer–nation and nation–supplier edges share the
-      // nationkey class — the reuse the model must price
-      val cycClasses = Seq(0, 1, 2, 2, 3)
-      def predStar(mask: Int): (Seq[Int], Long) = {
-        val cell = starDp(mask)
-        if (cell.cutEdge < 0) (Seq.empty[Int], 0L)
-        else joinExch(predStar(cell.leftMask), predStar(cell.rightMask),
-          Seq(cell.cutEdge))
-      }
-      def predCyc(mask: Int): (Seq[Int], Long) = {
-        val cell = cycDp(mask)
-        if (cell.crossEdges.isEmpty) (Seq.empty[Int], 0L)
-        else joinExch(predCyc(cell.leftMask), predCyc(cell.rightMask),
-          cell.crossEdges.map(cycClasses).distinct.sorted)
-      }
-      def predLeftDeep(edges: Seq[(Int, Int, Long)],
-                       classes: Seq[Int]): Long =
-        (1 until 5).foldLeft((Seq.empty[Int], 0L)) { case (acc, k) =>
-          val priorMask = (1 << k) - 1
-          val cs = edges.indices.filter { e =>
-            val (a, b, _) = edges(e)
-            (a == k && (priorMask & (1 << b)) != 0) ||
-              (b == k && (priorMask & (1 << a)) != 0)
-          }
-          joinExch(acc, (Seq.empty[Int], 0L),
-            cs.map(classes).distinct.sorted)
-        }._2
-      val arms = Seq(
-        ("star", "chosen", starDp(starFull).cost, starDp(starFull).plan,
-          predStar(starFull)._2, buildStar(starFull)),
-        ("star", "left_deep", starLdCost,
-          "((((lineitem*orders)*customer)*part)*supplier)",
-          predLeftDeep(starEdges, Seq(0, 1, 2, 3)), starLeftDeep),
-        ("cycle", "chosen", cycDp(starFull).cost, cycDp(starFull).plan,
-          predCyc(starFull)._2, buildCyc(starFull)),
-        ("cycle", "left_deep", cycLdCost,
-          "((((lineitem*orders)*customer)*nation)*supplier)",
-          predLeftDeep(cycEdges, cycClasses), cycLeftDeep))
+      val (star8, cyc8) = (sample8(fx.starDfs), sample8(fx.cycleDfs))
+      def armDf(graph: String, t: JoinTree): DataFrame =
+        if (graph == "star") fx.runStar(t, star8) else fx.runCycle(t, cyc8)
+      val arms = exchangeModelArms(fx)
       import spark.implicits._
       // the four SMJ arms are independent actions under ONE static conf
       // scope (broadcast stays disabled until all four complete — the
-      // Await below sequences the restore), so they run concurrently
-      // (guide §2.6, the q232 leg discipline)
-      val smjRows = parFlatMap(arms) { case (graph, arm, cost, plan, pred, df) =>
-        val (nSh, nBc, nSo, nRows, sumQty) = run(df)
-        // SORT prediction = the SAME recursion as the exchange
-        // prediction: an SMJ's output is both hash-partitioned AND
-        // sorted on its join keys, and the reuse condition (the child's
-        // output attributes equal the required keys) is attribute-
-        // identical for the two properties — so on an equi-join SMJ
-        // tree, interesting orders coincide with interesting
-        // partitionings, and J32's (subset × partitioning) states
-        // already carry the sort dimension for free. The probe EMITS
-        // both counts so that claim is measured, not assumed.
-        Seq((graph, arm, cost, plan, pred, pred, nSh, nBc, nSo, nRows,
-          sumQty))
+      // helper returns only after every arm has stopped), so they run
+      // concurrently (guide §2.6, the q232 leg discipline)
+      val smjRows = DriverLegs.map(spark, arms) {
+        case (graph, arm, cost, plan, pred, tree) =>
+          val (nSh, nBc, nSo, nRows, sumQty) = run(armDf(graph, tree))
+          // SORT prediction = the SAME recursion as the exchange
+          // prediction: an SMJ's output is both hash-partitioned AND
+          // sorted on its join keys, and the reuse condition (the
+          // child's output attributes equal the required keys) is
+          // attribute-identical for the two properties — so on an
+          // equi-join SMJ tree, interesting orders coincide with
+          // interesting partitionings, and J32's (subset × partitioning)
+          // states already carry the sort dimension for free. The probe
+          // EMITS both counts so that claim is measured, not assumed.
+          (graph, arm, cost, plan, pred, pred, nSh, nBc, nSo, nRows, sumQty)
       }
       // fifth arm: the same star chosen tree under the session's
       // DEFAULT broadcast thresholds — the measurement that sizes the
@@ -3758,16 +3171,16 @@ object Relational {
       // the dim-side shuffles the SMJ arms pay, and preserve the
       // stream side's partitioning). The SMJ-only model doesn't cover
       // it: n_shuffle_predicted = −1, declared unmodeled.
+      val (_, _, starCost, starPlan, _, starTree) = arms.head
       saved.foreach {
         case (k, Some(v)) => conf.set(k, v)
         case (k, None) => conf.unset(k)
       }
       val bc =
-        try run(buildStar(starFull))
+        try run(armDf("star", starTree))
         finally scoped.foreach { case (k, v) => conf.set(k, v) }
-      val bcastRow = ("star", "chosen_bcast", starDp(starFull).cost,
-        starDp(starFull).plan, -1L, -1L, bc._1, bc._2, bc._3, bc._4,
-        bc._5)
+      val bcastRow = ("star", "chosen_bcast", starCost, starPlan, -1L, -1L,
+        bc._1, bc._2, bc._3, bc._4, bc._5)
       (smjRows :+ bcastRow)
         .toDF("graph", "arm", "cout_cost", "plan", "n_shuffle_predicted",
           "n_sort_predicted", "n_shuffle_exchanges",
@@ -3803,81 +3216,9 @@ object Relational {
     * store. */
   def cboModelPredictionsAudit(spark: SparkSession,
                                dir: String): DataFrame = {
-    val stats = ensureTableStats(spark, dir)
-      .select(col("table_name"), col("column_name"), col("n_rows"),
-        col("ndv")).collect()
-      .map(r => (r.getString(0), r.getString(1)) ->
-        (r.getLong(2), r.getLong(3)))
-      .toMap
-    def rowsOf(t: String, c: String): Long = stats((t, c))._1
-    def d(a: (String, String), b: (String, String)): Long =
-      math.max(stats(a)._2, stats(b)._2)
-    val full = 31
-    // --- star (the q245/q253 graph; per-edge classes = edge index) ---
-    val starTables = Seq(
-      ("lineitem", rowsOf("lineitem", "l_orderkey")),
-      ("orders", rowsOf("orders", "o_orderkey")),
-      ("customer", rowsOf("customer", "c_custkey")),
-      ("part", rowsOf("part", "p_partkey")),
-      ("supplier", rowsOf("supplier", "s_suppkey")))
-    val starEdges = Seq(
-      (0, 1, d(("lineitem", "l_orderkey"), ("orders", "o_orderkey"))),
-      (1, 2, d(("orders", "o_custkey"), ("customer", "c_custkey"))),
-      (0, 3, d(("lineitem", "l_partkey"), ("part", "p_partkey"))),
-      (0, 4, d(("lineitem", "l_suppkey"), ("supplier", "s_suppkey"))))
-    val starDp = selingerGraphDp(starTables, starEdges)
-    def predStar(mask: Int): (Seq[Int], Long) = {
-      val cell = starDp(mask)
-      if (cell.cutEdge < 0) (Seq.empty[Int], 0L)
-      else joinExch(predStar(cell.leftMask), predStar(cell.rightMask),
-        Seq(cell.cutEdge))
-    }
-    // --- cycle (the q249 graph) ---
-    val cycTables = Seq(
-      ("lineitem", rowsOf("lineitem", "l_orderkey")),
-      ("orders", rowsOf("orders", "o_orderkey")),
-      ("customer", rowsOf("customer", "c_custkey")),
-      ("nation", rowsOf("nation", "n_nationkey")),
-      ("supplier", rowsOf("supplier", "s_suppkey")))
-    val cycEdges = Seq(
-      (0, 1, d(("lineitem", "l_orderkey"), ("orders", "o_orderkey"))),
-      (1, 2, d(("orders", "o_custkey"), ("customer", "c_custkey"))),
-      (2, 3, d(("customer", "c_nationkey"), ("nation", "n_nationkey"))),
-      (3, 4, d(("nation", "n_nationkey"), ("supplier", "s_nationkey"))),
-      (4, 0, d(("supplier", "s_suppkey"), ("lineitem", "l_suppkey"))))
-    val cycDp = dpCcp(cycTables, cycEdges)
-    def predCyc(mask: Int): (Seq[Int], Long) = {
-      val cell = cycDp(mask)
-      if (cell.crossEdges.isEmpty) (Seq.empty[Int], 0L)
-      else joinExch(predCyc(cell.leftMask), predCyc(cell.rightMask),
-        cell.crossEdges.map(CycleKeyClasses).distinct.sorted)
-    }
-    def predLeftDeep(edges: Seq[(Int, Int, Long)],
-                     classes: Seq[Int]): Long =
-      (1 until 5).foldLeft((Seq.empty[Int], 0L)) { case (acc, k) =>
-        val priorMask = (1 << k) - 1
-        val cs = edges.indices.filter { e =>
-          val (a, b, _) = edges(e)
-          (a == k && (priorMask & (1 << b)) != 0) ||
-            (b == k && (priorMask & (1 << a)) != 0)
-        }
-        joinExch(acc, (Seq.empty[Int], 0L), cs.map(classes).distinct.sorted)
-      }._2
-    def prefixCost(est: Int => Long): Long =
-      (1 to 4).map(k => est((1 << (k + 1)) - 1)).sum
-    val rows = Seq(
-      ("star", "chosen", starDp(full).cost, starDp(full).plan,
-        predStar(full)._2),
-      ("star", "left_deep", prefixCost(m => starDp(m).est),
-        "((((lineitem*orders)*customer)*part)*supplier)",
-        predLeftDeep(starEdges, Seq(0, 1, 2, 3))),
-      ("cycle", "chosen", cycDp(full).cost, cycDp(full).plan,
-        predCyc(full)._2),
-      ("cycle", "left_deep", prefixCost(m => cycDp(m).est),
-        "((((lineitem*orders)*customer)*nation)*supplier)",
-        predLeftDeep(cycEdges, CycleKeyClasses)))
     import spark.implicits._
-    rows.map { case (g, a, c, p, x) => (g, a, c, p, x, x) }
+    exchangeModelArms(new EnumFixture(spark, dir))
+      .map { case (g, a, c, p, x, _) => (g, a, c, p, x, x) }
       .toDF("graph", "arm", "cout_cost", "plan", "n_shuffle_predicted",
         "n_sort_predicted")
   }
@@ -3915,25 +3256,12 @@ object Relational {
     * cardinalities deciding how much moves, learned widths deciding
     * whether it fits. */
   def plannedStarQueryBytes(spark: SparkSession, dir: String): DataFrame = {
-    val statRows = ensureTableStats(spark, dir)
-      .select(col("table_name"), col("column_name"), col("n_rows"),
-        col("ndv"), col("avg_width")).collect()
-    val stats = statRows
-      .map(r => (r.getString(0), r.getString(1)) ->
-        (r.getLong(2), r.getLong(3)))
-      .toMap
-    def rowsOf(t: String, c: String): Long = stats((t, c))._1
-    def ndvOf(t: String, c: String): Long = stats((t, c))._2
-    val widthOf: Map[String, Long] = statRows
-      .groupBy(_.getString(0))
-      .map { case (t, rs) =>
-        t -> rs.map(r => math.round(r.getDouble(4) * 1000000.0)).sum
-      }
-    val names = Seq("lineitem", "orders", "customer", "nation", "supplier")
-    val storeW = names.map(widthOf)
+    val fx = new EnumFixture(spark, dir)
+    val g = fx.cycle
+    val storeW = g.tables.map(t => fx.widthE6(t._1))
     val wideW = storeW.updated(2, ByteGatePlantedWidthE6)
     val limE6 = PhysBroadcastLimitRows * storeW.head
-    val li = Tables.lineitem(spark, dir)
+    val li = fx.cycleDfs.head
     val hist = ensureLiKeyHist(spark, dir)
     val (lo, hi) = liKeyBounds(hist)
     val d = hi - lo + 1L
@@ -3944,33 +3272,8 @@ object Relational {
     val fr = feedbackFreshness(spark, root, "l_orderkey_mod2_eq")
     val corrUsed =
       if (fr.stale || fr.nTicks == 0L) 1000000L else fr.pooledE6
-    val edges = Seq(
-      (0, 1, math.max(ndvOf("lineitem", "l_orderkey"),
-        ndvOf("orders", "o_orderkey"))),
-      (1, 2, math.max(ndvOf("orders", "o_custkey"),
-        ndvOf("customer", "c_custkey"))),
-      (2, 3, math.max(ndvOf("customer", "c_nationkey"),
-        ndvOf("nation", "n_nationkey"))),
-      (3, 4, math.max(ndvOf("nation", "n_nationkey"),
-        ndvOf("supplier", "s_nationkey"))),
-      (4, 0, math.max(ndvOf("supplier", "s_suppkey"),
-        ndvOf("lineitem", "l_suppkey"))))
-    val restRows = Seq(
-      ("orders", rowsOf("orders", "o_orderkey")),
-      ("customer", rowsOf("customer", "c_custkey")),
-      ("nation", rowsOf("nation", "n_nationkey")),
-      ("supplier", rowsOf("supplier", "s_suppkey")))
-    val dfsRest = Seq(Tables.orders(spark, dir),
-      Tables.customer(spark, dir), Tables.nation(spark, dir),
-      Tables.supplier(spark, dir))
-    val conds = Seq(
-      col("l_orderkey") === col("o_orderkey"),
-      col("o_custkey") === col("c_custkey"),
-      col("c_nationkey") === col("n_nationkey"),
-      col("n_nationkey") === col("s_nationkey"),
-      col("s_suppkey") === col("l_suppkey"))
-    val fullMask = 31
-    val out = parFlatMap(predDefs) { case (label, pLo, pHi) =>
+    val fullMask = g.fullMask
+    val out = DriverLegs.map(spark, predDefs) { case (label, pLo, pHi) =>
       val pred = spark.range(1).select(lit(0L).as("pred_id"),
         lit(pLo).as("p_lo"), lit(pHi).as("p_hi"))
       val estE6 = estimateRanges(pred, hist, "est_e6")
@@ -3978,63 +3281,25 @@ object Relational {
       val estDefE6 = estE6 / DefaultExprSelectivityDenom
       val estFb =
         math.max(1L, feedbackCorrected(estDefE6, corrUsed) / 1000000L)
-      val tables = ("lineitem", estFb) +: restRows
-      val dpS = dpCcpUnified(tables, edges, CycleKeyClasses,
+      val gFb = JoinGraph(g.tables.updated(0, ("lineitem", estFb)), g.edges)
+      val dpS = dpCcpUnified(gFb, CycleKeyClasses,
         widthsE6 = storeW, bcastLimitBytesE6 = limE6)
-      val dpW = dpCcpUnified(tables, edges, CycleKeyClasses,
+      val dpW = dpCcpUnified(gFb, CycleKeyClasses,
         widthsE6 = wideW, bcastLimitBytesE6 = limE6)
-      def winnerOf(dp: Map[(Int, Seq[Int]), UniDpCell]): UniDpCell =
-        dp.collect { case ((m, _), c) if m == fullMask => c }
-          .minBy(c => (c.cost, c.part.mkString(",")))
-      val wS = winnerOf(dpS)
-      val wW = winnerOf(dpW)
+      val wS = unifiedWinner(dpS, fullMask)
+      val wW = unifiedWinner(dpW, fullMask)
       val differ =
         (wS.plan, wS.part, wS.op, wS.nShuffleExch, wS.nBcastExch) !=
           (wW.plan, wW.part, wW.op, wW.nShuffleExch, wW.nBcastExch)
       val liF = li.filter(col("l_orderkey").cast("long")
         .between(pLo, pHi) &&
         pmod(col("l_orderkey").cast("long"), lit(2L)) === 1L)
-      def build(ds: Seq[DataFrame], mask: Int,
-                part: Seq[Int]): DataFrame = {
-        val cell = dpS((mask, part))
-        if (cell.op == "leaf")
-          ds(java.lang.Integer.numberOfTrailingZeros(mask))
-        else {
-          var l = build(ds, cell.leftMask, cell.leftPart)
-          var r = build(ds, cell.rightMask, cell.rightPart)
-          cell.op match {
-            case "broadcast_right" => r = broadcast(r)
-            case "broadcast_left" => l = broadcast(l)
-            case _ => l = l.hint("merge"); r = r.hint("merge")
-          }
-          l.join(r, cell.crossEdges.map(conds).reduce(_ && _))
-        }
-      }
-      def agg(full: DataFrame): (Long, Long, Long) = {
-        val r = full.agg(count(lit(1)),
-          sum(col("l_quantity").cast("long")),
-          sum(col("s_suppkey").cast("long"))).head()
-        (r.getLong(0),
-          if (r.isNullAt(1)) 0L else r.getLong(1),
-          if (r.isNullAt(2)) 0L else r.getLong(2))
-      }
-      val answer = agg(build(liF +: dfsRest, fullMask, wS.part))
-      val li8 = liF.filter(
-        pmod(col("l_orderkey").cast("long"), lit(8L)) === 1L)
-      val ord8 = dfsRest.head.filter(
-        pmod(col("o_orderkey").cast("long"), lit(8L)) === 1L)
-      val dfs8 = li8 +: ord8 +: dfsRest.drop(1)
-      val leftDeep8 = (1 until 5).foldLeft(dfs8.head) { (acc, k) =>
-        val priorMask = (1 << k) - 1
-        val cs = edges.indices.filter { e =>
-          val (a, b, _) = edges(e)
-          (a == k && (priorMask & (1 << b)) != 0) ||
-            (b == k && (priorMask & (1 << a)) != 0)
-        }
-        acc.join(dfs8(k), cs.map(conds).reduce(_ && _))
-      }
-      val identical =
-        agg(build(dfs8, fullMask, wS.part)) == agg(leftDeep8)
+      val winner = uniTree(dpS, fullMask, wS.part, hinted = true)
+      val dfsF = liF +: fx.cycleDfs.tail
+      val answer = answerAgg(fx.runCycle(winner, dfsF), "s_suppkey")
+      val dfs8 = sample8(dfsF)
+      val identical = answerAgg(fx.runCycle(winner, dfs8), "s_suppkey") ==
+        answerAgg(fx.runCycle(JoinTree.leftDeep(g), dfs8), "s_suppkey")
       // the STORE-width arm's full state table (the production arm),
       // with both arms' winners on every row
       dpS.toSeq
@@ -4042,13 +3307,11 @@ object Relational {
           (java.lang.Integer.bitCount(m), m, p.mkString(","))
         }
         .map { case ((m, p), cell) =>
-          val subset = names.indices.filter(i => (m & (1 << i)) != 0)
-            .map(names).mkString(",")
-          val w = names.indices.filter(i => (m & (1 << i)) != 0)
+          val w = storeW.indices.filter(i => (m & (1 << i)) != 0)
             .map(storeW).max
           org.apache.spark.sql.Row(
             label, pLo, pHi, estE6, estDefE6, corrUsed, estFb, limE6,
-            subset, partLabel(p, CycleClassNames),
+            g.subsetLabel(m), partLabel(p, CycleClassNames),
             java.lang.Integer.bitCount(m).toLong, cell.est, w,
             cell.cost, cell.op, cell.nShuffleExch, cell.nBcastExch,
             cell.plan,
@@ -4058,7 +3321,7 @@ object Relational {
             wW.nShuffleExch, wW.nBcastExch, wW.plan,
             differ, answer._1, answer._2, answer._3, identical)
         }
-    }
+    }.flatten
     import org.apache.spark.sql.types._
     def f(nm: String, t: DataType) = StructField(nm, t)
     val schema = StructType(Seq(
@@ -4089,353 +3352,10 @@ object Relational {
       schema)
   }
 
-  /** One state of the EXCHANGE-AWARE enumeration, keyed by (subset,
-    * output partitioning): estimated cardinality, best total cost
-    * (C_out + γ·exchanged rows), the winning split's components and
-    * the partitioning STATE each side was consumed in, every cross
-    * edge, the state's own output partitioning (sorted distinct
-    * key classes), the number of Exchange nodes the priced tree
-    * inserts, and the plan string. */
-  private[graft] case class ExchDpCell(est: Long, cost: Long,
-                                       leftMask: Int, rightMask: Int,
-                                       leftPart: Seq[Int],
-                                       rightPart: Seq[Int],
-                                       crossEdges: Seq[Int],
-                                       part: Seq[Int], nExchanges: Long,
-                                       plan: String)
-
-  /** The csg-cmp enumeration with INTERESTING PARTITIONINGS — the
-    * other half of Selinger 1979 ([[dpCcp]] prices cardinality,
-    * [[selingerPhysicalDp]] prices operators; this DP prices the
-    * EXCHANGES q253 measures). Cells are keyed by (subset, output
-    * partitioning): a join's output is hash-partitioned on its
-    * key-class set, and a later join on the SAME classes consumes it
-    * without a new Exchange — the tree q249 chooses on the Q5 cycle
-    * does exactly this (supplier and customer both join on nationkey,
-    * 7 exchanges vs left-deep's 8, measured). Per candidate split of
-    * a connected subset (ascending-S1 proper submasks, the dpCcp
-    * order), with requirement K = the cross edges' distinct sorted
-    * key classes, each side is consumed EITHER in its (side, K) state
-    * (reuse: no exchange) OR in its cheapest state re-exchanged
-    * (+γ·est(side) cost, +1 Exchange) — any other state pays the same
-    * exchange as the cheapest, so two options suffice; ties prefer
-    * reuse, cheapest-state ties break on the partitioning label (the
-    * oracle's deterministic order). cost = Σ sides + est(S); the
-    * candidate lands in the (S, K) cell, first-minimal across
-    * candidates. Leaves are unpartitioned single states. γ =
-    * `gammaE2`/100 with the same single-BigInt-division discipline as
-    * β; γ = 0 makes every state's cost collapse to C_out. The full
-    * set's winner is the min-cost state across partitionings (ties on
-    * the label).
-    *
-    * Exposed for the planted-flip spec; consumed by q254. */
-  private[graft] def dpCcpExchange(tables: Seq[(String, Long)],
-                                   edges: Seq[(Int, Int, Long)],
-                                   keyClasses: Seq[Int],
-                                   gammaE2: Long = 100L)
-      : Map[(Int, Seq[Int]), ExchDpCell] = {
-    val n = tables.length
-    require(n >= 2 && n <= 12, s"need 2..12 tables; got $n")
-    require(keyClasses.length == edges.length && gammaE2 >= 0L,
-      s"need one key class per edge and non-negative gamma")
-    require(edges.nonEmpty && edges.forall { case (a, b, d) =>
-      a >= 0 && a < n && b >= 0 && b < n && a != b && d > 0
-    }, s"edges must connect distinct in-range tables with positive divisors")
-    def inMask(i: Int, mask: Int): Boolean = (mask & (1 << i)) != 0
-    def induced(mask: Int): Seq[Int] = edges.indices.filter { e =>
-      inMask(edges(e)._1, mask) && inMask(edges(e)._2, mask)
-    }
-    def connected(mask: Int): Boolean = {
-      if (mask == 0) return false
-      val seed = java.lang.Integer.numberOfTrailingZeros(mask)
-      var comp = 1 << seed
-      var frontier = List(seed)
-      while (frontier.nonEmpty) {
-        val v = frontier.head; frontier = frontier.tail
-        edges.foreach { case (a, b, _) =>
-          val next = if (a == v) b else if (b == v) a else -1
-          if (next >= 0 && inMask(next, mask) && !inMask(next, comp)) {
-            comp |= 1 << next
-            frontier = next :: frontier
-          }
-        }
-      }
-      comp == mask
-    }
-    def est(mask: Int): Long = {
-      val num = tables.indices.filter(inMask(_, mask))
-        .map(i => BigInt(tables(i)._2)).product
-      val den = induced(mask).map(e => BigInt(edges(e)._3)).product
-      (num / den).toLong
-    }
-    def gammaCost(rows: Long): Long =
-      (BigInt(rows) * BigInt(gammaE2) / BigInt(100L)).toLong
-    val byMask = scala.collection.mutable
-      .Map.empty[Int, scala.collection.mutable.LinkedHashMap[Seq[Int], ExchDpCell]]
-    tables.indices.foreach { i =>
-      val st = scala.collection.mutable.LinkedHashMap[Seq[Int], ExchDpCell](
-        (Seq.empty[Int]: Seq[Int]) -> ExchDpCell(tables(i)._2, 0L, 0, 0,
-          Nil, Nil, Nil, Nil, 0L, tables(i)._1))
-      byMask(1 << i) = st
-    }
-    // one side of a candidate: (cost incl. any exchange, the state's
-    // partitioning consumed, cumulative exchange count, plan)
-    def pick(s: Int, k: Seq[Int]): (Long, Seq[Int], Long, String) = {
-      val states = byMask(s)
-      val (minP, minC) = states.minBy { case (p, c) =>
-        (c.cost, p.mkString(","))
-      }
-      val fresh = (minC.cost + gammaCost(minC.est), minP,
-        minC.nExchanges + 1L, minC.plan)
-      states.get(k) match {
-        case Some(r) if r.cost <= fresh._1 =>
-          (r.cost, k, r.nExchanges, r.plan)
-        case _ => fresh
-      }
-    }
-    (3 to (1 << n) - 1).foreach { mask =>
-      if (java.lang.Integer.bitCount(mask) >= 2 && connected(mask)) {
-        val low = 1 << java.lang.Integer.numberOfTrailingZeros(mask)
-        val eMask = est(mask)
-        val subs = scala.collection.mutable.ArrayBuffer.empty[Int]
-        var sub = (mask - 1) & mask
-        while (sub != 0) { subs += sub; sub = (sub - 1) & mask }
-        val cell = scala.collection.mutable
-          .LinkedHashMap.empty[Seq[Int], ExchDpCell]
-        subs.reverseIterator.foreach { s1 =>
-          val s2 = mask & ~s1
-          if ((s1 & low) != 0 && byMask.contains(s1) &&
-              byMask.contains(s2)) {
-            val cross = edges.indices.filter { e =>
-              val (a, b, _) = edges(e)
-              (inMask(a, s1) && inMask(b, s2)) ||
-                (inMask(a, s2) && inMask(b, s1))
-            }
-            if (cross.nonEmpty) {
-              val k = cross.map(keyClasses).distinct.sorted
-              val (lc, lp, ln, lplan) = pick(s1, k)
-              val (rc, rp, rn, rplan) = pick(s2, k)
-              val cost = lc + rc + eMask
-              val existing = cell.get(k)
-              if (existing.forall(cost < _.cost))
-                cell(k) = ExchDpCell(eMask, cost, s1, s2, lp, rp, cross,
-                  k, ln + rn, s"($lplan*$rplan)")
-            }
-          }
-        }
-        require(cell.nonEmpty, s"connected subset $mask has no split")
-        byMask(mask) = cell
-      }
-    }
-    byMask.toMap.flatMap { case (m, states) =>
-      states.map { case (p, c) => (m, p) -> c }
-    }
-  }
-
-  /** One state of the UNIFIED physical enumeration (operators AND
-    * partitionings in one DP), keyed by (subset, output partitioning):
-    * estimate, best total cost, the winning split's components and the
-    * partitioning STATE each side was consumed in, the join operator
-    * ("shuffle" | "broadcast_left" | "broadcast_right" — the named
-    * side SHIPS; "leaf" for singles), every cross edge, the output
-    * partitioning, the shuffle- and broadcast-Exchange counts of the
-    * priced tree, and the plan string. */
-  private[graft] case class UniDpCell(est: Long, cost: Long,
-                                      leftMask: Int, rightMask: Int,
-                                      leftPart: Seq[Int],
-                                      rightPart: Seq[Int], op: String,
-                                      crossEdges: Seq[Int],
-                                      part: Seq[Int], nShuffleExch: Long,
-                                      nBcastExch: Long, plan: String)
-
-  /** The sentinel cost of a physically unavailable candidate (a
-    * broadcast whose ship side exceeds the threshold): large enough to
-    * never win, small enough that sums of a few never overflow — and a
-    * plain literal the oracle replays. */
-  private[graft] val UniSentinelCost = 1000000000000000L
-
-  /** The UNIFIED physical Selinger enumeration — J31's operator
-    * dimension and J32's partitioning dimension priced in ONE DP
-    * ([[selingerPhysicalDp]] chooses operators but can't see
-    * partitioning reuse; [[dpCcpExchange]] prices reuse but only under
-    * SMJ; a real optimizer needs both, because a broadcast join both
-    * skips the shuffle AND PRESERVES its stream side's partitioning).
-    * States are (connected subset, output partitioning); per candidate
-    * split (ascending S1, dpCcp order) THREE operator families are
-    * enumerated, in this pinned order:
-    *
-    *  1. SHUFFLE: both sides re-partition on K = the cross edges'
-    *     distinct classes (reuse-or-cheapest per side, the J32 rule);
-    *     output partitioning K; δ·est(side) per fresh side, +1
-    *     shuffle Exchange each.
-    *  2. BROADCAST-RIGHT (ship S2, stream S1): one candidate per S1
-    *     state P (label order) — S2 consumed in its cheapest state
-    *     and shipped (δ·est(S2), +1 broadcast Exchange), output
-    *     partitioning P (the stream side's, PRESERVED — the term no
-    *     prior DP could express); available only when est(S2) ≤
-    *     `bcastLimit`, else the candidate costs [[UniSentinelCost]].
-    *  3. BROADCAST-LEFT: symmetric.
-    *
-    * First-minimal ties across candidates per output state; winner =
-    * min cost across the full set's states, ties on the label. With
-    * bcastLimit < 0 every broadcast candidate is sentinel-priced and
-    * the winner reduces to [[dpCcpExchange]]'s (spec-pinned). Exposed
-    * for the planted-flip spec; consumed by q255. */
-  private[graft] def dpCcpUnified(tables: Seq[(String, Long)],
-                                  edges: Seq[(Int, Int, Long)],
-                                  keyClasses: Seq[Int],
-                                  bcastLimit: Long = PhysBroadcastLimitRows,
-                                  deltaE2: Long = 100L,
-                                  widthsE6: Seq[Long] = Nil,
-                                  bcastLimitBytesE6: Long = -1L)
-      : Map[(Int, Seq[Int]), UniDpCell] = {
-    val n = tables.length
-    require(n >= 2 && n <= 10, s"need 2..10 tables; got $n")
-    require(keyClasses.length == edges.length && deltaE2 >= 0L,
-      s"need one key class per edge and non-negative delta")
-    // BYTE-form gate (J35/q257): when per-table row widths are given
-    // (bytes in millionths — the ANALYZE store's Σ avg_width), a ship
-    // side is eligible iff est_rows × width(bytes) ≤ the byte limit —
-    // rows are what the estimator knows, bytes are what OOM the build
-    // side. A SUBSET's width is the MAX of its members' — the
-    // dominant-column model: one wide dimension still poisons every
-    // superset that carries its columns (the q237 hazard, priced),
-    // and uniform widths w with limitBytes = rowLimit × w reduce
-    // EXACTLY to the row form cell for cell (Σ would be marginally
-    // more precise on composite ships but gates a k-way uniform join
-    // k× tighter than the row form it generalizes — the audit emits
-    // the Σ next to the max for the record).
-    require(widthsE6.isEmpty ||
-      (widthsE6.length == n && widthsE6.forall(_ > 0L)),
-      s"need one positive width per table; got $widthsE6")
-    require(edges.nonEmpty && edges.forall { case (a, b, d) =>
-      a >= 0 && a < n && b >= 0 && b < n && a != b && d > 0
-    }, s"edges must connect distinct in-range tables with positive divisors")
-    def inMask(i: Int, mask: Int): Boolean = (mask & (1 << i)) != 0
-    def induced(mask: Int): Seq[Int] = edges.indices.filter { e =>
-      inMask(edges(e)._1, mask) && inMask(edges(e)._2, mask)
-    }
-    def connected(mask: Int): Boolean = {
-      if (mask == 0) return false
-      val seed = java.lang.Integer.numberOfTrailingZeros(mask)
-      var comp = 1 << seed
-      var frontier = List(seed)
-      while (frontier.nonEmpty) {
-        val v = frontier.head; frontier = frontier.tail
-        edges.foreach { case (a, b, _) =>
-          val next = if (a == v) b else if (b == v) a else -1
-          if (next >= 0 && inMask(next, mask) && !inMask(next, comp)) {
-            comp |= 1 << next
-            frontier = next :: frontier
-          }
-        }
-      }
-      comp == mask
-    }
-    def est(mask: Int): Long = {
-      val num = tables.indices.filter(inMask(_, mask))
-        .map(i => BigInt(tables(i)._2)).product
-      val den = induced(mask).map(e => BigInt(edges(e)._3)).product
-      (num / den).toLong
-    }
-    def move(rows: Long): Long =
-      (BigInt(rows) * BigInt(deltaE2) / BigInt(100L)).toLong
-    def widthE6(mask: Int): Long =
-      widthsE6.indices.filter(inMask(_, mask)).map(widthsE6).max
-    def eligible(mask: Int, est: Long): Boolean =
-      if (widthsE6.nonEmpty)
-        BigInt(est) * BigInt(widthE6(mask)) <= BigInt(bcastLimitBytesE6)
-      else est <= bcastLimit
-    val byMask = scala.collection.mutable.Map.empty[Int,
-      scala.collection.mutable.LinkedHashMap[Seq[Int], UniDpCell]]
-    tables.indices.foreach { i =>
-      byMask(1 << i) = scala.collection.mutable.LinkedHashMap(
-        (Seq.empty[Int]: Seq[Int]) -> UniDpCell(tables(i)._2, 0L, 0, 0,
-          Nil, Nil, "leaf", Nil, Nil, 0L, 0L, tables(i)._1))
-    }
-    def statesSorted(s: Int): Seq[(Seq[Int], UniDpCell)] =
-      byMask(s).toSeq.sortBy(_._1.mkString(","))
-    def minState(s: Int): (Seq[Int], UniDpCell) =
-      byMask(s).minBy { case (p, c) => (c.cost, p.mkString(",")) }
-    // one shuffled side: (cost incl. exchange, consumed part, sh, bc, plan)
-    def pick(s: Int, k: Seq[Int]): (Long, Seq[Int], Long, Long, String) = {
-      val (minP, minC) = minState(s)
-      val fresh = (minC.cost + move(minC.est), minP,
-        minC.nShuffleExch + 1L, minC.nBcastExch, minC.plan)
-      byMask(s).get(k) match {
-        case Some(r) if r.cost <= fresh._1 =>
-          (r.cost, k, r.nShuffleExch, r.nBcastExch, r.plan)
-        case _ => fresh
-      }
-    }
-    (3 to (1 << n) - 1).foreach { mask =>
-      if (java.lang.Integer.bitCount(mask) >= 2 && connected(mask)) {
-        val low = 1 << java.lang.Integer.numberOfTrailingZeros(mask)
-        val eMask = est(mask)
-        val cell = scala.collection.mutable
-          .LinkedHashMap.empty[Seq[Int], UniDpCell]
-        def upd(c: UniDpCell): Unit =
-          if (cell.get(c.part).forall(c.cost < _.cost)) cell(c.part) = c
-        val subs = scala.collection.mutable.ArrayBuffer.empty[Int]
-        var sub = (mask - 1) & mask
-        while (sub != 0) { subs += sub; sub = (sub - 1) & mask }
-        subs.reverseIterator.foreach { s1 =>
-          val s2 = mask & ~s1
-          if ((s1 & low) != 0 && byMask.contains(s1) &&
-              byMask.contains(s2)) {
-            val cross = edges.indices.filter { e =>
-              val (a, b, _) = edges(e)
-              (inMask(a, s1) && inMask(b, s2)) ||
-                (inMask(a, s2) && inMask(b, s1))
-            }
-            if (cross.nonEmpty) {
-              val k = cross.map(keyClasses).distinct.sorted
-              val (lc, lp, lsh, lbc, lplan) = pick(s1, k)
-              val (rc, rp, rsh, rbc, rplan) = pick(s2, k)
-              upd(UniDpCell(eMask, lc + rc + eMask, s1, s2, lp, rp,
-                "shuffle", cross, k, lsh + rsh, lbc + rbc,
-                s"($lplan*$rplan)"))
-              val (e1, e2) = (byMask(s1).head._2.est, byMask(s2).head._2.est)
-              val (m1p, m1c) = minState(s1)
-              val (m2p, m2c) = minState(s2)
-              // ship S2, stream S1 in each of its states
-              statesSorted(s1).foreach { case (p1, c1) =>
-                val cost =
-                  if (eligible(s2, e2)) c1.cost + m2c.cost + eMask + move(e2)
-                  else UniSentinelCost
-                upd(UniDpCell(eMask, cost, s1, s2, p1, m2p,
-                  "broadcast_right", cross, p1,
-                  c1.nShuffleExch + m2c.nShuffleExch,
-                  c1.nBcastExch + m2c.nBcastExch + 1L,
-                  s"(${c1.plan}*${m2c.plan})"))
-              }
-              // ship S1, stream S2 in each of its states
-              statesSorted(s2).foreach { case (p2, c2) =>
-                val cost =
-                  if (eligible(s1, e1)) m1c.cost + c2.cost + eMask + move(e1)
-                  else UniSentinelCost
-                upd(UniDpCell(eMask, cost, s1, s2, m1p, p2,
-                  "broadcast_left", cross, p2,
-                  m1c.nShuffleExch + c2.nShuffleExch,
-                  m1c.nBcastExch + c2.nBcastExch + 1L,
-                  s"(${m1c.plan}*${c2.plan})"))
-              }
-            }
-          }
-        }
-        require(cell.nonEmpty, s"connected subset $mask has no split")
-        byMask(mask) = cell
-      }
-    }
-    byMask.toMap.flatMap { case (m, states) =>
-      states.map { case (p, c) => (m, p) -> c }
-    }
-  }
-
-  /** The Q5 cycle's key-class names, indexed by the class ids
-    * [[cboExchangeEnumerationAudit]] and the q253 probe share:
-    * edges (l–o, o–c, c–n, n–s, s–l) have classes (0, 1, 2, 2, 3) —
-    * the two nation edges share the nationkey class. */
+  /** The Q5 cycle's key-class names, indexed by the class ids the q253
+    * probe and the q254/q255 enumerations share: edges (l–o, o–c, c–n,
+    * n–s, s–l) have classes (0, 1, 2, 2, 3) — the two nation edges share
+    * the nationkey class. */
   private[graft] val CycleKeyClasses = Seq(0, 1, 2, 2, 3)
   private[graft] val CycleClassNames =
     Seq("orderkey", "custkey", "nationkey", "suppkey")
@@ -4447,28 +3367,31 @@ object Relational {
     * the full Selinger coupling, closing the arc q253 opened. q253
     * MEASURED that C_out cannot see exchanges (the Q5 winner's dim
     * chain reuses the nationkey partitioning: 7 Exchange nodes vs
-    * left-deep's 8); this row makes the enumerator PRICE them —
-    * [[dpCcpExchange]] keys DP states by (connected subset, output
+    * left-deep's 8); this row makes the enumerator PRICE them — the
+    * exchange-aware DP keys states by (connected subset, output
     * partitioning), charges γ·|rows| per re-exchange under exactly the
     * model q253's spec proved equal to Spark's EnsureRequirements
-    * ([[joinExch]]), and lets a later join consume an
-    * already-partitioned side for free. The audit runs the DP TWICE on
-    * the ANALYZE-store Q5 cycle — γ = 1 and γ = 0 (pure C_out pricing;
-    * its winner cost is spec-pinned equal to q249's dpCcp) — and
-    * emits the ENTIRE γ=1 state table: one row per (connected subset,
-    * output partitioning) with estimate, total cost, the number of
-    * Exchange nodes the priced tree inserts, and the plan, plus the
-    * winner of each pricing and `winners_differ` (honestly false on
-    * the natural fixture — the C_out winner already owns the
-    * nationkey reuse; the spec plants stats where the γ term flips
-    * the tree to KEEP the (customer*nation)*supplier reuse a C_out
-    * enumerator discards). Executed proof: the γ=1 winner runs FULL
-    * size (every cross-edge predicate applied, the q249 discipline),
-    * both it and the canonical left-deep run on the 1/8 key
-    * partition, identity emitted. The oracle is GENERATED by
-    * replaying the state DP symbolically — both γ instantiations,
-    * reuse-vs-fresh side CASEs, per-mask min-state helpers with
-    * label-ordered ties, first-minimal split chains — zero
+    * ([[graft.optimizer.JoinEnumeration.joinExch]]), and lets a later join
+    * consume an already-partitioned side for free. That DP is
+    * [[graft.optimizer.JoinEnumeration.dpCcpUnified]] with broadcast
+    * disabled (bcastLimit −1, δ = γ) minus its sentinel-cost states — the
+    * shuffle-only states, cell for cell (spec-pinned against the reference
+    * exchange DP in `JoinEnumerationSpec`). The audit runs it TWICE on the
+    * ANALYZE-store Q5 cycle — γ = 1 and γ = 0 (pure C_out pricing; its
+    * winner cost is spec-pinned equal to q249's dpCcp) — and emits the
+    * ENTIRE γ=1 state table: one row per (connected subset, output
+    * partitioning) with estimate, total cost, the number of Exchange
+    * nodes the priced tree inserts, and the plan, plus the winner of
+    * each pricing and `winners_differ` (honestly false on the natural
+    * fixture — the C_out winner already owns the nationkey reuse; the
+    * spec plants stats where the γ term flips the tree to KEEP the
+    * (customer*nation)*supplier reuse a C_out enumerator discards).
+    * Executed proof: the γ=1 winner runs FULL size (every cross-edge
+    * predicate applied, the q249 discipline), both it and the canonical
+    * left-deep run on the 1/8 key partition, identity emitted. The
+    * oracle is GENERATED by replaying the state DP symbolically — both
+    * γ instantiations, reuse-vs-fresh side CASEs, per-mask min-state
+    * helpers with label-ordered ties, first-minimal split chains — zero
     * transcription risk.
     *
     * Scale: states per subset are bounded by the distinct cross-class
@@ -4478,94 +3401,32 @@ object Relational {
     * pricing what the cluster MOVES. */
   def cboExchangeEnumerationAudit(spark: SparkSession,
                                   dir: String): DataFrame = {
-    val stats = ensureTableStats(spark, dir)
-      .select(col("table_name"), col("column_name"), col("n_rows"),
-        col("ndv")).collect()
-      .map(r => (r.getString(0), r.getString(1)) ->
-        (r.getLong(2), r.getLong(3)))
-      .toMap
-    def rowsOf(t: String, c: String): Long = stats((t, c))._1
-    def ndvOf(t: String, c: String): Long = stats((t, c))._2
-    val tables = Seq(
-      ("lineitem", rowsOf("lineitem", "l_orderkey")),
-      ("orders", rowsOf("orders", "o_orderkey")),
-      ("customer", rowsOf("customer", "c_custkey")),
-      ("nation", rowsOf("nation", "n_nationkey")),
-      ("supplier", rowsOf("supplier", "s_suppkey")))
-    val edges = Seq(
-      (0, 1, math.max(ndvOf("lineitem", "l_orderkey"),
-        ndvOf("orders", "o_orderkey"))),
-      (1, 2, math.max(ndvOf("orders", "o_custkey"),
-        ndvOf("customer", "c_custkey"))),
-      (2, 3, math.max(ndvOf("customer", "c_nationkey"),
-        ndvOf("nation", "n_nationkey"))),
-      (3, 4, math.max(ndvOf("nation", "n_nationkey"),
-        ndvOf("supplier", "s_nationkey"))),
-      (4, 0, math.max(ndvOf("supplier", "s_suppkey"),
-        ndvOf("lineitem", "l_suppkey"))))
-    val dpEx = dpCcpExchange(tables, edges, CycleKeyClasses)
-    val dpC0 = dpCcpExchange(tables, edges, CycleKeyClasses, gammaE2 = 0L)
-    val fullMask = (1 << tables.length) - 1
-    def winnerOf(dp: Map[(Int, Seq[Int]), ExchDpCell]): ExchDpCell =
-      dp.collect { case ((m, _), c) if m == fullMask => c }
-        .minBy(c => (c.cost, c.part.mkString(",")))
-    val win = winnerOf(dpEx)
-    val winC0 = winnerOf(dpC0)
+    val fx = new EnumFixture(spark, dir)
+    val g = fx.cycle
+    def exchangeDp(gammaE2: Long) =
+      dpCcpUnified(g, CycleKeyClasses, bcastLimit = -1L, deltaE2 = gammaE2)
+        .filter(_._2.cost != UniSentinelCost)
+    val dpEx = exchangeDp(100L)
+    val fullMask = g.fullMask
+    val win = unifiedWinner(dpEx, fullMask)
+    val winC0 = unifiedWinner(exchangeDp(0L), fullMask)
     val differ = win.plan != winC0.plan
-    val dfs = Seq(Tables.lineitem(spark, dir), Tables.orders(spark, dir),
-      Tables.customer(spark, dir), Tables.nation(spark, dir),
-      Tables.supplier(spark, dir))
-    val conds = Seq(
-      col("l_orderkey") === col("o_orderkey"),
-      col("o_custkey") === col("c_custkey"),
-      col("c_nationkey") === col("n_nationkey"),
-      col("n_nationkey") === col("s_nationkey"),
-      col("s_suppkey") === col("l_suppkey"))
-    def build(ds: Seq[DataFrame], mask: Int, part: Seq[Int]): DataFrame = {
-      val cell = dpEx((mask, part))
-      if (cell.crossEdges.isEmpty)
-        ds(java.lang.Integer.numberOfTrailingZeros(mask))
-      else build(ds, cell.leftMask, cell.leftPart)
-        .join(build(ds, cell.rightMask, cell.rightPart),
-          cell.crossEdges.map(conds).reduce(_ && _))
-    }
-    def agg(full: DataFrame): (Long, Long, Long) = {
-      val r = full.agg(count(lit(1)), sum(col("l_quantity").cast("long")),
-        sum(col("s_suppkey").cast("long"))).head()
-      (r.getLong(0),
-        if (r.isNullAt(1)) 0L else r.getLong(1),
-        if (r.isNullAt(2)) 0L else r.getLong(2))
-    }
-    val answer = agg(build(dfs, fullMask, win.part))
-    val li8 = dfs.head.filter(
-      pmod(col("l_orderkey").cast("long"), lit(8L)) === 1L)
-    val ord8 = dfs(1).filter(
-      pmod(col("o_orderkey").cast("long"), lit(8L)) === 1L)
-    val dfs8 = li8 +: ord8 +: dfs.drop(2)
-    val leftDeep8 = (1 until tables.length).foldLeft(dfs8.head) {
-      (acc, k) =>
-        val priorMask = (1 << k) - 1
-        val cs = edges.indices.filter { e =>
-          val (a, b, _) = edges(e)
-          (a == k && (priorMask & (1 << b)) != 0) ||
-            (b == k && (priorMask & (1 << a)) != 0)
-        }
-        acc.join(dfs8(k), cs.map(conds).reduce(_ && _))
-    }
-    val identical = agg(build(dfs8, fullMask, win.part)) == agg(leftDeep8)
+    val winner = uniTree(dpEx, fullMask, win.part, hinted = false)
+    val answer = answerAgg(fx.runCycle(winner), "s_suppkey")
+    val dfs8 = sample8(fx.cycleDfs)
+    val identical = answerAgg(fx.runCycle(winner, dfs8), "s_suppkey") ==
+      answerAgg(fx.runCycle(JoinTree.leftDeep(g), dfs8), "s_suppkey")
     import spark.implicits._
     dpEx.toSeq
       .sortBy { case ((m, p), _) =>
         (java.lang.Integer.bitCount(m), m, p.mkString(","))
       }
       .map { case ((m, p), cell) =>
-        val names = tables.indices.filter(i => (m & (1 << i)) != 0)
-          .map(tables(_)._1).mkString(",")
-        (names, partLabel(p, CycleClassNames),
+        (g.subsetLabel(m), partLabel(p, CycleClassNames),
           java.lang.Integer.bitCount(m).toLong, cell.est, cell.cost,
-          cell.nExchanges, cell.plan,
+          cell.nShuffleExch, cell.plan,
           partLabel(win.part, CycleClassNames), win.cost,
-          win.nExchanges, win.plan, winC0.cost, winC0.plan, differ,
+          win.nShuffleExch, win.plan, winC0.cost, winC0.plan, differ,
           answer._1, answer._2, answer._3, identical)
       }
       .toDF("subset", "part", "n_tables", "est_rows", "cost",
@@ -4581,18 +3442,18 @@ object Relational {
     * joined, because the two interact: a broadcast join both SKIPS
     * the shuffle and PRESERVES its stream side's partitioning for a
     * later same-class join — a term neither prior DP could express
-    * ([[dpCcpUnified]]). The audit runs the DP on the ANALYZE-store
-    * Q5 cycle TWICE — the unified form (broadcast threshold 10 000
-    * rows, δ = 1 per moved row) and the broadcast-disabled form
-    * (bcastLimit −1, which reduces to J32's exchange DP, its winner
-    * spec-pinned equal) — and emits the ENTIRE unified state table:
-    * one row per (connected subset, output partitioning) with
-    * estimate, total cost, the cell's OPERATOR, its shuffle- and
-    * broadcast-Exchange counts, and plan (a physically unavailable
-    * state — broadcast-only with the ship side over the threshold —
-    * carries the declared sentinel cost, honestly emitted), plus both
-    * winners and `winners_differ` (on the natural fixture the same Q5
-    * tree wins but runs ALL-BROADCAST — cost 1 590 vs 9 255 at
+    * ([[graft.optimizer.JoinEnumeration.dpCcpUnified]]). The audit runs the
+    * DP on the ANALYZE-store Q5 cycle TWICE — the unified form (broadcast
+    * threshold 10 000 rows, δ = 1 per moved row) and the
+    * broadcast-disabled form (bcastLimit −1, which reduces to J32's
+    * exchange DP, its winner spec-pinned equal) — and emits the ENTIRE
+    * unified state table: one row per (connected subset, output
+    * partitioning) with estimate, total cost, the cell's OPERATOR, its
+    * shuffle- and broadcast-Exchange counts, and plan (a physically
+    * unavailable state — broadcast-only with the ship side over the
+    * threshold — carries the declared sentinel cost, honestly emitted),
+    * plus both winners and `winners_differ` (on the natural fixture the
+    * same Q5 tree wins but runs ALL-BROADCAST — cost 1 590 vs 9 255 at
     * sf0.001, 4 broadcast Exchanges vs 7 shuffles — and the spec
     * plants stats where broadcast-awareness changes the JOIN ORDER
     * itself). Executed proof: the unified winner runs FULL size with
@@ -4612,98 +3473,26 @@ object Relational {
     * them. */
   def cboUnifiedEnumerationAudit(spark: SparkSession,
                                  dir: String): DataFrame = {
-    val stats = ensureTableStats(spark, dir)
-      .select(col("table_name"), col("column_name"), col("n_rows"),
-        col("ndv")).collect()
-      .map(r => (r.getString(0), r.getString(1)) ->
-        (r.getLong(2), r.getLong(3)))
-      .toMap
-    def rowsOf(t: String, c: String): Long = stats((t, c))._1
-    def ndvOf(t: String, c: String): Long = stats((t, c))._2
-    val tables = Seq(
-      ("lineitem", rowsOf("lineitem", "l_orderkey")),
-      ("orders", rowsOf("orders", "o_orderkey")),
-      ("customer", rowsOf("customer", "c_custkey")),
-      ("nation", rowsOf("nation", "n_nationkey")),
-      ("supplier", rowsOf("supplier", "s_suppkey")))
-    val edges = Seq(
-      (0, 1, math.max(ndvOf("lineitem", "l_orderkey"),
-        ndvOf("orders", "o_orderkey"))),
-      (1, 2, math.max(ndvOf("orders", "o_custkey"),
-        ndvOf("customer", "c_custkey"))),
-      (2, 3, math.max(ndvOf("customer", "c_nationkey"),
-        ndvOf("nation", "n_nationkey"))),
-      (3, 4, math.max(ndvOf("nation", "n_nationkey"),
-        ndvOf("supplier", "s_nationkey"))),
-      (4, 0, math.max(ndvOf("supplier", "s_suppkey"),
-        ndvOf("lineitem", "l_suppkey"))))
-    val dpU = dpCcpUnified(tables, edges, CycleKeyClasses)
-    val dpX = dpCcpUnified(tables, edges, CycleKeyClasses,
-      bcastLimit = -1L)
-    val fullMask = (1 << tables.length) - 1
-    def winnerOf(dp: Map[(Int, Seq[Int]), UniDpCell]): UniDpCell =
-      dp.collect { case ((m, _), c) if m == fullMask => c }
-        .minBy(c => (c.cost, c.part.mkString(",")))
-    val win = winnerOf(dpU)
-    val winX = winnerOf(dpX)
+    val fx = new EnumFixture(spark, dir)
+    val g = fx.cycle
+    val dpU = dpCcpUnified(g, CycleKeyClasses)
+    val fullMask = g.fullMask
+    val win = unifiedWinner(dpU, fullMask)
+    val winX = unifiedWinner(
+      dpCcpUnified(g, CycleKeyClasses, bcastLimit = -1L), fullMask)
     val differ = win.plan != winX.plan
-    val dfs = Seq(Tables.lineitem(spark, dir), Tables.orders(spark, dir),
-      Tables.customer(spark, dir), Tables.nation(spark, dir),
-      Tables.supplier(spark, dir))
-    val conds = Seq(
-      col("l_orderkey") === col("o_orderkey"),
-      col("o_custkey") === col("c_custkey"),
-      col("c_nationkey") === col("n_nationkey"),
-      col("n_nationkey") === col("s_nationkey"),
-      col("s_suppkey") === col("l_suppkey"))
-    def build(ds: Seq[DataFrame], mask: Int, part: Seq[Int]): DataFrame = {
-      val cell = dpU((mask, part))
-      if (cell.op == "leaf")
-        ds(java.lang.Integer.numberOfTrailingZeros(mask))
-      else {
-        var l = build(ds, cell.leftMask, cell.leftPart)
-        var r = build(ds, cell.rightMask, cell.rightPart)
-        cell.op match {
-          case "broadcast_right" => r = broadcast(r)
-          case "broadcast_left" => l = broadcast(l)
-          case _ => l = l.hint("merge"); r = r.hint("merge")
-        }
-        l.join(r, cell.crossEdges.map(conds).reduce(_ && _))
-      }
-    }
-    def agg(full: DataFrame): (Long, Long, Long) = {
-      val r = full.agg(count(lit(1)), sum(col("l_quantity").cast("long")),
-        sum(col("s_suppkey").cast("long"))).head()
-      (r.getLong(0),
-        if (r.isNullAt(1)) 0L else r.getLong(1),
-        if (r.isNullAt(2)) 0L else r.getLong(2))
-    }
-    val answer = agg(build(dfs, fullMask, win.part))
-    val li8 = dfs.head.filter(
-      pmod(col("l_orderkey").cast("long"), lit(8L)) === 1L)
-    val ord8 = dfs(1).filter(
-      pmod(col("o_orderkey").cast("long"), lit(8L)) === 1L)
-    val dfs8 = li8 +: ord8 +: dfs.drop(2)
-    val leftDeep8 = (1 until tables.length).foldLeft(dfs8.head) {
-      (acc, k) =>
-        val priorMask = (1 << k) - 1
-        val cs = edges.indices.filter { e =>
-          val (a, b, _) = edges(e)
-          (a == k && (priorMask & (1 << b)) != 0) ||
-            (b == k && (priorMask & (1 << a)) != 0)
-        }
-        acc.join(dfs8(k), cs.map(conds).reduce(_ && _))
-    }
-    val identical = agg(build(dfs8, fullMask, win.part)) == agg(leftDeep8)
+    val winner = uniTree(dpU, fullMask, win.part, hinted = true)
+    val answer = answerAgg(fx.runCycle(winner), "s_suppkey")
+    val dfs8 = sample8(fx.cycleDfs)
+    val identical = answerAgg(fx.runCycle(winner, dfs8), "s_suppkey") ==
+      answerAgg(fx.runCycle(JoinTree.leftDeep(g), dfs8), "s_suppkey")
     import spark.implicits._
     dpU.toSeq
       .sortBy { case ((m, p), _) =>
         (java.lang.Integer.bitCount(m), m, p.mkString(","))
       }
       .map { case ((m, p), cell) =>
-        val names = tables.indices.filter(i => (m & (1 << i)) != 0)
-          .map(tables(_)._1).mkString(",")
-        (names, partLabel(p, CycleClassNames),
+        (g.subsetLabel(m), partLabel(p, CycleClassNames),
           java.lang.Integer.bitCount(m).toLong, cell.est, cell.cost,
           cell.op, cell.nShuffleExch, cell.nBcastExch, cell.plan,
           partLabel(win.part, CycleClassNames), win.cost, win.op,
@@ -4729,15 +3518,15 @@ object Relational {
     * rows are oracle-exact — but bytes are what OOM a 1000-executor
     * build side, and the ANALYZE store has carried `avg_width` since
     * A45 without any consumer pricing it. This row closes that:
-    * [[dpCcpUnified]] gains a byte-form eligibility (est_rows ×
-    * width ≤ limit, widths in millionths so the whole gate stays
-    * integer), where a SUBSET's gate width is the MAX of its members'
-    * (the dominant-column model — a join output carries both sides'
-    * columns, so one wide dimension poisons every superset containing
-    * it, and uniform widths reduce exactly to the row form; the Σ
-    * width is emitted next to the max for the record). The audit runs
-    * the unified DP on the store's Q5 cycle FOUR ways, the full state
-    * table each:
+    * [[graft.optimizer.JoinEnumeration.dpCcpUnified]] gains a byte-form
+    * eligibility (est_rows × width ≤ limit, widths in millionths so the
+    * whole gate stays integer), where a SUBSET's gate width is the MAX of its
+    * members' (the dominant-column model — a join output carries both
+    * sides' columns, so one wide dimension poisons every superset
+    * containing it, and uniform widths reduce exactly to the row form;
+    * the Σ width is emitted next to the max for the record). The audit
+    * runs the unified DP on the store's Q5 cycle FOUR ways, the full
+    * state table each:
     *
     *  - `rows`: the row gate at 10 000 (q255's exact DP — baseline);
     *  - `bytes_uniform`: byte gate, every width 1 byte, limit 10 000
@@ -4773,42 +3562,9 @@ object Relational {
     * "10 000 rows × 2 500 B = 25 MB per executor × every superset
     * that inherits them" — the broadcast OOM, priced at plan time. */
   def cboByteBroadcastAudit(spark: SparkSession, dir: String): DataFrame = {
-    val statRows = ensureTableStats(spark, dir)
-      .select(col("table_name"), col("column_name"), col("n_rows"),
-        col("ndv"), col("avg_width")).collect()
-    val stats = statRows
-      .map(r => (r.getString(0), r.getString(1)) ->
-        (r.getLong(2), r.getLong(3)))
-      .toMap
-    def rowsOf(t: String, c: String): Long = stats((t, c))._1
-    def ndvOf(t: String, c: String): Long = stats((t, c))._2
-    // table width = Σ per audited column of round(avg_width × 1e6):
-    // per-column rounding BEFORE the integer sum, so oracle parity
-    // never rides a double sum
-    val widthOf: Map[String, Long] = statRows
-      .groupBy(_.getString(0))
-      .map { case (t, rs) =>
-        t -> rs.map(r => math.round(r.getDouble(4) * 1000000.0)).sum
-      }
-    val names = Seq("lineitem", "orders", "customer", "nation", "supplier")
-    val tables = Seq(
-      ("lineitem", rowsOf("lineitem", "l_orderkey")),
-      ("orders", rowsOf("orders", "o_orderkey")),
-      ("customer", rowsOf("customer", "c_custkey")),
-      ("nation", rowsOf("nation", "n_nationkey")),
-      ("supplier", rowsOf("supplier", "s_suppkey")))
-    val edges = Seq(
-      (0, 1, math.max(ndvOf("lineitem", "l_orderkey"),
-        ndvOf("orders", "o_orderkey"))),
-      (1, 2, math.max(ndvOf("orders", "o_custkey"),
-        ndvOf("customer", "c_custkey"))),
-      (2, 3, math.max(ndvOf("customer", "c_nationkey"),
-        ndvOf("nation", "n_nationkey"))),
-      (3, 4, math.max(ndvOf("nation", "n_nationkey"),
-        ndvOf("supplier", "s_nationkey"))),
-      (4, 0, math.max(ndvOf("supplier", "s_suppkey"),
-        ndvOf("lineitem", "l_suppkey"))))
-    val storeW = names.map(widthOf)
+    val fx = new EnumFixture(spark, dir)
+    val g = fx.cycle
+    val storeW = g.tables.map(t => fx.widthE6(t._1))
     val wideW = storeW.updated(2, ByteGatePlantedWidthE6)
     val limE6 = PhysBroadcastLimitRows * storeW.head
     val arms: Seq[(String, Seq[Long], Long)] = Seq(
@@ -4818,66 +3574,20 @@ object Relational {
       ("bytes_store", storeW, limE6),
       ("bytes_wide", wideW, limE6))
     val dps = arms.map { case (label, ws, lim) =>
-      label -> dpCcpUnified(tables, edges, CycleKeyClasses,
+      label -> dpCcpUnified(g, CycleKeyClasses,
         widthsE6 = ws, bcastLimitBytesE6 = lim)
     }.toMap
-    val fullMask = 31
-    def winnerOf(dp: Map[(Int, Seq[Int]), UniDpCell]): UniDpCell =
-      dp.collect { case ((m, _), c) if m == fullMask => c }
-        .minBy(c => (c.cost, c.part.mkString(",")))
-    val wins = arms.map { case (l, _, _) => l -> winnerOf(dps(l)) }.toMap
+    val fullMask = g.fullMask
+    val wins = arms.map { case (l, _, _) => l -> unifiedWinner(dps(l), fullMask) }.toMap
     def key(c: UniDpCell) =
       (c.plan, c.part, c.op, c.nShuffleExch, c.nBcastExch)
     val reductionEqual = key(wins("bytes_uniform")) == key(wins("rows"))
-    val dfs = Seq(Tables.lineitem(spark, dir), Tables.orders(spark, dir),
-      Tables.customer(spark, dir), Tables.nation(spark, dir),
-      Tables.supplier(spark, dir))
-    val conds = Seq(
-      col("l_orderkey") === col("o_orderkey"),
-      col("o_custkey") === col("c_custkey"),
-      col("c_nationkey") === col("n_nationkey"),
-      col("n_nationkey") === col("s_nationkey"),
-      col("s_suppkey") === col("l_suppkey"))
-    val dpW = dps("bytes_wide")
-    def build(ds: Seq[DataFrame], mask: Int, part: Seq[Int]): DataFrame = {
-      val cell = dpW((mask, part))
-      if (cell.op == "leaf")
-        ds(java.lang.Integer.numberOfTrailingZeros(mask))
-      else {
-        var l = build(ds, cell.leftMask, cell.leftPart)
-        var r = build(ds, cell.rightMask, cell.rightPart)
-        cell.op match {
-          case "broadcast_right" => r = broadcast(r)
-          case "broadcast_left" => l = broadcast(l)
-          case _ => l = l.hint("merge"); r = r.hint("merge")
-        }
-        l.join(r, cell.crossEdges.map(conds).reduce(_ && _))
-      }
-    }
-    def agg(full: DataFrame): (Long, Long, Long) = {
-      val r = full.agg(count(lit(1)), sum(col("l_quantity").cast("long")),
-        sum(col("s_suppkey").cast("long"))).head()
-      (r.getLong(0),
-        if (r.isNullAt(1)) 0L else r.getLong(1),
-        if (r.isNullAt(2)) 0L else r.getLong(2))
-    }
-    val answer = agg(build(dfs, fullMask, wins("bytes_wide").part))
-    val li8 = dfs.head.filter(
-      pmod(col("l_orderkey").cast("long"), lit(8L)) === 1L)
-    val ord8 = dfs(1).filter(
-      pmod(col("o_orderkey").cast("long"), lit(8L)) === 1L)
-    val dfs8 = li8 +: ord8 +: dfs.drop(2)
-    val leftDeep8 = (1 until 5).foldLeft(dfs8.head) { (acc, k) =>
-      val priorMask = (1 << k) - 1
-      val cs = edges.indices.filter { e =>
-        val (a, b, _) = edges(e)
-        (a == k && (priorMask & (1 << b)) != 0) ||
-          (b == k && (priorMask & (1 << a)) != 0)
-      }
-      acc.join(dfs8(k), cs.map(conds).reduce(_ && _))
-    }
-    val identical =
-      agg(build(dfs8, fullMask, wins("bytes_wide").part)) == agg(leftDeep8)
+    val winner = uniTree(dps("bytes_wide"), fullMask, wins("bytes_wide").part,
+      hinted = true)
+    val answer = answerAgg(fx.runCycle(winner), "s_suppkey")
+    val dfs8 = sample8(fx.cycleDfs)
+    val identical = answerAgg(fx.runCycle(winner, dfs8), "s_suppkey") ==
+      answerAgg(fx.runCycle(JoinTree.leftDeep(g), dfs8), "s_suppkey")
     val rowsWin = wins("rows")
     val out = arms.flatMap { case (label, ws, _) =>
       val win = wins(label)
@@ -4892,8 +3602,6 @@ object Relational {
           (java.lang.Integer.bitCount(m), m, p.mkString(","))
         }
         .map { case ((m, p), cell) =>
-          val subset = names.indices.filter(i => (m & (1 << i)) != 0)
-            .map(names).mkString(",")
           val w = widthE6(m)
           val bytes = BigInt(cell.est) * BigInt(w)
           // fail fast on overflow: the oracle's HUGEINT→BIGINT cast
@@ -4901,7 +3609,7 @@ object Relational {
           // be a silent engine/oracle asymmetry
           require(bytes.isValidLong, s"bytes_e6 overflows Long: $bytes")
           org.apache.spark.sql.Row(
-            label, subset, partLabel(p, CycleClassNames),
+            label, g.subsetLabel(m), partLabel(p, CycleClassNames),
             java.lang.Integer.bitCount(m).toLong, cell.est, w,
             widthSumE6(m),
             bytes.toLong, cell.cost, cell.op,
@@ -6054,8 +4762,9 @@ object Relational {
     *     the fallback path flows through the SAME verb (spec-pinned on
     *     a planted drifted store).
     *  2. ENUMERATE — the corrected fact cardinality replaces
-    *     lineitem's row count in [[dpCcpUnified]]'s table stats and
-    *     the FULL operator+partitioning DP runs TWICE — raw guess vs
+    *     lineitem's row count in
+    *     [[graft.optimizer.JoinEnumeration.dpCcpUnified]]'s table stats
+    *     and the FULL operator+partitioning DP runs TWICE — raw guess vs
     *     corrected — on the store's Q5 cycle (edge divisors stay the
     *     store ndvs: the post-filter ndv min(ndv, est) never exceeds
     *     the PK side's ndv on these FK edges, the q232 resolution
@@ -6099,15 +4808,9 @@ object Relational {
     // bucket count is ORACLE-PINNED: plannedDpSql hardcodes the same
     // 16-bucket build, so this is a named constant, not a knob
     val nBuckets = 16
-    val stats = ensureTableStats(spark, dir)
-      .select(col("table_name"), col("column_name"), col("n_rows"),
-        col("ndv")).collect()
-      .map(r => (r.getString(0), r.getString(1)) ->
-        (r.getLong(2), r.getLong(3)))
-      .toMap
-    def rowsOf(t: String, c: String): Long = stats((t, c))._1
-    def ndvOf(t: String, c: String): Long = stats((t, c))._2
-    val li = Tables.lineitem(spark, dir)
+    val fx = new EnumFixture(spark, dir)
+    val g = fx.cycle
+    val li = fx.cycleDfs.head
     val hist = ensureLiKeyHist(spark, dir, nBuckets)
     val (lo, hi) = liKeyBounds(hist)
     val d = hi - lo + 1L
@@ -6121,34 +4824,8 @@ object Relational {
     // "correction" is not a refusal, it's a new wrong estimate
     val corrUsed =
       if (fr.stale || fr.nTicks == 0L) 1000000L else fr.pooledE6
-    val edges = Seq(
-      (0, 1, math.max(ndvOf("lineitem", "l_orderkey"),
-        ndvOf("orders", "o_orderkey"))),
-      (1, 2, math.max(ndvOf("orders", "o_custkey"),
-        ndvOf("customer", "c_custkey"))),
-      (2, 3, math.max(ndvOf("customer", "c_nationkey"),
-        ndvOf("nation", "n_nationkey"))),
-      (3, 4, math.max(ndvOf("nation", "n_nationkey"),
-        ndvOf("supplier", "s_nationkey"))),
-      (4, 0, math.max(ndvOf("supplier", "s_suppkey"),
-        ndvOf("lineitem", "l_suppkey"))))
-    val restRows = Seq(
-      ("orders", rowsOf("orders", "o_orderkey")),
-      ("customer", rowsOf("customer", "c_custkey")),
-      ("nation", rowsOf("nation", "n_nationkey")),
-      ("supplier", rowsOf("supplier", "s_suppkey")))
-    val dfsRest = Seq(Tables.orders(spark, dir),
-      Tables.customer(spark, dir), Tables.nation(spark, dir),
-      Tables.supplier(spark, dir))
-    val conds = Seq(
-      col("l_orderkey") === col("o_orderkey"),
-      col("o_custkey") === col("c_custkey"),
-      col("c_nationkey") === col("n_nationkey"),
-      col("n_nationkey") === col("s_nationkey"),
-      col("s_suppkey") === col("l_suppkey"))
-    val fullMask = 31
-    import spark.implicits._
-    val out = parFlatMap(predDefs) { case (label, pLo, pHi) =>
+    val fullMask = g.fullMask
+    val out = DriverLegs.map(spark, predDefs) { case (label, pLo, pHi) =>
       val pred = spark.range(1).select(lit(0L).as("pred_id"),
         lit(pLo).as("p_lo"), lit(pHi).as("p_hi"))
       val estE6 = estimateRanges(pred, hist, "est_e6")
@@ -6157,74 +4834,34 @@ object Relational {
       val estRaw = math.max(1L, estDefE6 / 1000000L)
       val estFb =
         math.max(1L, feedbackCorrected(estDefE6, corrUsed) / 1000000L)
-      def tablesWith(f: Long) = ("lineitem", f) +: restRows
-      val dpR = dpCcpUnified(tablesWith(estRaw), edges, CycleKeyClasses)
-      val dpF = dpCcpUnified(tablesWith(estFb), edges, CycleKeyClasses)
-      def winnerOf(dp: Map[(Int, Seq[Int]), UniDpCell]): UniDpCell =
-        dp.collect { case ((m, _), c) if m == fullMask => c }
-          .minBy(c => (c.cost, c.part.mkString(",")))
-      val wR = winnerOf(dpR)
-      val wF = winnerOf(dpF)
+      def dpWith(fact: Long) = dpCcpUnified(
+        JoinGraph(g.tables.updated(0, ("lineitem", fact)), g.edges),
+        CycleKeyClasses)
+      val dpF = dpWith(estFb)
+      val wR = unifiedWinner(dpWith(estRaw), fullMask)
+      val wF = unifiedWinner(dpF, fullMask)
       val differ =
         (wR.plan, wR.part, wR.op, wR.nShuffleExch, wR.nBcastExch) !=
           (wF.plan, wF.part, wF.op, wF.nShuffleExch, wF.nBcastExch)
       val liF = li.filter(col("l_orderkey").cast("long")
         .between(pLo, pHi) &&
         pmod(col("l_orderkey").cast("long"), lit(2L)) === 1L)
-      def build(ds: Seq[DataFrame], mask: Int,
-                part: Seq[Int]): DataFrame = {
-        val cell = dpF((mask, part))
-        if (cell.op == "leaf")
-          ds(java.lang.Integer.numberOfTrailingZeros(mask))
-        else {
-          var l = build(ds, cell.leftMask, cell.leftPart)
-          var r = build(ds, cell.rightMask, cell.rightPart)
-          cell.op match {
-            case "broadcast_right" => r = broadcast(r)
-            case "broadcast_left" => l = broadcast(l)
-            case _ => l = l.hint("merge"); r = r.hint("merge")
-          }
-          l.join(r, cell.crossEdges.map(conds).reduce(_ && _))
-        }
-      }
-      def agg(full: DataFrame): (Long, Long, Long) = {
-        val r = full.agg(count(lit(1)),
-          sum(col("l_quantity").cast("long")),
-          sum(col("s_suppkey").cast("long"))).head()
-        (r.getLong(0),
-          if (r.isNullAt(1)) 0L else r.getLong(1),
-          if (r.isNullAt(2)) 0L else r.getLong(2))
-      }
-      val dfsX = liF +: dfsRest
-      val answer = agg(build(dfsX, fullMask, wF.part))
+      val winner = uniTree(dpF, fullMask, wF.part, hinted = true)
+      val dfsF = liF +: fx.cycleDfs.tail
+      val answer = answerAgg(fx.runCycle(winner, dfsF), "s_suppkey")
       val actualFact = liF.count()
-      val li8 = liF.filter(
-        pmod(col("l_orderkey").cast("long"), lit(8L)) === 1L)
-      val ord8 = dfsRest.head.filter(
-        pmod(col("o_orderkey").cast("long"), lit(8L)) === 1L)
-      val dfs8 = li8 +: ord8 +: dfsRest.drop(1)
-      val leftDeep8 = (1 until 5).foldLeft(dfs8.head) { (acc, k) =>
-        val priorMask = (1 << k) - 1
-        val cs = edges.indices.filter { e =>
-          val (a, b, _) = edges(e)
-          (a == k && (priorMask & (1 << b)) != 0) ||
-            (b == k && (priorMask & (1 << a)) != 0)
-        }
-        acc.join(dfs8(k), cs.map(conds).reduce(_ && _))
-      }
-      val identical = agg(build(dfs8, fullMask, wF.part)) == agg(leftDeep8)
-      val names = tablesWith(0L).map(_._1)
+      val dfs8 = sample8(dfsF)
+      val identical = answerAgg(fx.runCycle(winner, dfs8), "s_suppkey") ==
+        answerAgg(fx.runCycle(JoinTree.leftDeep(g), dfs8), "s_suppkey")
       dpF.toSeq
         .sortBy { case ((m, p), _) =>
           (java.lang.Integer.bitCount(m), m, p.mkString(","))
         }
         .map { case ((m, p), cell) =>
-          val subset = names.indices.filter(i => (m & (1 << i)) != 0)
-            .map(names).mkString(",")
           org.apache.spark.sql.Row(
             label, pLo, pHi, estE6, estDefE6, fr.pooledE6, corrUsed,
             fr.nTicks, fr.driftPpm, fr.stale, estRaw, estFb,
-            subset, partLabel(p, CycleClassNames),
+            g.subsetLabel(m), partLabel(p, CycleClassNames),
             java.lang.Integer.bitCount(m).toLong, cell.est, cell.cost,
             cell.op, cell.nShuffleExch, cell.nBcastExch, cell.plan,
             partLabel(wR.part, CycleClassNames), wR.cost, wR.op,
@@ -6234,7 +4871,7 @@ object Relational {
             differ, actualFact, answer._1, answer._2, answer._3,
             identical)
         }
-    }
+    }.flatten
     import org.apache.spark.sql.types._
     def f(n: String, t: DataType) = StructField(n, t)
     val schema = StructType(Seq(
@@ -6366,13 +5003,7 @@ object Relational {
       .join(cust.groupBy(col("c_custkey").cast("long").as("k"))
         .agg(count(lit(1)).as("cb")), "k")
       .agg(coalesce(sum(col("ca") * col("cb")), lit(0L))).head().getLong(0)
-    def agg(full: DataFrame): (Long, Long, Long) = {
-      val r = full.agg(count(lit(1)), sum(col("l_quantity").cast("long")),
-        sum(col("c_custkey").cast("long"))).head()
-      (r.getLong(0),
-        if (r.isNullAt(1)) 0L else r.getLong(1),
-        if (r.isNullAt(2)) 0L else r.getLong(2))
-    }
+    def agg(full: DataFrame) = answerAgg(full, "c_custkey")
     val onLi = col("l_orderkey") === col("o_orderkey")
     val onCust = col("o_custkey") === col("c_custkey")
     val answer =
@@ -6382,8 +5013,8 @@ object Relational {
     // residue 1 mod 8 — k ≡ 1 (mod 8) implies k odd, so the sample sits
     // INSIDE the mod-2 predicate; a key-residue class is closed under
     // the equi-join (q235 discipline)
-    val liF8 = liF.filter(pmod(col("l_orderkey").cast("long"), lit(8L)) === 1L)
-    val ord8 = ord.filter(pmod(col("o_orderkey").cast("long"), lit(8L)) === 1L)
+    val liF8 = keySample8(liF, "l_orderkey")
+    val ord8 = keySample8(ord, "o_orderkey")
     val sA = agg(liF8.join(ord8, onLi).join(cust, onCust))
     val sB = agg(liF8.join(ord8.join(cust, onCust), onLi))
     val identical = sA == sB
@@ -6440,21 +5071,16 @@ object Relational {
     * metadata DP; the training leg is workload; the audit arms cost
     * 1/8 of one star join. */
   def cboFeedbackGraphAudit(spark: SparkSession, dir: String): DataFrame = {
-    val stats = ensureTableStats(spark, dir)
-      .select(col("table_name"), col("column_name"), col("n_rows"),
-        col("ndv")).collect()
-      .map(r => (r.getString(0), r.getString(1)) -> (r.getLong(2), r.getLong(3)))
-      .toMap
-    val (nLi, ndvLo) = stats(("lineitem", "l_orderkey"))
+    val fx = new EnumFixture(spark, dir)
+    val stats = fx.stats
+    val (_, ndvLo) = stats(("lineitem", "l_orderkey"))
     val (_, ndvLp) = stats(("lineitem", "l_partkey"))
     val (_, ndvLs) = stats(("lineitem", "l_suppkey"))
-    val (nOrd, ndvOo) = stats(("orders", "o_orderkey"))
+    val (_, ndvOo) = stats(("orders", "o_orderkey"))
     val (_, ndvOc) = stats(("orders", "o_custkey"))
-    val (nCust, ndvCc) = stats(("customer", "c_custkey"))
-    val (nPart, ndvPp) = stats(("part", "p_partkey"))
-    val (nSupp, ndvSs) = stats(("supplier", "s_suppkey"))
-    val li = Tables.lineitem(spark, dir)
-    val ord = Tables.orders(spark, dir)
+    val (_, ndvCc) = stats(("customer", "c_custkey"))
+    val (_, ndvPp) = stats(("part", "p_partkey"))
+    val (_, ndvSs) = stats(("supplier", "s_suppkey"))
     // the q244 class's training observation + pooled correction, read
     // from the MAINTAINED feedback store (A65 — one store, every LEO
     // consumer)
@@ -6466,53 +5092,32 @@ object Relational {
     val corrE6 = feedbackCorrectionFor(spark, dir, "l_orderkey_mod2_eq")
     import spark.implicits._
     val estFb = feedbackCorrected(estDefault, corrE6)
-    // the DP per pricing: only the fact's row estimate (and its edges'
-    // post-filter divisors) differ
-    def dpFor(estL: Long): Map[Int, GraphDpCell] = {
+    // the C_out DP per pricing: only the fact's row estimate (and its
+    // edges' post-filter divisors) differ
+    def dpFor(estL: Long): Map[Int, PhysDpCell] = {
       def facDiv(ndvFact: Long, ndvDim: Long): Long =
         math.max(math.max(1L, math.min(estL, ndvFact)), ndvDim)
-      selingerGraphDp(
-        Seq(("lineitem", estL), ("orders", nOrd), ("customer", nCust),
-          ("part", nPart), ("supplier", nSupp)),
+      selingerPhysicalDp(JoinGraph(
+        fx.star.tables.updated(0, ("lineitem", estL)),
         Seq((0, 1, facDiv(ndvLo, ndvOo)),
           (1, 2, math.max(ndvOc, ndvCc)),
           (0, 3, facDiv(ndvLp, ndvPp)),
-          (0, 4, facDiv(ndvLs, ndvSs))))
+          (0, 4, facDiv(ndvLs, ndvSs)))), betaE2 = 0L)
     }
-    val fullMask = 31
+    val fullMask = fx.star.fullMask
     val (dpRaw, dpFb) = (dpFor(estDefault), dpFor(estFb))
     val (cellRaw, cellFb) = (dpRaw(fullMask), dpFb(fullMask))
     val flipped = cellRaw.plan != cellFb.plan
     // execution: the fb-chosen tree full-size; both trees sampled
-    val liF = li.filter(pmod(col("l_orderkey").cast("long"), lit(2L)) === 1L)
-    val conds = Seq(
-      col("l_orderkey") === col("o_orderkey"),
-      col("o_custkey") === col("c_custkey"),
-      col("l_partkey") === col("p_partkey"),
-      col("l_suppkey") === col("s_suppkey"))
-    def build(dp: Map[Int, GraphDpCell], dfs: Seq[DataFrame],
-              mask: Int): DataFrame = {
-      val cell = dp(mask)
-      if (cell.cutEdge < 0) dfs(java.lang.Integer.numberOfTrailingZeros(mask))
-      else build(dp, dfs, cell.leftMask)
-        .join(build(dp, dfs, cell.rightMask), conds(cell.cutEdge))
-    }
-    def agg(full: DataFrame): (Long, Long, Long) = {
-      val r = full.agg(count(lit(1)), sum(col("l_quantity").cast("long")),
-        sum(col("s_suppkey").cast("long"))).head()
-      (r.getLong(0),
-        if (r.isNullAt(1)) 0L else r.getLong(1),
-        if (r.isNullAt(2)) 0L else r.getLong(2))
-    }
-    val dims = Seq(Tables.customer(spark, dir), Tables.part(spark, dir),
-      Tables.supplier(spark, dir))
-    val dfsFull = liF +: ord +: dims
-    val answer = agg(build(dpFb, dfsFull, fullMask))
-    val liF8 = liF.filter(pmod(col("l_orderkey").cast("long"), lit(8L)) === 1L)
-    val ord8 = ord.filter(pmod(col("o_orderkey").cast("long"), lit(8L)) === 1L)
-    val dfs8 = liF8 +: ord8 +: dims
-    val identical =
-      agg(build(dpFb, dfs8, fullMask)) == agg(build(dpRaw, dfs8, fullMask))
+    val liF = fx.starDfs.head
+      .filter(pmod(col("l_orderkey").cast("long"), lit(2L)) === 1L)
+    val dfsFull = liF +: fx.starDfs.tail
+    def run(dp: Map[Int, PhysDpCell], dfs: Seq[DataFrame]) =
+      answerAgg(fx.runStar(physTree(dp, fullMask, hinted = false), dfs),
+        "s_suppkey")
+    val answer = run(dpFb, dfsFull)
+    val dfs8 = sample8(dfsFull)
+    val identical = run(dpFb, dfs8) == run(dpRaw, dfs8)
     Seq(("l_orderkey_mod2_eq", estDefault, actualTrain, corrE6, estFb,
       cellRaw.plan, cellRaw.cost, cellFb.plan, cellFb.cost, flipped,
       answer._1, answer._2, answer._3, identical))

@@ -1366,8 +1366,8 @@ object Similarity {
     * documented trade every SemDeDup-scale audit makes. Fixture scales
     * sit under the cap, so the q152/q157 oracles stay exact.
     *
-    * nProbe = 32 is MEASURED, not guessed (round-12 KnnRecallProbe,
-    * BENCH_NOTES): on a 20k rotation-decorrelated tiled corpus — the
+    * nProbe = 32 is MEASURED, not guessed (round-12 k-NN recall measurement,
+    * BENCH_NOTES.md): on a 20k rotation-decorrelated tiled corpus — the
     * WORST case for IVF, no cluster structure at all — edge recall vs
     * exact is 0.20 / 0.46 / 0.65 / 0.86 at nProbe 4 / 16 / 32 / 64,
     * while wall is FLAT until ~64 (12→18→18→24 s vs 58 s exact): the
@@ -1549,7 +1549,7 @@ object Similarity {
   }
 
   /** q198 — IVF ROUTED-RECALL AUDIT: q43's probe vs q21's exact top-k,
-    * per-query floor pinned. RecallFloorProbe-measured per-query minima
+    * per-query floor pinned. Measured per-query minima (BENCH_NOTES.md)
     * with the defaults: 4/5 (sf0.001), 3/5 (sf0.01), 5/5 (sf0.1) —
     * floor 0.4 sits one missed neighbor below the worst measured query. */
   def ivfRecallAudit(spark: SparkSession, dir: String,
@@ -1609,7 +1609,7 @@ object Similarity {
     * stale-codebook query measured 0/5 at sf0.01; doubling the probed
     * lists is exactly the operational lever a frozen index has, and costs
     * 8/16 instead of 4/16 of the partitioned files per query). Measured
-    * per-query minima with these defaults (RecallFloorProbe sweep):
+    * per-query minima with these defaults (recall-floor sweep, BENCH_NOTES.md):
     * 2/5 (sf0.001), 2/5 (sf0.01), 4/5 (sf0.1) — floor 0.4 equals the
     * worst measured query; the route is deterministic per fixture, so
     * the audited scales need no margin, and the sf1 row records the
@@ -1661,7 +1661,7 @@ object Similarity {
     * window widens (200 vs q199's 100 — the rerank depth is the
     * compressed store's stale-codebook lever; still a constant-bounded
     * exact pass per query). Measured per-query minima with these
-    * defaults (RecallFloorProbe sweep): 3/5 (sf0.001), 3/5 (sf0.01),
+    * defaults (recall-floor sweep, BENCH_NOTES.md): 3/5 (sf0.001), 3/5 (sf0.01),
     * 2/5 (sf0.1) — floor 0.4 equals the worst measured query; route
     * deterministic per fixture, sf1 minimum recorded with its row.
     * Scale note, MEASURED at sf1 (decorrelated 10× corpus): the binding
@@ -1779,7 +1779,7 @@ object Similarity {
     * have no cluster structure to concentrate neighbors, so reading a
     * smaller fraction costs recall; the honest default keeps the
     * fraction. Measured per-query minima with these defaults
-    * (RecallFloorProbe sweep): 5/5 (sf0.001), 3/5 (sf0.01), 5/5
+    * (recall-floor sweep, BENCH_NOTES.md): 5/5 (sf0.001), 3/5 (sf0.01), 5/5
     * (sf0.1), 5/5 (sf1 — the rebuilt index is PERFECT on the 10×
     * corpus) — floor 0.6 equals the worst measured query; route
     * deterministic per fixture. */
@@ -1808,7 +1808,7 @@ object Similarity {
     * (200 — unchanged, so the recall delta is attributable to the
     * rebuild alone), floored against q21's exact top-k at 0.6 (q202
     * pins 0.4). Measured per-query minima with these defaults
-    * (RecallFloorProbe sweep): 5/5 (sf0.001), 5/5 (sf0.01), 4/5
+    * (recall-floor sweep, BENCH_NOTES.md): 5/5 (sf0.001), 5/5 (sf0.01), 4/5
     * (sf0.1), 4/5 (sf1 — where the aged books' lifecycle route
     * measured 2/5: the full-corpus m16 retrain is worth two recovered
     * neighbors on the worst query of the 10× corpus) — floor 0.6 sits
@@ -1925,17 +1925,6 @@ object Similarity {
       // its own driver thread — concurrent Spark jobs sharing the
       // local[n] cores, the same wall-clock shape a real cluster gives
       // two independent maintenance pipelines
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.duration.Duration
-      def both[A, B](fa: => A, fb: => B): (A, B) = {
-        val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
-        implicit val ec: scala.concurrent.ExecutionContext =
-          scala.concurrent.ExecutionContext.fromExecutorService(pool)
-        try {
-          val (a, b) = (Future(fa), Future(fb))
-          (Await.result(a, Duration.Inf), Await.result(b, Duration.Inf))
-        } finally { pool.shutdown(); () }
-      }
 
       // the STREAM-INDEPENDENT fixture state — the spooled feed files and
       // both families' bootstrap stores — is a pure function of
@@ -1958,7 +1947,7 @@ object Similarity {
               .write.mode(if (b == 0) "overwrite" else "append")
               .parquet(s"$root/feed")
           val trainSet = Some(e.filter(!isNew).filter(inSample))
-          both(
+          graft.DriverLegs.both(spark)(
             writeIvfIndex(e.filter(!isNew), s"$root/ivf_cb", s"$root/ivf_idx",
               trainOn = trainSet),
             writePqIndex(e.filter(!isNew), s"$root/pq_books", s"$root/pq_codes",
@@ -1985,7 +1974,7 @@ object Similarity {
       val booksPath = s"$boot/pq_books"
       val idxPath = Sources.scratchDirUnique(spark, "annstream_ivf") + "/idx"
       val codesPath = Sources.scratchDirUnique(spark, "annstream_pq") + "/codes"
-      both(
+      graft.DriverLegs.both(spark)(
         Sources.cloneStoreDir(spark, s"$boot/ivf_idx", idxPath),
         Sources.cloneStoreDir(spark, s"$boot/pq_codes", codesPath))
       // both maintenance streams run CONCURRENTLY — independent stores,
@@ -2043,7 +2032,7 @@ object Similarity {
       val cents = loadCentroids(spark, cbPath)
       val books = loadPqBooks(spark, booksPath)
       val subDim = books(0)(0).length
-      val (ivfLeg, pqLeg) = both(
+      val (ivfLeg, pqLeg) = graft.DriverLegs.both(spark)(
         familyLeg(idxPath, Seq("vec_id", "list_id"),
           s => ivfAssign(s, cents).select(col("vec_id"), col("list_id")),
           batch1 => { ivfIngestTick(batch1

@@ -1,8 +1,10 @@
 package graft.tools
 
-import graft.{GraftSession, Tables}
+import graft.GraftSession
 import graft.operators.Relational
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.optimizer.{JoinGraph, JoinTree}
+import graft.optimizer.JoinEnumeration._
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Calibrates the enumerator's movement coefficients from MEASURED
@@ -21,7 +23,8 @@ import org.apache.spark.sql.functions._
   *
   *  - `cout`   = Selinger C_out (Σ est over internal join nodes);
   *  - `shuf`   = Σ est over sides that take a fresh Exchange under
-  *               the [[Relational.joinExch]] partitioning-reuse rule
+  *               the [[graft.optimizer.JoinEnumeration.joinExch]]
+  *               partitioning-reuse rule
   *               (q253 spec-pinned ≡ Spark's EnsureRequirements);
   *  - `bcast`  = Σ est over shipped sides (per join the smaller-est
   *               side, Spark's own pick at default thresholds), 0
@@ -49,8 +52,9 @@ import org.apache.spark.sql.functions._
   *  - `delta_shuffle_e2` = round(100·b_ub/(a+b)): what the DPs'
   *    γ/δ should charge per moved row if a C_out row is worth 100.
   *
-  * The closing check re-runs [[Relational.dpCcpExchange]] (fitted γ)
-  * and [[Relational.dpCcpUnified]] (fitted δ) on the measured stats
+  * The closing check re-runs the exchange-aware DP
+  * ([[graft.optimizer.JoinEnumeration.dpCcpUnified]] with broadcast off,
+  * fitted γ) and the unified DP (fitted δ) on the measured stats
   * and reports whether the fitted winners still match the
   * unit-coefficient winners — agreement or flip is the finding either
   * way, recorded in BENCH_NOTES and pinned by CostFitSpec at the
@@ -59,34 +63,31 @@ import org.apache.spark.sql.functions._
   * Measurement probe by nature (wall clock is the dependent variable),
   * so a tools/ main like XoProbe, not a registry query. */
 object CostFitProbe {
-  /** (partitioning classes, C_out, shuffled rows) of an SMJ tree. */
-  private[graft] def smjFeatures(est: Int => Long,
-                          tree: Int => (Int, Int, Seq[Int]),
-                          mask: Int): (Seq[Int], Long, Long) = {
-    val (l, r, k) = tree(mask)
-    if (l == 0) (Seq.empty, 0L, 0L)
-    else {
-      val (lp, lc, lm) = smjFeatures(est, tree, l)
-      val (rp, rc, rm) = smjFeatures(est, tree, r)
-      val movedL = if (lp == k) 0L else est(l)
-      val movedR = if (rp == k) 0L else est(r)
-      (k, lc + rc + est(mask), lm + rm + movedL + movedR)
+  /** (partitioning classes, C_out, shuffled rows) of a tree run as
+    * sort-merge joins, each join requiring its edges' key classes. */
+  private[graft] def smjFeatures(g: JoinGraph, t: JoinTree,
+                                 classes: Seq[Int]): (Seq[Int], Long, Long) =
+    t match {
+      case JoinTree.Scan(_) => (Seq.empty, 0L, 0L)
+      case JoinTree.Join(l, r, es, _) =>
+        val k = es.map(classes).distinct.sorted
+        val (lp, lc, lm) = smjFeatures(g, l, classes)
+        val (rp, rc, rm) = smjFeatures(g, r, classes)
+        val movedL = if (lp == k) 0L else g.est(l.mask)
+        val movedR = if (rp == k) 0L else g.est(r.mask)
+        (k, lc + rc + g.est(t.mask), lm + rm + movedL + movedR)
     }
-  }
 
   /** (C_out, broadcast rows) of the same tree run all-broadcast:
     * every join ships its smaller-est side. */
-  private[graft] def bcastFeatures(est: Int => Long,
-                            tree: Int => (Int, Int, Seq[Int]),
-                            mask: Int): (Long, Long) = {
-    val (l, r, _) = tree(mask)
-    if (l == 0) (0L, 0L)
-    else {
-      val (lc, lb) = bcastFeatures(est, tree, l)
-      val (rc, rb) = bcastFeatures(est, tree, r)
-      (lc + rc + est(mask), lb + rb + math.min(est(l), est(r)))
+  private[graft] def bcastFeatures(g: JoinGraph, t: JoinTree): (Long, Long) =
+    t match {
+      case JoinTree.Scan(_) => (0L, 0L)
+      case JoinTree.Join(l, r, _, _) =>
+        val (lc, lb) = bcastFeatures(g, l)
+        val (rc, rb) = bcastFeatures(g, r)
+        (lc + rc + g.est(t.mask), lb + rb + math.min(g.est(l.mask), g.est(r.mask)))
     }
-  }
 
   def main(args: Array[String]): Unit = {
     val sfs =
@@ -98,125 +99,15 @@ object CostFitProbe {
     val conf = spark.conf
     val points = scala.collection.mutable.ArrayBuffer
       .empty[(String, String, String, Long, Long, Long, Double)]
-    var lastCyc: (Seq[(String, Long)], Seq[(Int, Int, Long)]) = null
+    var lastCyc: JoinGraph = null
     for (dir <- sfs) {
-      val stats = Relational.ensureTableStats(spark, dir)
-        .select(col("table_name"), col("column_name"), col("n_rows"),
-          col("ndv")).collect()
-        .map(r => (r.getString(0), r.getString(1)) ->
-          (r.getLong(2), r.getLong(3)))
-        .toMap
-      def rowsOf(t: String, c: String) = stats((t, c))._1
-      def d(a: (String, String), b: (String, String)) =
-        math.max(stats(a)._2, stats(b)._2)
-      // --- cycle (the q249/q254/q255 graph) ---
-      val cycTables = Seq(
-        ("lineitem", rowsOf("lineitem", "l_orderkey")),
-        ("orders", rowsOf("orders", "o_orderkey")),
-        ("customer", rowsOf("customer", "c_custkey")),
-        ("nation", rowsOf("nation", "n_nationkey")),
-        ("supplier", rowsOf("supplier", "s_suppkey")))
-      val cycEdges = Seq(
-        (0, 1, d(("lineitem", "l_orderkey"), ("orders", "o_orderkey"))),
-        (1, 2, d(("orders", "o_custkey"), ("customer", "c_custkey"))),
-        (2, 3, d(("customer", "c_nationkey"), ("nation", "n_nationkey"))),
-        (3, 4, d(("nation", "n_nationkey"), ("supplier", "s_nationkey"))),
-        (4, 0, d(("supplier", "s_suppkey"), ("lineitem", "l_suppkey"))))
-      lastCyc = (cycTables, cycEdges)
-      val cycDp = Relational.dpCcp(cycTables, cycEdges)
-      val cycDfs = Seq(Tables.lineitem(spark, dir),
-        Tables.orders(spark, dir), Tables.customer(spark, dir),
-        Tables.nation(spark, dir), Tables.supplier(spark, dir))
-      val cycConds = Seq(
-        col("l_orderkey") === col("o_orderkey"),
-        col("o_custkey") === col("c_custkey"),
-        col("c_nationkey") === col("n_nationkey"),
-        col("n_nationkey") === col("s_nationkey"),
-        col("s_suppkey") === col("l_suppkey"))
-      val cycClasses = Relational.CycleKeyClasses
-      def cycTree(m: Int): (Int, Int, Seq[Int]) = {
-        val c = cycDp(m)
-        if (c.crossEdges.isEmpty) (0, 0, Nil)
-        else (c.leftMask, c.rightMask,
-          c.crossEdges.map(cycClasses).distinct.sorted)
-      }
-      def ldTree(edges: Seq[(Int, Int, Long)],
-                 classes: Seq[Int])(m: Int): (Int, Int, Seq[Int]) = {
-        val k = 31 - java.lang.Integer.numberOfLeadingZeros(m)
-        if (java.lang.Integer.bitCount(m) == 1) (0, 0, Nil)
-        else {
-          val prior = m & ~(1 << k)
-          val cs = edges.indices.filter { e =>
-            val (a, b, _) = edges(e)
-            (a == k && (prior & (1 << b)) != 0) ||
-              (b == k && (prior & (1 << a)) != 0)
-          }
-          (prior, 1 << k, cs.map(classes).distinct.sorted)
-        }
-      }
-      def estOf(tables: Seq[(String, Long)], edges: Seq[(Int, Int, Long)])
-          (m: Int): Long = {
-        val num = tables.indices.filter(i => (m & (1 << i)) != 0)
-          .map(i => BigInt(tables(i)._2)).product
-        val den = edges.filter { case (a, b, _) =>
-          (m & (1 << a)) != 0 && (m & (1 << b)) != 0
-        }.map(e => BigInt(e._3)).product
-        (num / den).toLong
-      }
-      val cycEst = estOf(cycTables, cycEdges) _
-      def buildCyc(m: Int): DataFrame = {
-        val c = cycDp(m)
-        if (c.crossEdges.isEmpty)
-          cycDfs(java.lang.Integer.numberOfTrailingZeros(m))
-        else buildCyc(c.leftMask).join(buildCyc(c.rightMask),
-          c.crossEdges.map(cycConds).reduce(_ && _))
-      }
-      def buildLd(dfs: Seq[DataFrame], edges: Seq[(Int, Int, Long)],
-                  conds: Seq[org.apache.spark.sql.Column]): DataFrame =
-        (1 until 5).foldLeft(dfs.head) { (acc, k) =>
-          val prior = (1 << k) - 1
-          val cs = edges.indices.filter { e =>
-            val (a, b, _) = edges(e)
-            (a == k && (prior & (1 << b)) != 0) ||
-              (b == k && (prior & (1 << a)) != 0)
-          }
-          acc.join(dfs(k), cs.map(conds).reduce(_ && _))
-        }
-      // --- star (the q245/q251 graph) ---
-      val starTables = Seq(
-        ("lineitem", rowsOf("lineitem", "l_orderkey")),
-        ("orders", rowsOf("orders", "o_orderkey")),
-        ("customer", rowsOf("customer", "c_custkey")),
-        ("part", rowsOf("part", "p_partkey")),
-        ("supplier", rowsOf("supplier", "s_suppkey")))
-      val starEdges = Seq(
-        (0, 1, d(("lineitem", "l_orderkey"), ("orders", "o_orderkey"))),
-        (1, 2, d(("orders", "o_custkey"), ("customer", "c_custkey"))),
-        (0, 3, d(("lineitem", "l_partkey"), ("part", "p_partkey"))),
-        (0, 4, d(("lineitem", "l_suppkey"), ("supplier", "s_suppkey"))))
-      val starDp = Relational.selingerGraphDp(starTables, starEdges)
-      val starDfs = Seq(Tables.lineitem(spark, dir),
-        Tables.orders(spark, dir), Tables.customer(spark, dir),
-        Tables.part(spark, dir), Tables.supplier(spark, dir))
-      val starConds = Seq(
-        col("l_orderkey") === col("o_orderkey"),
-        col("o_custkey") === col("c_custkey"),
-        col("l_partkey") === col("p_partkey"),
-        col("l_suppkey") === col("s_suppkey"))
-      val starEst = estOf(starTables, starEdges) _
-      def starTree(m: Int): (Int, Int, Seq[Int]) = {
-        val c = starDp(m)
-        if (c.cutEdge < 0) (0, 0, Nil)
-        else (c.leftMask, c.rightMask, Seq(c.cutEdge))
-      }
-      def buildStar(m: Int): DataFrame = {
-        val c = starDp(m)
-        if (c.cutEdge < 0)
-          starDfs(java.lang.Integer.numberOfTrailingZeros(m))
-        else buildStar(c.leftMask).join(buildStar(c.rightMask),
-          starConds(c.cutEdge))
-      }
-      val full = 31
+      val fx = new Relational.EnumFixture(spark, dir)
+      lastCyc = fx.cycle
+      val cycTree = ccpTree(dpCcp(fx.cycle), fx.cycle.fullMask)
+      val starTree = physTree(selingerPhysicalDp(fx.star, betaE2 = 0L),
+        fx.star.fullMask, hinted = false)
+      val (cycLd, starLd) =
+        (JoinTree.leftDeep(fx.cycle), JoinTree.leftDeep(fx.star))
       def time(df: => DataFrame): Double =
         (1 to runs).map { _ =>
           val t0 = System.nanoTime()
@@ -232,18 +123,16 @@ object CostFitProbe {
       scoped.foreach { case (k, v) => conf.set(k, v) }
       val smjArms = try {
         Seq(
-          ("star", "chosen", starEst, starTree _,
-            () => buildStar(full)),
-          ("star", "left_deep", starEst,
-            ldTree(starEdges, Seq(0, 1, 2, 3)) _,
-            () => buildLd(starDfs, starEdges, starConds)),
-          ("cycle", "chosen", cycEst, cycTree _,
-            () => buildCyc(full)),
-          ("cycle", "left_deep", cycEst,
-            ldTree(cycEdges, cycClasses) _,
-            () => buildLd(cycDfs, cycEdges, cycConds))
-        ).map { case (g, a, est, tree, mk) =>
-          val (_, cout, shuf) = smjFeatures(est, tree, full)
+          ("star", "chosen", fx.star, fx.starClasses, starTree,
+            () => fx.runStar(starTree)),
+          ("star", "left_deep", fx.star, fx.starClasses, starLd,
+            () => fx.runStar(starLd)),
+          ("cycle", "chosen", fx.cycle, Relational.CycleKeyClasses, cycTree,
+            () => fx.runCycle(cycTree)),
+          ("cycle", "left_deep", fx.cycle, Relational.CycleKeyClasses, cycLd,
+            () => fx.runCycle(cycLd))
+        ).map { case (g, a, graph, classes, tree, mk) =>
+          val (_, cout, shuf) = smjFeatures(graph, tree, classes)
           val sec = time(mk())
           (dir, g, a, cout, shuf, 0L, sec)
         }
@@ -251,8 +140,8 @@ object CostFitProbe {
         case (k, Some(v)) => conf.set(k, v)
         case (k, None) => conf.unset(k)
       }
-      val (bcCout, bcRows) = bcastFeatures(starEst, starTree _, full)
-      val bcSec = time(buildStar(full))
+      val (bcCout, bcRows) = bcastFeatures(fx.star, starTree)
+      val bcSec = time(fx.runStar(starTree))
       points ++= smjArms
       points += ((dir, "star", "chosen_bcast", bcCout, 0L, bcRows, bcSec))
     }
@@ -307,16 +196,13 @@ object CostFitProbe {
     val dBcastE2 = dShufE2
     // winner stability at the fitted coefficients, on the last SF's
     // measured stats
-    val (cycT, cycE) = lastCyc
+    // (the exchange-aware DP is the unified DP with broadcast off; its
+    // sentinel-cost states never win)
     val classes = Relational.CycleKeyClasses
-    def exchWinner(g: Long) = Relational
-      .dpCcpExchange(cycT, cycE, classes, gammaE2 = math.max(0L, g))
-      .collect { case ((m0, _), cc) if m0 == 31 => cc }
-      .minBy(cc => (cc.cost, cc.part.mkString(",")))
-    def uniWinner(dd: Long) = Relational
-      .dpCcpUnified(cycT, cycE, classes, deltaE2 = math.max(0L, dd))
-      .collect { case ((m0, _), cc) if m0 == 31 => cc }
-      .minBy(cc => (cc.cost, cc.part.mkString(",")))
+    def exchWinner(g: Long) = unifiedWinner(dpCcpUnified(lastCyc, classes,
+      bcastLimit = -1L, deltaE2 = math.max(0L, g)), lastCyc.fullMask)
+    def uniWinner(dd: Long) = unifiedWinner(dpCcpUnified(lastCyc, classes,
+      deltaE2 = math.max(0L, dd)), lastCyc.fullMask)
     val exFit = exchWinner(dShufE2)
     val exUnit = exchWinner(100L)
     val unFit = uniWinner(dBcastE2)

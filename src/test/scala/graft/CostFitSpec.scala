@@ -2,6 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.Relational
+import graft.optimizer.{JoinEnumeration, JoinGraph, JoinTree}
 import graft.tools.CostFitProbe
 
 /** Pins the cost-calibration findings (tools/CostFitProbe, recorded in
@@ -17,43 +18,17 @@ class CostFitSpec extends AnyFunSuite {
     ("n", 25L), ("s", 10L))
   private val edges = Seq((0, 1, 1500L), (1, 2, 150L), (2, 3, 25L),
     (3, 4, 25L), (4, 0, 10L))
+  private val graph = JoinGraph(tables, edges)
   private val classes = Relational.CycleKeyClasses
   private val full = 31
 
-  private def est(m: Int): Long = {
-    val num = tables.indices.filter(i => (m & (1 << i)) != 0)
-      .map(i => BigInt(tables(i)._2)).product
-    val den = edges.filter { case (a, b, _) =>
-      (m & (1 << a)) != 0 && (m & (1 << b)) != 0
-    }.map(e => BigInt(e._3)).product
-    (num / den).toLong
-  }
-
   test("identifiability: an SMJ tree's shuffled rows are cout + leaf rows minus reuse — Δshuf ≡ Δcout across same-graph arms") {
-    val dp = Relational.dpCcp(tables, edges)
-    def tree(m: Int): (Int, Int, Seq[Int]) = {
-      val c = dp(m)
-      if (c.crossEdges.isEmpty) (0, 0, Nil)
-      else (c.leftMask, c.rightMask,
-        c.crossEdges.map(classes).distinct.sorted)
-    }
-    def ldTree(m: Int): (Int, Int, Seq[Int]) = {
-      val k = 31 - java.lang.Integer.numberOfLeadingZeros(m)
-      if (java.lang.Integer.bitCount(m) == 1) (0, 0, Nil)
-      else {
-        val prior = m & ~(1 << k)
-        val cs = edges.indices.filter { e =>
-          val (a, b, _) = edges(e)
-          (a == k && (prior & (1 << b)) != 0) ||
-            (b == k && (prior & (1 << a)) != 0)
-        }
-        (prior, 1 << k, cs.map(classes).distinct.sorted)
-      }
-    }
+    val chosen = JoinEnumeration.ccpTree(JoinEnumeration.dpCcp(graph), full)
     val leaves = tables.map(_._2).sum
-    val root = est(full)
-    val (_, coutCh, shufCh) = CostFitProbe.smjFeatures(est, tree, full)
-    val (_, coutLd, shufLd) = CostFitProbe.smjFeatures(est, ldTree, full)
+    val root = graph.est(full)
+    val (_, coutCh, shufCh) = CostFitProbe.smjFeatures(graph, chosen, classes)
+    val (_, coutLd, shufLd) =
+      CostFitProbe.smjFeatures(graph, JoinTree.leftDeep(graph), classes)
     // without reuse: shuf = cout − est(root) + Σ leaves exactly (every
     // non-root node is exchanged once; the root output never is) — the
     // left-deep cycle arm switches keys at every step, so it IS the
@@ -77,14 +52,12 @@ class CostFitSpec extends AnyFunSuite {
     // conclusion that matters: the Q5 winners are CONSTANT across the
     // whole measured range and beyond, because the reuse tree
     // dominates at any non-negative movement price
-    def exchWin(g: Long) = Relational
-      .dpCcpExchange(tables, edges, classes, gammaE2 = g)
-      .collect { case ((m, _), c) if m == full => c }
-      .minBy(c => (c.cost, c.part.mkString(",")))
-    def uniWin(d: Long) = Relational
-      .dpCcpUnified(tables, edges, classes, deltaE2 = d)
-      .collect { case ((m, _), c) if m == full => c }
-      .minBy(c => (c.cost, c.part.mkString(",")))
+    // the exchange-aware DP is the unified DP with broadcast off (its
+    // sentinel-cost states never win)
+    def exchWin(g: Long) = JoinEnumeration.unifiedWinner(JoinEnumeration
+      .dpCcpUnified(graph, classes, bcastLimit = -1L, deltaE2 = g), full)
+    def uniWin(d: Long) = JoinEnumeration.unifiedWinner(JoinEnumeration
+      .dpCcpUnified(graph, classes, deltaE2 = d), full)
     val exchUnit = exchWin(100L)
     val uniUnit = uniWin(100L)
     for (e2 <- Seq(0L, 6L, 25L, 54L, 100L, 200L, 400L)) {

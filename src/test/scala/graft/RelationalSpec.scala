@@ -1,12 +1,25 @@
 package graft
 
 import graft.operators.Relational
+import graft.optimizer.{JoinEnumeration, JoinGraph}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 class RelationalSpec extends AnyFunSuite {
   private val spark = TestSpark.spark
   import spark.implicits._
+
+  /** The C_out tree DP on the path graph t0–t1–…: connected subsets are
+    * the intervals, keyed here by (first, last) table, and edge k (the
+    * k-th divisor) joins tables k and k + 1. */
+  private def chainDp(rows: Seq[(String, Long)], divisors: Seq[Long])
+      : Map[(Int, Int), JoinEnumeration.PhysDpCell] =
+    JoinEnumeration.selingerPhysicalDp(JoinGraph(rows,
+      divisors.zipWithIndex.map { case (d, k) => (k, k + 1, d) }), betaE2 = 0L)
+      .map { case (m, c) =>
+        (java.lang.Integer.numberOfTrailingZeros(m),
+          31 - java.lang.Integer.numberOfLeadingZeros(m)) -> c
+      }
 
   test("ensureLiExprHist: one name over two expressions builds two histograms") {
     def hist(e: org.apache.spark.sql.Column) =
@@ -991,24 +1004,24 @@ class RelationalSpec extends AnyFunSuite {
   test("q230 Selinger DP core: costs compose, ties break to the first split, planted stats flip the tree") {
     // the fact-dim chain (fixture shape): right-deep wins
     val chain = Seq(("a", 60000L), ("b", 15000L), ("c", 1500L), ("d", 25L))
-    val dp = Relational.selingerChainDp(chain, Seq(15000L, 1500L, 25L))
+    val dp = chainDp(chain, Seq(15000L, 1500L, 25L))
     assert(dp((0, 3)).plan == "(a*(b*(c*d)))", dp((0, 3)).plan)
     // est chains single-division: 60000*15000*1500*25/(15000*1500*25)
     assert(dp((0, 3)).est == 60000L)
     // C_out composes: est(full) + cost(best split) = 60000 + (15000+1500)
     assert(dp((0, 3)).cost == 76500L, s"cost ${dp((0, 3)).cost}")
     // PLANTED stats — a tiny fact side — flip the whole tree to left-deep
-    val flipped = Relational.selingerChainDp(
+    val flipped = chainDp(
       Seq(("a", 10L), ("b", 15000L), ("c", 90000L), ("d", 80000L)),
       Seq(15000L, 90000L, 80000L))
     assert(flipped((0, 3)).plan == "(((a*b)*c)*d)",
       s"tiny fact must join first: ${flipped((0, 3)).plan}")
     // ties break to the FIRST minimal split (the oracle's CASE order)
-    val tied = Relational.selingerChainDp(
+    val tied = chainDp(
       Seq(("a", 100L), ("b", 100L), ("c", 100L)), Seq(100L, 100L))
     assert(tied((0, 2)).plan == "(a*(b*c))", tied((0, 2)).plan)
     // BigInt products survive warehouse-scale counts
-    val big = Relational.selingerChainDp(
+    val big = chainDp(
       Seq(("a", 3000000000L), ("b", 2000000000L)), Seq(2000000000L))
     assert(big((0, 1)).est == 3000000000L)
   }
@@ -1455,9 +1468,11 @@ class RelationalSpec extends AnyFunSuite {
   test("selingerGraphDp: reduces to the chain DP on a path graph") {
     val rows = Seq(("a", 600L), ("b", 150L), ("c", 15L), ("d", 3L))
     val divs = Seq(150L, 15L, 3L)
-    val chain = Relational.selingerChainDp(rows, divs)
-    val graph = Relational.selingerGraphDp(rows,
-      Seq((0, 1, divs(0)), (1, 2, divs(1)), (2, 3, divs(2))))
+    // the chain DP (a reference in JoinEnumerationSpec) against the
+    // C_out tree DP on the path graph
+    val chain = JoinEnumerationReference.selingerChainDp(rows, divs)
+    val graph = JoinEnumeration.selingerPhysicalDp(JoinGraph(rows,
+      Seq((0, 1, divs(0)), (1, 2, divs(1)), (2, 3, divs(2)))), betaE2 = 0L)
     for (i <- 0 until 4; j <- i until 4) {
       val mask = (i to j).map(1 << _).sum
       val (c, g) = (chain((i, j)), graph(mask))
@@ -1472,7 +1487,9 @@ class RelationalSpec extends AnyFunSuite {
     val tables = Seq(("f", 6000L), ("o", 1500L), ("c", 150L),
       ("p", 200L), ("s", 10L))
     val edges = Seq((0, 1, 1500L), (1, 2, 150L), (0, 3, 200L), (0, 4, 10L))
-    val dp = Relational.selingerGraphDp(tables, edges)
+    def treeDp(t: Seq[(String, Long)], e: Seq[(Int, Int, Long)]) =
+      JoinEnumeration.selingerPhysicalDp(JoinGraph(t, e), betaE2 = 0L)
+    val dp = treeDp(tables, edges)
     // 17 connected subsets of the 31 non-empty ones
     assert(dp.size == 17)
     assert(!dp.contains((1 << 1) | (1 << 3)), "o,p is disconnected")
@@ -1482,14 +1499,14 @@ class RelationalSpec extends AnyFunSuite {
     assert(full.cost == 6000L + 12000L + 1500L, s"C_out: ${full.cost}")
     // planted stats: a worthless (o*c) arm (cross-product-like divisor)
     // must push the winner off the bushy shape — the flip is computed
-    val planted = Relational.selingerGraphDp(
+    val planted = treeDp(
       Seq(("f", 100L), ("o", 50L), ("c", 50L), ("p", 10L), ("s", 10L)),
       Seq((0, 1, 50L), (1, 2, 1L), (0, 3, 10L), (0, 4, 10L)))
     val pf = planted((1 << 5) - 1)
     assert(!pf.plan.contains("(o*c)"), s"planted flip: ${pf.plan}")
     // a cycle must be rejected loudly, never mis-enumerated
     intercept[IllegalArgumentException] {
-      Relational.selingerGraphDp(tables, edges :+ ((2, 4, 5L)))
+      treeDp(tables, edges :+ ((2, 4, 5L)))
     }
   }
   test("q245 graph enumeration: full DP table from the store, bushy winner, executed trees identical") {
@@ -1676,7 +1693,7 @@ class RelationalSpec extends AnyFunSuite {
       ("n", 25L), ("s", 10L))
     val edges = Seq((0, 1, 1500L), (1, 2, 150L), (2, 3, 25L),
       (3, 4, 25L), (4, 0, 10L))
-    val dp = Relational.dpCcp(tables, edges)
+    val dp = JoinEnumeration.dpCcp(JoinGraph(tables, edges))
     // connected subsets of a 5-cycle are its 21 arcs
     assert(dp.size == 21)
     assert(!dp.contains((1 << 1) | (1 << 3)), "o,n is disconnected")
@@ -1692,9 +1709,9 @@ class RelationalSpec extends AnyFunSuite {
     assert(full.crossEdges == Seq(0, 4), s"cross ${full.crossEdges}")
     // planted stats: a huge nation side makes the dim chain worthless
     // and the winner re-routes through the orders arm
-    val planted = Relational.dpCcp(
+    val planted = JoinEnumeration.dpCcp(JoinGraph(
       Seq(("l", 6000L), ("o", 1500L), ("c", 150L), ("n", 100000L),
-        ("s", 10L)), edges)
+        ("s", 10L)), edges))
     assert(planted((1 << 5) - 1).plan != full.plan, "planted flip")
   }
   test("dpCcp cross-validates the tree DP: identical estimates and costs on acyclic graphs") {
@@ -1706,8 +1723,9 @@ class RelationalSpec extends AnyFunSuite {
       ("customer", 150L), ("part", 200L), ("supplier", 10L))
     val edges = Seq((0, 1, 1500L), (1, 2, 150L), (0, 3, 200L),
       (0, 4, 10L))
-    val tree = Relational.selingerGraphDp(tables, edges)
-    val gen = Relational.dpCcp(tables, edges)
+    val tree = JoinEnumeration.selingerPhysicalDp(JoinGraph(tables, edges),
+      betaE2 = 0L)
+    val gen = JoinEnumeration.dpCcp(JoinGraph(tables, edges))
     assert(tree.keySet == gen.keySet, "same connected subsets")
     tree.keySet.foreach { m =>
       assert(tree(m).est == gen(m).est, s"est differs at $m")
@@ -1715,13 +1733,12 @@ class RelationalSpec extends AnyFunSuite {
     }
     // and on a plain chain both reduce to the interval DP's costs
     val chainRows = Seq(("a", 600L), ("b", 150L), ("c", 15L), ("d", 3L))
-    val chainDp = Relational.selingerChainDp(chainRows,
-      Seq(150L, 15L, 3L))
-    val genChain = Relational.dpCcp(chainRows,
-      Seq((0, 1, 150L), (1, 2, 15L), (2, 3, 3L)))
+    val chain = chainDp(chainRows, Seq(150L, 15L, 3L))
+    val genChain = JoinEnumeration.dpCcp(JoinGraph(chainRows,
+      Seq((0, 1, 150L), (1, 2, 15L), (2, 3, 3L))))
     for (i <- 0 until 4; j <- i until 4) {
       val mask = (i to j).map(1 << _).sum
-      assert(chainDp((i, j)).cost == genChain(mask).cost, s"[$i,$j]")
+      assert(chain((i, j)).cost == genChain(mask).cost, s"[$i,$j]")
     }
   }
   test("dpCcp proper-submask walk: cell-for-cell equal to the r18 every-integer enumeration") {
@@ -1788,7 +1805,7 @@ class RelationalSpec extends AnyFunSuite {
     }
     def check(tables: Seq[(String, Long)],
               edges: Seq[(Int, Int, Long)]): Unit = {
-      val got = Relational.dpCcp(tables, edges)
+      val got = JoinEnumeration.dpCcp(JoinGraph(tables, edges))
       val want = reference(tables, edges)
       assert(got.keySet == want.keySet, "same connected subsets")
       got.foreach { case (m, cell) =>
@@ -1916,8 +1933,9 @@ class RelationalSpec extends AnyFunSuite {
       ("customer", 150L), ("part", 200L), ("supplier", 10L))
     val edges = Seq((0, 1, 1500L), (1, 2, 150L), (0, 3, 200L),
       (0, 4, 10L))
-    val tree = Relational.selingerGraphDp(tables, edges)
-    val zero = Relational.selingerPhysicalDp(tables, edges, betaE2 = 0L)
+    val tree = JoinEnumerationReference.selingerGraphDp(tables, edges)
+    val zero = JoinEnumeration.selingerPhysicalDp(JoinGraph(tables, edges),
+      betaE2 = 0L)
     assert(tree.keySet == zero.keySet, "same connected subsets")
     tree.keySet.foreach { m =>
       assert(tree(m).est == zero(m).est && tree(m).cost == zero(m).cost &&
@@ -1925,7 +1943,7 @@ class RelationalSpec extends AnyFunSuite {
         tree(m).cutEdge == zero(m).cutEdge, s"cell $m differs at beta=0")
     }
     // 2) the operator annotation follows the q221 threshold rule
-    val phys = Relational.selingerPhysicalDp(tables, edges,
+    val phys = JoinEnumeration.selingerPhysicalDp(JoinGraph(tables, edges),
       bcastLimit = 100L)
     val ls = phys((1 << 0) | (1 << 4)) // lineitem ⋈ supplier
     assert(ls.op == "broadcast" && ls.exchanged == 10L,
@@ -1942,9 +1960,9 @@ class RelationalSpec extends AnyFunSuite {
       ("p", 200L), ("s", 10L))
     val pEdges = Seq((0, 1, 30000L), (1, 2, 1500L), (0, 3, 5000L),
       (0, 4, 100L))
-    val cout = Relational.selingerPhysicalDp(pTables, pEdges,
+    val cout = JoinEnumeration.selingerPhysicalDp(JoinGraph(pTables, pEdges),
       bcastLimit = 5000L, betaE2 = 0L)
-    val opAware = Relational.selingerPhysicalDp(pTables, pEdges,
+    val opAware = JoinEnumeration.selingerPhysicalDp(JoinGraph(pTables, pEdges),
       bcastLimit = 5000L, betaE2 = 100L)
     val full = 31
     assert(cout(full).plan == "(((l*(o*c))*p)*s)", cout(full).plan)
@@ -2132,24 +2150,30 @@ class RelationalSpec extends AnyFunSuite {
       (3, 4, 25L), (4, 0, 10L))
     val classes = Relational.CycleKeyClasses
     val full = 31
-    def winner(dp: Map[(Int, Seq[Int]), Relational.ExchDpCell]) =
-      dp.collect { case ((m, _), c) if m == full => c }
-        .minBy(c => (c.cost, c.part.mkString(",")))
-    val dp = Relational.dpCcpExchange(tables, edges, classes)
+    // the exchange-aware DP: the unified DP with broadcast off, minus its
+    // sentinel-cost (broadcast-only) states
+    def exchangeDp(t: Seq[(String, Long)], e: Seq[(Int, Int, Long)],
+                   gammaE2: Long = 100L) =
+      JoinEnumeration.dpCcpUnified(JoinGraph(t, e), classes,
+        bcastLimit = -1L, deltaE2 = gammaE2)
+        .filter(_._2.cost != JoinEnumeration.UniSentinelCost)
+    def winner(dp: Map[(Int, Seq[Int]), JoinEnumeration.UniDpCell]) =
+      JoinEnumeration.unifiedWinner(dp, full)
+    val dp = exchangeDp(tables, edges)
     val win = winner(dp)
     // the Q5 right-deep dim chain, with its nationkey reuse priced:
     // 7 exchanges, not 8
     assert(win.plan == "(l*(o*(c*(n*s))))", win.plan)
-    assert(win.nExchanges == 7L && win.part == Seq(0, 3) &&
+    assert(win.nShuffleExch == 7L && win.part == Seq(0, 3) &&
       win.cost == 9255L, s"$win")
     // the full-mask state table carries every interesting
     // partitioning (7 states on this graph)
     val states = dp.collect { case ((m, p), c) if m == full => p -> c }
     assert(states.size == 7, s"${states.size} states")
     // gamma=0 collapses the winner cost to the pure C_out optimum
-    val z = Relational.dpCcpExchange(tables, edges, classes,
-      gammaE2 = 0L)
-    assert(winner(z).cost == Relational.dpCcp(tables, edges)(full).cost)
+    val z = exchangeDp(tables, edges, gammaE2 = 0L)
+    assert(winner(z).cost ==
+      JoinEnumeration.dpCcp(JoinGraph(tables, edges))(full).cost)
     // planted flip: C_out breaks the (customer*nation)*supplier
     // nationkey reuse for 6 fewer estimated rows; the exchange term
     // keeps it and the winners genuinely differ
@@ -2157,10 +2181,10 @@ class RelationalSpec extends AnyFunSuite {
       ("n", 250L), ("s", 10L))
     val pE = Seq((0, 1, 5000L), (1, 2, 1500L), (2, 3, 2500L),
       (3, 4, 25L), (4, 0, 10L))
-    val pWin = winner(Relational.dpCcpExchange(pT, pE, classes))
-    val pCout = Relational.dpCcp(pT, pE)(full)
+    val pWin = winner(exchangeDp(pT, pE))
+    val pCout = JoinEnumeration.dpCcp(JoinGraph(pT, pE))(full)
     assert(pWin.plan != pCout.plan, s"${pWin.plan} vs ${pCout.plan}")
-    assert(pWin.plan == "(l*(o*((c*n)*s)))" && pWin.nExchanges == 7L,
+    assert(pWin.plan == "(l*(o*((c*n)*s)))" && pWin.nShuffleExch == 7L,
       s"$pWin")
     assert(pCout.plan == "(l*((o*(c*n))*s))", pCout.plan)
   }
@@ -2172,26 +2196,26 @@ class RelationalSpec extends AnyFunSuite {
       (3, 4, 25L), (4, 0, 10L))
     val classes = Relational.CycleKeyClasses
     val full = 31
-    def winner(dp: Map[(Int, Seq[Int]), Relational.UniDpCell]) =
+    def winner(dp: Map[(Int, Seq[Int]), JoinEnumeration.UniDpCell]) =
       dp.collect { case ((m, _), c) if m == full => c }
         .minBy(c => (c.cost, c.part.mkString(",")))
     // natural Q5 at the broadcast threshold: the same right-deep tree
     // wins but runs ALL-BROADCAST — every dim ships, nothing shuffles
-    val u = winner(Relational.dpCcpUnified(tables, edges, classes))
+    val u = winner(JoinEnumeration.dpCcpUnified(JoinGraph(tables, edges), classes))
     assert(u.plan == "(l*(o*(c*(n*s))))", u.plan)
     assert(u.cost == 1590L && u.nShuffleExch == 0L &&
       u.nBcastExch == 4L && u.part.isEmpty, s"$u")
     // broadcast disabled: the winner reduces to the J32 exchange DP's
-    val v = winner(Relational.dpCcpUnified(tables, edges, classes,
+    val v = winner(JoinEnumeration.dpCcpUnified(JoinGraph(tables, edges), classes,
       bcastLimit = -1L))
-    val x = Relational.dpCcpExchange(tables, edges, classes)
+    val x = JoinEnumerationReference.dpCcpExchange(tables, edges, classes)
       .collect { case ((m, _), c) if m == full => c }
       .minBy(c => (c.cost, c.part.mkString(",")))
     assert(v.cost == x.cost && v.plan == x.plan &&
       v.nShuffleExch == x.nExchanges, s"$v vs $x")
     // an over-threshold ship side prices at the declared sentinel —
     // physically unavailable, never the winner
-    assert(u.cost < Relational.UniSentinelCost)
+    assert(u.cost < JoinEnumeration.UniSentinelCost)
     // planted flip: with a 20k-row supplier the exchange-only DP
     // hangs supplier last on a shuffle; broadcast-awareness reorders
     // the TREE (nation+supplier ship; the join order itself changes)
@@ -2199,8 +2223,8 @@ class RelationalSpec extends AnyFunSuite {
       ("n", 25L), ("s", 20000L))
     val pE = Seq((0, 1, 30000L), (1, 2, 1500L), (2, 3, 25L),
       (3, 4, 250L), (4, 0, 1000L))
-    val pU = winner(Relational.dpCcpUnified(pT, pE, classes))
-    val pX = winner(Relational.dpCcpUnified(pT, pE, classes,
+    val pU = winner(JoinEnumeration.dpCcpUnified(JoinGraph(pT, pE), classes))
+    val pX = winner(JoinEnumeration.dpCcpUnified(JoinGraph(pT, pE), classes,
       bcastLimit = -1L))
     assert(pU.plan != pX.plan, s"${pU.plan} vs ${pX.plan}")
     assert(pU.plan == "((l*(o*c))*(n*s))" && pU.nBcastExch == 3L,
@@ -2228,8 +2252,8 @@ class RelationalSpec extends AnyFunSuite {
     // leaves + composite states all present; sentinel rows (if any)
     // carry the declared constant
     assert(rows.count(_._6 == "leaf") == 5)
-    rows.filter(_._5 >= Relational.UniSentinelCost).foreach { r =>
-      assert(r._5 == Relational.UniSentinelCost, s"sentinel row $r")
+    rows.filter(_._5 >= JoinEnumeration.UniSentinelCost).foreach { r =>
+      assert(r._5 == JoinEnumeration.UniSentinelCost, s"sentinel row $r")
     }
     val want = Tables.lineitem(spark, d)
       .join(Tables.orders(spark, d), col("l_orderkey") === col("o_orderkey"))
@@ -2301,13 +2325,13 @@ class RelationalSpec extends AnyFunSuite {
       (3, 4, 25L), (4, 0, 100L))
     val classes = Relational.CycleKeyClasses
     val full = 31
-    def winner(dp: Map[(Int, Seq[Int]), Relational.UniDpCell]) =
+    def winner(dp: Map[(Int, Seq[Int]), JoinEnumeration.UniDpCell]) =
       dp.collect { case ((m, _), c) if m == full => c }
         .minBy(c => (c.cost, c.part.mkString(",")))
     def t(li: Long) = Seq(("l", li), ("o", 15000L), ("c", 1500L),
       ("n", 25L), ("s", 100L))
-    val wr = winner(Relational.dpCcpUnified(t(48L), edges, classes))
-    val wf = winner(Relational.dpCcpUnified(t(24163L), edges, classes))
+    val wr = winner(JoinEnumeration.dpCcpUnified(JoinGraph(t(48L), edges), classes))
+    val wf = winner(JoinEnumeration.dpCcpUnified(JoinGraph(t(24163L), edges), classes))
     assert((wr.plan, wr.part, wr.op, wr.nShuffleExch, wr.nBcastExch) !=
       (wf.plan, wf.part, wf.op, wf.nShuffleExch, wf.nBcastExch),
       s"$wr vs $wf")
@@ -2321,8 +2345,8 @@ class RelationalSpec extends AnyFunSuite {
     assert(wf.plan == "((l*o)*(c*(n*s)))" && wf.op == "broadcast_right"
       && wf.nShuffleExch == 2L && wf.nBcastExch == 3L &&
       wf.part == Seq(0), s"fb $wf")
-    assert(wr.cost < Relational.UniSentinelCost &&
-      wf.cost < Relational.UniSentinelCost)
+    assert(wr.cost < JoinEnumeration.UniSentinelCost &&
+      wf.cost < JoinEnumeration.UniSentinelCost)
   }
 
   test("q256 stale fallback: a drifted class keeps the raw guess through the same verb") {
@@ -2397,11 +2421,11 @@ class RelationalSpec extends AnyFunSuite {
     val classes = Relational.CycleKeyClasses
     // REDUCTION: uniform widths w with limit = rowLimit × w give the
     // row-form DP cell for cell (max-width model: width(S) = w)
-    val rowDp = Relational.dpCcpUnified(tables, edges, classes)
+    val rowDp = JoinEnumeration.dpCcpUnified(JoinGraph(tables, edges), classes)
     val w = 7L * 1000000L
-    val uniDp = Relational.dpCcpUnified(tables, edges, classes,
+    val uniDp = JoinEnumeration.dpCcpUnified(JoinGraph(tables, edges), classes,
       widthsE6 = Seq.fill(5)(w),
-      bcastLimitBytesE6 = Relational.PhysBroadcastLimitRows * w)
+      bcastLimitBytesE6 = JoinEnumeration.PhysBroadcastLimitRows * w)
     assert(uniDp == rowDp, "uniform byte gate == row gate, cell for cell")
     // PLANTED wide dim: customer at 2500 B/row — under the row gate
     // the winner ships the customer-carrying dim chain; under the
@@ -2410,13 +2434,13 @@ class RelationalSpec extends AnyFunSuite {
     val store = Seq(7L, 7L, 7L, 2L, 4L).map(_ * 1000000L)
     val wide = store.updated(2, Relational.ByteGatePlantedWidthE6)
     val full = 31
-    def winner(dp: Map[(Int, Seq[Int]), Relational.UniDpCell]) =
+    def winner(dp: Map[(Int, Seq[Int]), JoinEnumeration.UniDpCell]) =
       dp.collect { case ((m, _), c) if m == full => c }
         .minBy(c => (c.cost, c.part.mkString(",")))
-    val lim = Relational.PhysBroadcastLimitRows * store.head
-    val wS = winner(Relational.dpCcpUnified(tables, edges, classes,
+    val lim = JoinEnumeration.PhysBroadcastLimitRows * store.head
+    val wS = winner(JoinEnumeration.dpCcpUnified(JoinGraph(tables, edges), classes,
       widthsE6 = store, bcastLimitBytesE6 = lim))
-    val wW = winner(Relational.dpCcpUnified(tables, edges, classes,
+    val wW = winner(JoinEnumeration.dpCcpUnified(JoinGraph(tables, edges), classes,
       widthsE6 = wide, bcastLimitBytesE6 = lim))
     assert(wS.plan == "(l*(o*(c*(n*s))))" && wS.op == "broadcast_right",
       s"store widths keep the q255 winner: $wS")

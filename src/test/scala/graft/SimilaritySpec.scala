@@ -593,7 +593,7 @@ class SimilaritySpec extends AnyFunSuite {
       s"nProbe >= nLists must reproduce the exact edge set; " +
         s"missing=${(exact -- routedFull).size} extra=${(routedFull.toSet -- exact).size}")
     // partial probing (8 of the fixture's 16 lists): recall floor from
-    // the round-12 KnnRecallProbe measurement — 0.74 measured on this
+    // the round-12 k-NN recall measurement (BENCH_NOTES.md) — 0.74 measured on this
     // corpus, 0.65 at the production nProbe=32 on a worst-case
     // (clusterless) 20k corpus; 0.6 is the audit-semantics floor with
     // measured margin on both
