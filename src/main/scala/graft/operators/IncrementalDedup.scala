@@ -74,7 +74,7 @@ object IncrementalDedup {
   }
 
   def readShingleIndex(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
+    Tables.parquet(spark, path)
 
   /** D30 [EXT] — PERSISTED-INDEX STALENESS AUDIT: before trusting an
     * incremental probe (q64–q78), measure how much of the CURRENT corpus

@@ -42,26 +42,48 @@ object Relational {
         round(avg(col("l_discount")), 6).as("avg_disc"),
         count(lit(1)).as("count_order"))
 
-  /** J-family — multiway join with broadcast dims (shape of TPC-H Q5):
-    * region ⋈ nation ⋈ customer ⋈ orders ⋈ lineitem, revenue per nation.
-    * region/nation/customer are broadcast (small dims); the only shuffle
-    * joins are orders⋈lineitem on orderkey — at 100 TB those two are the
-    * big tables and co-partition on the join key.
+  /** J-family — multiway join (shape of TPC-H Q5): region ⋈ nation ⋈
+    * customer ⋈ orders ⋈ lineitem, revenue per nation.
+    *
+    * The dimension chain resolves on the small side first: orders ⋈
+    * customer ⋈ nation ⋈ region (the three dims broadcast), projected to
+    * (o_orderkey, n_nationkey), so each lineitem row makes ONE hash probe
+    * instead of four. The aggregate keys on the integer n_nationkey; the
+    * nation names join its ≤ 25 rows, and `round` runs last.
+    *
+    * The lineitem join is the size switch. The pre-joined side carries a
+    * broadcast hint exactly when the planner would broadcast the filtered,
+    * projected orders scan on its own: when that scan's optimized-plan
+    * size estimate is at most `spark.sql.autoBroadcastJoinThreshold`
+    * (about 8 MB against 10 MB at sf1). The hint is needed because without
+    * column statistics the planner estimates a join's size as the product
+    * of its inputs, so it would shuffle lineitem into a sort-merge join.
+    * Past the threshold the join is left to the planner, which shuffles
+    * both sides on orderkey: at 100 TB those are the two big tables.
     */
   def joinRevenueByNation(spark: SparkSession, dir: String): DataFrame = {
     val region = Tables.region(spark, dir).filter(col("r_name") =!= "EUROPE")
     val nation = Tables.nation(spark, dir)
     val cust = Tables.customer(spark, dir)
     val orders = Tables.orders(spark, dir).filter(col("o_orderstatus") =!= "P")
-    val li = Tables.lineitem(spark, dir)
-    li.join(orders, col("l_orderkey") === col("o_orderkey"))
+      .select(col("o_orderkey"), col("o_custkey"))
+    val orderNation = orders
       .join(broadcast(cust), col("o_custkey") === col("c_custkey"))
       .join(broadcast(nation), col("c_nationkey") === col("n_nationkey"))
       .join(broadcast(region), col("n_regionkey") === col("r_regionkey"))
-      .groupBy(col("n_name"))
+      .select(col("o_orderkey"), col("n_nationkey"))
+    val ordersFit = orders.queryExecution.optimizedPlan.stats.sizeInBytes <=
+      spark.sessionState.conf.autoBroadcastJoinThreshold
+    Tables.lineitem(spark, dir)
+      .join(if (ordersFit) broadcast(orderNation) else orderNation,
+        col("l_orderkey") === col("o_orderkey"))
+      .groupBy(col("n_nationkey"))
       .agg(
-        round(sum(col("l_extendedprice") * (lit(1.0) - col("l_discount"))), 2).as("revenue"),
+        sum(col("l_extendedprice") * (lit(1.0) - col("l_discount"))).as("revenue"),
         count(lit(1)).as("n_items"))
+      .join(broadcast(Tables.nation(spark, dir).select(col("n_nationkey"), col("n_name"))),
+        "n_nationkey")
+      .select(col("n_name"), round(col("revenue"), 2).as("revenue"), col("n_items"))
   }
 
   /** Left-semi join (EXISTS; SURVEY §2.3 J1's engine form). */

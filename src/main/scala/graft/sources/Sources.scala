@@ -555,10 +555,6 @@ object Sources {
   def csvShards(spark: SparkSession, dir: String, schema: StructType): DataFrame =
     csv(spark, dir, schema)
 
-  /** Parquet twin (the engine's default interchange format, SURVEY §1.4). */
-  def parquet(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
-
   /** S3 — binary-file source: path + modificationTime + content bytes as
     * proper columns, replacing read-inside-UDF. `pathGlobFilter` prunes at
     * the file index, before any bytes move.
@@ -577,7 +573,7 @@ object Sources {
     */
   def csvRoundTrip(spark: SparkSession, dir: String): DataFrame = {
     val out = scratchDir(spark, "csv_roundtrip")
-    parquet(spark, s"$dir/orders.parquet")
+    graft.Tables.table(spark, dir, "orders")
       .select(col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"))
       .repartition(4) // a real shard directory, not a single file
       .write.mode("overwrite").option("header", "true").csv(out)
@@ -598,7 +594,7 @@ object Sources {
     */
   def jsonlRoundTrip(spark: SparkSession, dir: String): DataFrame = {
     val out = scratchDir(spark, "jsonl_roundtrip")
-    parquet(spark, s"$dir/documents.parquet")
+    graft.Tables.table(spark, dir, "documents")
       .select(col("doc_id"), col("lang"), col("text"))
       .repartition(4)
       .write.mode("overwrite").json(out)
@@ -626,7 +622,7 @@ object Sources {
     */
   def schemaEvolutionRead(spark: SparkSession, dir: String): DataFrame = {
     val out = scratchDir(spark, "schema_evolution")
-    val docs = parquet(spark, s"$dir/documents.parquet")
+    val docs = graft.Tables.table(spark, dir, "documents")
     docs.filter(col("doc_id") % 3 === 0)
       .select(col("doc_id"), col("lang"), col("text"))
       .repartition(2)
@@ -662,7 +658,7 @@ object Sources {
     */
   def corruptJsonlIngest(spark: SparkSession, dir: String): DataFrame = {
     val out = scratchDir(spark, "corrupt_jsonl")
-    val docs = parquet(spark, s"$dir/documents.parquet")
+    val docs = graft.Tables.table(spark, dir, "documents")
       .select(col("doc_id"), col("lang"), col("text"))
     val line = to_json(struct(col("doc_id"), col("lang"), col("text")))
     // damage: drop the closing quote + brace, unparseable by any reader
@@ -692,7 +688,7 @@ object Sources {
     */
   def orcRoundTrip(spark: SparkSession, dir: String): DataFrame = {
     val out = scratchDir(spark, "orc_roundtrip")
-    parquet(spark, s"$dir/lineitem.parquet")
+    graft.Tables.table(spark, dir, "lineitem")
       .select(col("l_orderkey"), col("l_returnflag"), col("l_quantity"))
       .repartition(4)
       .write.mode("overwrite").orc(out)
@@ -723,7 +719,7 @@ object Sources {
     def tensor(mulA: Int, mulB: Int) =
       transform(sequence(lit(0), lit(7)),
         i => pmod(col("doc_id") * mulA + i * mulB, lit(100)).cast("float"))
-    parquet(spark, s"$dir/documents.parquet")
+    graft.Tables.table(spark, dir, "documents")
       .select(col("doc_id"),
         struct(tensor(13, 7).as("saliency"), tensor(29, 11).as("attention")).as("maps"))
       .write.mode("overwrite").parquet(out)
@@ -750,7 +746,7 @@ object Sources {
     */
   def labelCsvRoundTrip(spark: SparkSession, dir: String): DataFrame = {
     val out = scratchDir(spark, "label_csv")
-    parquet(spark, s"$dir/documents.parquet")
+    graft.Tables.table(spark, dir, "documents")
       .select(
         concat(lit("corpus/"), col("source"), lit("/"),
           col("doc_id").cast("string"), lit(".jpg")).as("Path"),
@@ -784,7 +780,7 @@ object Sources {
   def partitionedPrunedRead(spark: SparkSession, dir: String,
                             lang: String = "en"): DataFrame = {
     val out = scratchDir(spark, "partitioned_lang")
-    parquet(spark, s"$dir/documents.parquet")
+    graft.Tables.table(spark, dir, "documents")
       .select(col("doc_id"), col("source"), col("text"), col("lang"))
       .write.mode("overwrite").partitionBy("lang").parquet(out)
     spark.read.parquet(out)
@@ -812,7 +808,7 @@ object Sources {
     */
   def mergeUpsertSnapshot(spark: SparkSession, dir: String): DataFrame = {
     val out = scratchDir(spark, "merge_snapshot")
-    val docs = parquet(spark, s"$dir/documents.parquet")
+    val docs = graft.Tables.table(spark, dir, "documents")
     docs.filter(col("doc_id") % 3 =!= 0)
       .select(col("doc_id"), col("text"), lit(1L).as("version"))
       .write.mode("overwrite").parquet(s"$out/v1")
@@ -865,7 +861,7 @@ object Sources {
     * of scanning tmpdir for the newest match. */
   private[graft] def rightToErasureAt(spark: SparkSession, dir: String,
                                       out: String): DataFrame = {
-    val ev = parquet(spark, s"$dir/events.parquet")
+    val ev = graft.Tables.table(spark, dir, "events")
     // null-safe on purpose: a bare `user_id % 13 === 0` is null for a null
     // user_id, so BOTH filter(erase) and filter(!erase) would drop the row
     // — silent deletion without a tombstone, the one failure mode an
@@ -914,7 +910,7 @@ object Sources {
     require(retain >= 1, s"need retain >= 1; got $retain")
     val root = scratchDir(spark,
       s"vacuum_${java.util.UUID.randomUUID.toString.take(8)}")
-    val docs = parquet(spark, s"$dir/documents.parquet")
+    val docs = graft.Tables.table(spark, dir, "documents")
       .select(col("doc_id"), col("text"))
     val v1 = docs.filter(col("doc_id") % 3 =!= 0)
     val v2 = v1.select(col("doc_id"),
@@ -1000,7 +996,7 @@ object Sources {
     * status key; no snapshot ever collects.
     */
   def snapshotDiff(spark: SparkSession, dir: String): DataFrame = {
-    val docs = parquet(spark, s"$dir/documents.parquet")
+    val docs = graft.Tables.table(spark, dir, "documents")
     // v1/v2 per q91's merge lineage: v1 drops doc_id % 3 = 0; v2 = v1
     // merged with the " [rev2]" updates of every even doc_id
     val v1 = docs.filter(col("doc_id") % 3 =!= 0)
@@ -1037,7 +1033,7 @@ object Sources {
     */
   def snapshotDiffBucketed(spark: SparkSession, dir: String,
                            nBuckets: Int = 8): DataFrame = {
-    val docs = parquet(spark, s"$dir/documents.parquet")
+    val docs = graft.Tables.table(spark, dir, "documents")
     val v1 = docs.filter(col("doc_id") % 3 =!= 0)
       .select(col("doc_id"), col("text"))
     val updates = docs.filter(col("doc_id") % 2 === 0)
@@ -1162,7 +1158,7 @@ object Sources {
                        targetBytes: Long = 16384L,
                        blockSize: Long = 64L): DataFrame = {
     val assigned = shardAssign(
-      parquet(spark, s"$dir/documents.parquet")
+      graft.Tables.table(spark, dir, "documents")
         .select(col("doc_id"), col("lang"), col("text")),
       targetBytes, blockSize)
     val out = scratchDir(spark, "jsonl_export")
@@ -1224,7 +1220,7 @@ object Sources {
                           nProbes: Int = 8): DataFrame = {
     require(bits >= fileBits && bits <= 16, s"need fileBits <= bits <= 16")
     val nb = 1L << bits
-    val li = parquet(spark, s"$dir/lineitem.parquet")
+    val li = graft.Tables.table(spark, dir, "lineitem")
       .select(col("l_partkey").as("pk"), col("l_suppkey").as("sk"))
     val b = li.agg(min(col("pk")), max(col("pk")),
                    min(col("sk")), max(col("sk"))).head()
@@ -1346,7 +1342,7 @@ object Sources {
                          kHashes: Int = 3, nProbes: Int = 8): DataFrame = {
     require((mBits & (mBits - 1)) == 0, "mBits must be a power of two")
     require(kHashes >= 1 && kHashes <= BloomA.size)
-    val li = parquet(spark, s"$dir/lineitem.parquet")
+    val li = graft.Tables.table(spark, dir, "lineitem")
       .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
     val b = li.agg(min(col("ok")), max(col("ok")), max(col("pk"))).head()
     val (omin, omax, pmax) = (b.getLong(0), b.getLong(1), b.getLong(2))
@@ -1463,7 +1459,7 @@ object Sources {
   private[graft] def zoneMapTickAt(spark: SparkSession, dir: String,
                                    root: String, tick: Int, nTicks: Int,
                                    nFiles: Int): Unit = {
-    val li = parquet(spark, s"$dir/lineitem.parquet")
+    val li = graft.Tables.table(spark, dir, "lineitem")
       .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
     val b = li.agg(min(col("ok")), max(col("ok"))).head()
     val (omin, omax) = (b.getLong(0), b.getLong(1))
@@ -1561,7 +1557,7 @@ object Sources {
                                  root: String, tick: Int, nTicks: Int,
                                  nFiles: Int, mBits: Int,
                                  kHashes: Int): Unit = {
-    val li = parquet(spark, s"$dir/lineitem.parquet")
+    val li = graft.Tables.table(spark, dir, "lineitem")
       .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
     val b = li.agg(min(col("ok")), max(col("ok"))).head()
     val (omin, omax) = (b.getLong(0), b.getLong(1))
@@ -1624,7 +1620,7 @@ object Sources {
                         mBits: Int = 65536, kHashes: Int = 3)
       : DataFrame = {
     val root = ensureBloomStore(spark, dir, nTicks, nFiles, mBits, kHashes)
-    val li = parquet(spark, s"$dir/lineitem.parquet")
+    val li = graft.Tables.table(spark, dir, "lineitem")
     val b = li.agg(min(col("l_partkey")), max(col("l_partkey")),
       min(col("l_orderkey")), max(col("l_orderkey"))).head()
     val (pmin, pmax) = (b.getLong(0), b.getLong(1))
@@ -1685,7 +1681,7 @@ object Sources {
   def zoneMapPrunedScan(spark: SparkSession, dir: String,
                         nTicks: Int = 4, nFiles: Int = 16): DataFrame = {
     val root = ensureZoneMapStore(spark, dir, nTicks, nFiles)
-    val li = parquet(spark, s"$dir/lineitem.parquet")
+    val li = graft.Tables.table(spark, dir, "lineitem")
     val b = li.agg(min(col("l_orderkey")), max(col("l_orderkey"))).head()
     val (omin, omax) = (b.getLong(0), b.getLong(1))
     val d = omax - omin + 1L
@@ -1749,7 +1745,7 @@ object Sources {
                               tailFiles: Int = 4): DataFrame = {
     val store =
       scratchDir(spark, s"zopt_${spillSeq.incrementAndGet()}") + "/store"
-    val li = parquet(spark, s"$dir/lineitem.parquet").select(
+    val li = graft.Tables.table(spark, dir, "lineitem").select(
       col("l_orderkey").as("ok"), col("l_partkey").as("pk"),
       col("l_suppkey").as("sk"))
     val b = li.agg(min(col("pk")), max(col("pk")), min(col("sk")),
@@ -1945,7 +1941,7 @@ object Sources {
                                    root: String, tick: Int,
                                    nTicks: Int): Unit =
     matViewCommit(
-      parquet(spark, s"$dir/orders.parquet")
+      graft.Tables.table(spark, dir, "orders")
         .filter(pmod(col("o_orderkey"), lit(nTicks.toLong)) === tick),
       tick.toLong, root)
 
@@ -2069,7 +2065,7 @@ object Sources {
       .groupBy(col("o_orderstatus"))
       .agg(sum(col("n_orders")).as("mv_n"),
         sum(col("sum_price_dec")).cast("double").as("mv_sum"))
-    val baseSide = parquet(spark, s"$dir/orders.parquet")
+    val baseSide = graft.Tables.table(spark, dir, "orders")
       .groupBy(col("o_orderstatus"))
       .agg(count(lit(1)).as("base_n"),
         sum(col("o_totalprice").cast("decimal(12,2)"))

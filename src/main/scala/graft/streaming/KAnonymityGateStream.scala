@@ -40,19 +40,25 @@ object KAnonymityGateStream {
   private def deleteDir(spark: SparkSession, path: String): Unit =
     fs(spark, path).delete(new org.apache.hadoop.fs.Path(path), true): Unit
 
+  /** One tick's rows: the batch's QI class counts tagged with its id. */
+  private def tickCounts(batch: DataFrame, batchId: Long): DataFrame =
+    Relational.kAnonymityClassCounts(batch).withColumn("ingest_batch", lit(batchId))
+
   /** One exactly-once gate tick: this batch's QI class counts under its
     * own partition. Safe to re-run with the same batchId. */
   def gateTickXO(batch: DataFrame, batchId: Long, countsPath: String): Unit =
-    Relational.kAnonymityClassCounts(batch)
-      .withColumn("ingest_batch", lit(batchId))
+    tickCounts(batch, batchId)
       .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
       .partitionBy("ingest_batch").parquet(countsPath)
 
   /** The cumulative k-sweep audit over everything gated so far, computed
     * from the tick partitions READ BACK (the q155 round-trip contract). */
   def currentAudit(spark: SparkSession, countsPath: String,
-                   ks: Seq[Int] = Seq(2, 5, 10, 20)): DataFrame = {
-    val merged = spark.read.parquet(countsPath)
+                   ks: Seq[Int] = Seq(2, 5, 10, 20)): DataFrame =
+    auditOf(spark.read.parquet(countsPath), ks)
+
+  private def auditOf(counts: DataFrame, ks: Seq[Int]): DataFrame = {
+    val merged = counts
       .groupBy(col("c_nationkey"), col("c_mktsegment"), col("bal_bucket"))
       .agg(sum(col("cnt")).as("cnt"))
     Relational.kAnonymitySweepFor(merged, ks)
@@ -79,6 +85,8 @@ object KAnonymityGateStream {
     deleteDir(spark, countsPath)
     for (r <- 0L until 3L)
       gateTickXO(cust.filter(col("c_custkey") % 3 === r), r, countsPath)
-    currentAudit(spark, countsPath, ks)
+    // the read-back takes the schema the ticks just wrote: inferring it
+    // would cost a job per call, and this fresh path is never read twice
+    auditOf(spark.read.schema(tickCounts(cust, 0L).schema).parquet(countsPath), ks)
   }
 }

@@ -128,48 +128,10 @@ class DedupSpec extends AnyFunSuite {
     val vertices = (1L to 7L).toDF("id")
     val edges = (1L to 6L).map(i => (i, i + 1)).toDF("src", "dst")
     val e = intercept[IllegalStateException] {
-      withBroadcastThreshold("-1")(
+      TestSpark.withBroadcastThreshold("-1")(
         Dedup.connectedComponents(vertices, edges, maxIter = 2))
     }
     assert(e.getMessage.contains("converge"))
-  }
-
-  /** Runs `f` under another broadcast threshold, which moves
-    * connectedComponents' local-finish bound; "-1" forces the distributed
-    * (alternation) route. */
-  private def withBroadcastThreshold[T](value: String)(f: => T): T = {
-    val key = "spark.sql.autoBroadcastJoinThreshold"
-    val saved = spark.conf.getOption(key)
-    spark.conf.set(key, value)
-    try f finally saved.fold(spark.conf.unset(key))(spark.conf.set(key, _))
-  }
-
-  /** Jobs `f` starts on this thread, counted by a SparkListener on the
-    * job group. The listener bus is asynchronous but ordered, so once a
-    * marker job run after `f` has been seen, every job of `f` has been
-    * counted. */
-  private def jobsStartedBy(f: => Any): Int = {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    val sc = spark.sparkContext
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val marked = new java.util.concurrent.CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit =
-        Option(js.properties).map(_.getProperty("spark.jobGroup.id")) match {
-          case Some("jobs-started-by") => jobs.incrementAndGet(); ()
-          case Some("jobs-started-by-marker") => marked.countDown()
-          case _ =>
-        }
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup("jobs-started-by", "counted")
-      try f finally sc.clearJobGroup()
-      sc.setJobGroup("jobs-started-by-marker", "marker")
-      try spark.range(1).count() finally sc.clearJobGroup()
-      assert(marked.await(60, java.util.concurrent.TimeUnit.SECONDS))
-      jobs.get
-    } finally sc.removeSparkListener(listener)
   }
 
   test("connectedComponents: local finish and distributed alternation return identical labels") {
@@ -178,7 +140,7 @@ class DedupSpec extends AnyFunSuite {
     def sameOnBothRoutes(what: String, vertices: DataFrame,
                          edges: DataFrame): Map[Long, Long] = {
       val local = labels(vertices, edges)
-      val distributed = withBroadcastThreshold("-1")(labels(vertices, edges))
+      val distributed = TestSpark.withBroadcastThreshold("-1")(labels(vertices, edges))
       assert(local == distributed, s"$what: routes disagree")
       local
     }
@@ -211,12 +173,12 @@ class DedupSpec extends AnyFunSuite {
     // of per-round ones (the call runs every job, as it returns
     // checkpointed labels). An 80-byte threshold bounds the local finish
     // at 5 edges, so the 199-edge path is over the bound and alternates.
-    val localJobs = jobsStartedBy(Dedup.connectedComponents(pathVertices, pathEdges))
+    val localJobs = TestSpark.jobsStartedBy(Dedup.connectedComponents(pathVertices, pathEdges))
     assert(localJobs <= 8, s"local route started $localJobs jobs")
-    withBroadcastThreshold("80") {
+    TestSpark.withBroadcastThreshold("80") {
       assert(labels(pathVertices, pathEdges) == path, "over-bound labels differ")
       val overBoundJobs =
-        jobsStartedBy(Dedup.connectedComponents(pathVertices, pathEdges))
+        TestSpark.jobsStartedBy(Dedup.connectedComponents(pathVertices, pathEdges))
       assert(overBoundJobs > 2 * localJobs,
         s"over the bound: $overBoundJobs jobs vs $localJobs on the local route")
     }

@@ -1,6 +1,8 @@
 package graft
 
 import graft.operators.{Relational, Similarity, TextAnalysis}
+import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+import org.apache.spark.sql.execution.exchange.Exchange
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Physical-plan regression guards: the scale posture depends on specific
@@ -39,6 +41,67 @@ class PlanSpec extends AnyFunSuite {
     val plan = planOf(Relational.joinRevenueByNation(spark, TestSpark.Sf0001))
     val broadcasts = "BroadcastHashJoin".r.findAllIn(plan).length
     assert(broadcasts >= 3, s"expected >=3 broadcast joins, got $broadcasts:\n$plan")
+  }
+
+  /** The physical plan as planned, before AQE re-optimizes any stage. */
+  private def physicalOf(df: org.apache.spark.sql.DataFrame): SparkPlan =
+    df.queryExecution.executedPlan match {
+      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec => a.executedPlan
+      case p => p
+    }
+
+  /** The operators between the lineitem scan and the first exchange above
+    * it (the scan's own stage), bottom-up. */
+  private def lineitemStage(df: org.apache.spark.sql.DataFrame): Seq[SparkPlan] = {
+    def pathTo(p: SparkPlan): Option[List[SparkPlan]] = p match {
+      case s: FileSourceScanExec if s.relation.location.rootPaths.exists(
+          _.getName == "lineitem.parquet") => Some(List(s))
+      case _ => p.children.iterator.map(pathTo).collectFirst { case Some(t) => t }
+          .map(p :: _)
+    }
+    val plan = physicalOf(df)
+    val up = pathTo(plan).getOrElse(fail(s"no lineitem scan in:\n$plan")).reverse
+    up.takeWhile(!_.isInstanceOf[Exchange])
+  }
+
+  test("q03 join: lineitem makes one broadcast probe, the aggregate keys on n_nationkey") {
+    import org.apache.spark.sql.execution.aggregate.HashAggregateExec
+    import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
+    val df = Relational.joinRevenueByNation(spark, TestSpark.Sf0001)
+    val stage = lineitemStage(df)
+    val probes = stage.count(_.isInstanceOf[BroadcastHashJoinExec])
+    assert(probes == 1, s"lineitem must feed exactly one broadcast join, got $probes:\n" +
+      stage.map(_.nodeName).mkString(" <- "))
+    val keys = physicalOf(df).collect {
+      case h: HashAggregateExec => h.groupingExpressions.map(_.name)
+    }
+    assert(keys.nonEmpty && keys.forall(_ == Seq("n_nationkey")),
+      s"the revenue aggregate must key on n_nationkey alone, got $keys")
+  }
+
+  test("q03 switch: the shuffle route returns the broadcast route's rows at sf0.01") {
+    import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, SortMergeJoinExec}
+    val dir = "/root/testdata/sf0.01"
+    // revenue is a double sum whose order follows the plan, so it may
+    // differ in the last bit before rounding: compare within one cent
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getString(0), r.getDouble(1), r.getLong(2))).sortBy(_._1).toSeq
+    val bcast = Relational.joinRevenueByNation(spark, dir)
+    assert(lineitemStage(bcast).exists(_.isInstanceOf[BroadcastHashJoinExec]))
+    val bcastRows = rows(bcast)
+    val shuffleRows = TestSpark.withBroadcastThreshold("-1") {
+      val shuffled = Relational.joinRevenueByNation(spark, dir)
+      assert(!lineitemStage(shuffled).exists(_.isInstanceOf[BroadcastHashJoinExec]),
+        "with broadcast off, lineitem must not probe a broadcast relation")
+      assert(physicalOf(shuffled).exists(_.isInstanceOf[SortMergeJoinExec]),
+        "expected the sort-merge route")
+      rows(shuffled)
+    }
+    assert(bcastRows.nonEmpty)
+    assert(shuffleRows.map(r => (r._1, r._3)) == bcastRows.map(r => (r._1, r._3)))
+    shuffleRows.zip(bcastRows).foreach { case (s, b) =>
+      assert(math.abs(s._2 - b._2) <= 0.01 + 1e-9, s"${s._1}: revenue ${s._2} vs ${b._2}")
+    }
   }
 
   test("cosine top-k: query side broadcast, cosine inside codegen") {
