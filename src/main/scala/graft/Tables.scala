@@ -23,22 +23,35 @@ import org.apache.spark.sql.types._
   * path, and the name, size and modification time of every leaf file
   * under it, from one driver-side listing. A rewrite or append therefore
   * changes the key and re-infers; a session never sees another's entry.
+  * The same entry carries the path's row count ([[rowCount]]), so a size
+  * switch routes on the files it will read, never on a stale count.
   */
 object Tables {
 
-  private type SchemaKey = (String, String, Seq[(String, Long, Long)])
+  private type MetaKey = (String, String, Seq[(String, Long, Long)])
 
-  /** Bounded like `Dedup`'s routing counts: a rare full reset (re-infer
-    * once per live path) beats tracking session and path lifecycles. */
-  private val schemas = new java.util.concurrent.ConcurrentHashMap[SchemaKey, StructType]()
+  /** What a listing-keyed entry knows about its files: the inferred
+    * schema, and the row count once a caller has asked for it. The count
+    * runs under the entry's own monitor; a count that throws leaves it
+    * unset for the next caller. */
+  private final class Meta(val schema: StructType) {
+    private var rows = -1L
+    def rowCount(read: => DataFrame): Long = synchronized {
+      if (rows < 0) rows = read.count()
+      rows
+    }
+  }
 
-  /** A parquet read whose schema is inferred once per (session, path,
-    * leaf-file listing). A missing path is left to Spark's own reader,
-    * which reports it as usual. */
-  def parquet(spark: SparkSession, path: String): DataFrame = {
+  /** Cleared past 64 entries: a rare full reset (re-infer once per live
+    * path) beats tracking session and path lifecycles. */
+  private val metas = new java.util.concurrent.ConcurrentHashMap[MetaKey, Meta]()
+
+  /** The listing-keyed entry of an existing path, or None for a missing
+    * one. */
+  private def meta(spark: SparkSession, path: String): Option[Meta] = {
     val p = new org.apache.hadoop.fs.Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) return spark.read.parquet(path)
+    if (!fs.exists(p)) return None
     val qualified = fs.makeQualified(p)
     // plain `listStatus`, not `listFiles`: a located status copies the
     // permissions, which the local filesystem reads by forking a process
@@ -48,16 +61,30 @@ object Tables {
       else Seq((st.getPath.toString, st.getLen, st.getModificationTime))
     val key = (graft.sources.Sources.sessionTag(spark), qualified.toString,
       fs.listStatus(qualified).toSeq.flatMap(leaves).sortBy(_._1))
-    val cached = schemas.get(key)
-    val schema =
-      if (cached != null) cached
-      else {
-        val inferred = spark.read.parquet(path).schema
-        if (schemas.size > 64) schemas.clear()
-        val prior = schemas.putIfAbsent(key, inferred)
-        if (prior != null) prior else inferred
-      }
-    spark.read.schema(schema).parquet(path)
+    val cached = metas.get(key)
+    if (cached != null) Some(cached)
+    else {
+      val inferred = new Meta(spark.read.parquet(path).schema)
+      if (metas.size > 64) metas.clear()
+      val prior = metas.putIfAbsent(key, inferred)
+      Some(if (prior != null) prior else inferred)
+    }
+  }
+
+  /** A parquet read whose schema is inferred once per (session, path,
+    * leaf-file listing). A missing path is left to Spark's own reader,
+    * which reports it as usual. */
+  def parquet(spark: SparkSession, path: String): DataFrame =
+    meta(spark, path).fold(spark.read.parquet(path))(
+      m => spark.read.schema(m.schema).parquet(path))
+
+  /** Rows of fixture table `name`, counted once per (session, path,
+    * leaf-file listing): a size switch reads it instead of starting a
+    * count job per call, and a rewritten table is counted afresh. */
+  def rowCount(spark: SparkSession, dir: String, name: String): Long = {
+    val path = s"$dir/$name.parquet"
+    meta(spark, path).fold(spark.read.parquet(path).count())(
+      m => m.rowCount(spark.read.schema(m.schema).parquet(path)))
   }
 
   def table(spark: SparkSession, dir: String, name: String): DataFrame =

@@ -377,12 +377,17 @@ object Dedup {
         coalesce(col("eh"), lit(false)).as("exact_hit"))
   }
 
-  /** q59 over the documents fixture: eval split = doc_id % 10 == 0 (a 10%
-    * held-out slice), train = the rest. */
+  /** The held-out eval split every train/eval consumer shares (q59, q62,
+    * q156, the release pipeline and its session eval index): a 10% slice,
+    * id ≡ 0 mod 10; train is the rest. */
+  def evalSplit(id: Column): Column = id % 10 === 0
+
+  /** q59 over the documents fixture: eval split = [[evalSplit]] of doc_id,
+    * train = the rest. */
   def decontaminationReport(spark: SparkSession, dir: String,
                             threshold: Double = 0.5): DataFrame =
     decontaminationReportFor(Tables.documents(spark, dir),
-      col("doc_id") % 10 === 0, threshold,
+      evalSplit(col("doc_id")), threshold,
       shOpt = Some(ensureDocShingles(spark, dir)))
 
   /** The decontaminated train corpus itself: the train split anti-joined
@@ -457,13 +462,13 @@ object Dedup {
   }
 
   /** The streaming twin over the fixture, same split as
-    * [[decontaminationReport]] (eval = doc_id % 10 == 0): the documents
+    * [[decontaminationReport]] ([[evalSplit]] of doc_id): the documents
     * file streamed as the arriving train side, the eval slice read as the
     * static batch side. */
   def streamingDecontamination(spark: SparkSession, dir: String,
                                threshold: Double = 0.5): DataFrame = {
     val schema = Tables.documents(spark, dir).schema
-    val isEval = col("doc_id") % 10 === 0
+    val isEval = evalSplit(col("doc_id"))
     val stream = spark.readStream.schema(schema)
       .option("pathGlobFilter", "documents.parquet").parquet(dir)
       .filter(!isEval)
@@ -500,13 +505,13 @@ object Dedup {
       .agg(max(col("cos")).as("max_cos"))
   }
 
-  /** q62 over the embeddings fixture: eval = vec_id % 10 == 0, threshold
+  /** q62 over the embeddings fixture: eval = [[evalSplit]] of vec_id, threshold
     * matching q20's loose default. */
   def embeddingDecontamination(spark: SparkSession, dir: String,
                                threshold: Double = 0.4): DataFrame =
     embeddingDecontaminationFor(
       Tables.embeddings(spark, dir).select(col("vec_id"), col("embedding")),
-      col("vec_id") % 10 === 0, threshold)
+      evalSplit(col("vec_id")), threshold)
 
   /** Winnowed fingerprint set of one document (Schleimer/Wilkerson/Aiken,
     * "Winnowing: Local Algorithms for Document Fingerprinting", SIGMOD'03
@@ -985,39 +990,6 @@ object Dedup {
     */
   val BandedSafeThreshold: Double = 0.9
 
-  /** Routing counts memoized per (session, dir): the count is one
-    * metadata-cheap action (parquet footer row counts), but queries that
-    * share a session — q20 and q58 both route — shouldn't re-pay it.
-    * ASSUMES fixture dirs are immutable for the life of the session (true
-    * for the test/bench harnesses); a rewritten dir needs
-    * [[clearRoutingCache]] or the route goes stale. The count runs outside
-    * any lock so concurrent routers don't serialize on it (worst case two
-    * threads both count and one insert wins — same value either way).
-    */
-  private val routingCounts =
-    new java.util.concurrent.ConcurrentHashMap[(String, String, String), java.lang.Long]()
-
-  private[graft] def clearRoutingCache(): Unit = routingCounts.clear()
-
-  private def corpusRowCount(spark: SparkSession, dir: String, table: String,
-                             e: DataFrame): Long = {
-    // the table name is part of the key: documents and embeddings share a
-    // fixture dir, and a memoized embeddings count must never route a
-    // documents query (or vice versa)
-    val key = (graft.sources.Sources.sessionTag(spark), dir, table)
-    val cached = routingCounts.get(key)
-    if (cached != null) cached.longValue()
-    else {
-      val n = e.count()
-      // bound the memo in a long-lived JVM serving many sessions/dirs: the
-      // entries are one Long each, so a rare full reset (re-pay one count
-      // per live (session, dir)) beats tracking session lifecycles
-      if (routingCounts.size > 64) routingCounts.clear()
-      val prior = routingCounts.putIfAbsent(key, n)
-      if (prior != null) prior.longValue() else n
-    }
-  }
-
   /** Embedding-cosine near-dup with an explicit scale router:
     *
     *   - n ≤ maxExactRows → the exact all-pairs kernel with one side
@@ -1035,8 +1007,8 @@ object Dedup {
     *     quadratic compute instead — never a silent recall downgrade. The
     *     block count scales with n so each cell stays ~100k×100k.
     *
-    * The routing count is one metadata-cheap action against the scan,
-    * memoized per (session, dir).
+    * The routing count is [[Tables.rowCount]], memoized per (session,
+    * leaf-file listing), so a rewritten fixture routes on its new size.
     *
     * maxExactRows = 50k is MEASURED, not guessed (round-12 crossover
     * measurement, BENCH_NOTES.md): the exact broadcast kernel walls
@@ -1060,7 +1032,7 @@ object Dedup {
                                           threshold: Double,
                                           maxExactRows: Long): DataFrame = {
     val e = Tables.embeddings(spark, dir).select(col("vec_id"), col("embedding"))
-    val n = corpusRowCount(spark, dir, "embeddings", e)
+    val n = Tables.rowCount(spark, dir, "embeddings")
     if (n <= maxExactRows)
       embeddingNearDupPairsExactFor(e, threshold)
     else if (threshold >= BandedSafeThreshold)
@@ -1438,12 +1410,6 @@ object Dedup {
     */
   val MaxFullIndexDocs: Long = 1000000L
 
-  /** Text near-dup cluster resolution with a corpus-size router over the
-    * candidate generator (the [[embeddingNearDupPairs]] pattern brought to
-    * the text side): same exact-Jaccard scoring and CC tail on both
-    * routes, so the contract never weakens — only the candidate index
-    * shrinks. The routing count is one metadata-cheap action, memoized
-    * per (session, dir, table). */
   /** q98 — CROSS-SOURCE DUPLICATION MATRIX: where do the near-dups come
     * from? The contamination report a multi-source corpus publishes —
     * near-dup pairs (the q17 exact-Jaccard contract) rolled up by
@@ -1476,10 +1442,15 @@ object Dedup {
           .as("avg_jaccard"))
   }
 
+  /** Text near-dup cluster resolution with a corpus-size router over the
+    * candidate generator (the [[embeddingNearDupPairs]] pattern brought to
+    * the text side): same exact-Jaccard scoring and CC tail on both
+    * routes, so the contract never weakens — only the candidate index
+    * shrinks. The routing count is [[Tables.rowCount]]. */
   def nearDupClusters(spark: SparkSession, dir: String, threshold: Double = 0.5,
                       maxFullIndexDocs: Long = MaxFullIndexDocs): DataFrame = {
     val docs = Tables.documents(spark, dir)
-    val n = corpusRowCount(spark, dir, "documents", docs)
+    val n = Tables.rowCount(spark, dir, "documents")
     val sh = Some(ensureDocShingles(spark, dir))
     if (n <= maxFullIndexDocs) nearDupClustersFor(docs, threshold, sh,
       sigOpt = Some(ensureMinhashSigs(spark, dir)))
@@ -1930,7 +1901,7 @@ object Dedup {
     * D8's whole-doc Jaccard can't answer: a 30-token eval question pasted
     * into a 400-token training doc has J ≈ 0.07 and is invisible to q59,
     * but is a single 30-token diagonal run here. Split convention = q59's
-    * (eval = doc_id % 10 == 0).
+    * ([[evalSplit]] of doc_id).
     *
     * Scale: gram leaf spilled once; hotness is CORPUS-wide df (q59's
     * discipline — a template gram is quadratic whichever split its
@@ -1941,11 +1912,11 @@ object Dedup {
   def substringContamination(spark: SparkSession, dir: String, n: Int = 8,
                              dfCap: Int = 50, minRun: Int = 20): DataFrame =
     substringContaminationFor(Tables.documents(spark, dir),
-      col("doc_id") % 10 === 0, n, dfCap, minRun,
+      evalSplit(col("doc_id")), n, dfCap, minRun,
       // the split predicate is a pure function of doc_id, so the session
       // gram leaf serves this consumer too (is_eval re-derived in-row)
       gOpt = Some(ensureDocGrams(spark, dir, n)
-        .withColumn("is_eval", col("doc_id") % 10 === 0)))
+        .withColumn("is_eval", evalSplit(col("doc_id")))))
 
   def substringContaminationFor(docs: DataFrame, isEval: Column, n: Int = 8,
                                 dfCap: Int = 50, minRun: Int = 20,

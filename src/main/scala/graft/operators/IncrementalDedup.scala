@@ -931,13 +931,10 @@ object IncrementalDedup {
     val docs = Tables.documents(spark, dir)
     val isNew = col("doc_id") % 7 === 0
     val leaf = Dedup.ensureDocShingles(spark, dir)
-    val table = "graft_shidx_" +
-      graft.sources.Sources.dirTag(dir) + "_" +
-      graft.sources.Sources.sessionTag(spark)
     // bootstrap once per session (read-only sink, deterministic content —
     // the q64 ensure-once discipline applied to the bucketed table)
-    graft.sources.Sources.ensureBuild(spark, "shidxb", dir) { () =>
-      writeShingleIndexBucketed(docs.filter(!isNew), table,
+    val table = graft.sources.Sources.ensureTable(spark, "shidxb", dir) {
+      t => writeShingleIndexBucketed(docs.filter(!isNew), t,
         shOpt = Some(leaf.filter(!isNew)))
     }
     // the shard's probe relation is an id-slice of the same leaf — the
@@ -959,13 +956,11 @@ object IncrementalDedup {
     val docs = Tables.documents(spark, dir)
     val isNew = col("doc_id") % 7 === 0
     val leaf = Dedup.ensureDocShingles(spark, dir)
-    val path = graft.sources.Sources.scratchDir(spark,
-      "shingle_index_" + graft.sources.Sources.dirTag(dir))
     // bootstrap once per session: the report never mutates the sink and
     // its content is a pure function of (dir, split) — re-writing the
     // identical index per invocation was pure fixture cost (r22)
-    graft.sources.Sources.ensureBuild(spark, "shidx64", dir) { () =>
-      writeShingleIndex(docs.filter(!isNew), path,
+    val path = graft.sources.Sources.ensureStore(spark, "shidx64", dir) {
+      root => writeShingleIndex(docs.filter(!isNew), root,
         shOpt = Some(leaf.filter(!isNew)))
     }
     reportFor(docs.filter(isNew), readShingleIndex(spark, path), threshold,
@@ -981,13 +976,11 @@ object IncrementalDedup {
                                      threshold: Double = 0.5): DataFrame = {
     val docs = Tables.documents(spark, dir)
     val isNew = col("doc_id") % 7 === 0
-    val path = graft.sources.Sources.scratchDir(spark,
-      "fp_index_" + graft.sources.Sources.dirTag(dir))
     // bootstrap + probe fingerprints are id-slices of the session winnow
     // leaf; the exact-scoring tail slices the shingle leaf (q64 discipline)
     val fpLeaf = Dedup.ensureWinnowFps(spark, dir)
-    graft.sources.Sources.ensureBuild(spark, "fpidx67", dir) { () =>
-      writeFpIndex(docs.filter(!isNew), path,
+    val path = graft.sources.Sources.ensureStore(spark, "fpidx67", dir) {
+      root => writeFpIndex(docs.filter(!isNew), root,
         fpOpt = Some(fpLeaf.filter(!isNew)))
     }
     reportForFpIndex(docs.filter(isNew), readShingleIndex(spark, path),
@@ -1015,9 +1008,8 @@ object IncrementalDedup {
     // each invocation clones files + catalog metadata onto its working
     // tables (deterministic content; the clone carries the bucket spec
     // and the parameter sidecar — the r21 lifecycle-clone pattern)
-    val boot = table + "_boot"
-    graft.sources.Sources.ensureBuild(spark, "xoboot", dir) { () =>
-      writeShingleIndexBucketedXO(docs.filter(!isNew), boot,
+    val boot = graft.sources.Sources.ensureTable(spark, "xoboot", dir) {
+      t => writeShingleIndexBucketedXO(docs.filter(!isNew), t,
         shOpt = Some(leaf.filter(!isNew)))
     }
     graft.sources.Sources.cloneTableOver(spark, shinglesTable(boot),
@@ -1043,12 +1035,9 @@ object IncrementalDedup {
                                              threshold: Double = 0.5): DataFrame = {
     val docs = Tables.documents(spark, dir)
     val isNew = col("doc_id") % 7 === 0
-    val table = "graft_fpidx_" +
-      graft.sources.Sources.dirTag(dir) + "_" +
-      graft.sources.Sources.sessionTag(spark)
     val fpLeaf = Dedup.ensureWinnowFps(spark, dir)
-    graft.sources.Sources.ensureBuild(spark, "fpidxb", dir) { () =>
-      writeFpIndexBucketed(docs.filter(!isNew), table,
+    val table = graft.sources.Sources.ensureTable(spark, "fpidxb", dir) {
+      t => writeFpIndexBucketed(docs.filter(!isNew), t,
         fpOpt = Some(fpLeaf.filter(!isNew)))
     }
     reportForFpIndexBucketed(docs.filter(isNew), table, docs.filter(!isNew),
@@ -1080,9 +1069,8 @@ object IncrementalDedup {
     // lifecycle — bootstrap → tick 0 → compact → no-op replay → tick 1 —
     // instead of a second run short-circuiting on the first run's
     // watermark against a freshly reset index
-    val boot = table + "_boot"
-    graft.sources.Sources.ensureBuild(spark, "xocboot", dir) { () =>
-      writeShingleIndexBucketedXO(docs.filter(mod >= 2), boot,
+    val boot = graft.sources.Sources.ensureTable(spark, "xocboot", dir) {
+      t => writeShingleIndexBucketedXO(docs.filter(mod >= 2), t,
         shOpt = Some(leaf.filter(col("doc_id") % 7 >= 2)))
     }
     graft.sources.Sources.cloneTableOver(spark, shinglesTable(boot),

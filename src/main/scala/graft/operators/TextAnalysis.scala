@@ -506,7 +506,7 @@ object TextAnalysis {
   def tfidfSimilarityPairs(spark: SparkSession, dir: String,
                            threshold: Double = 0.3, maxDf: Long = 100L): DataFrame = {
     val docs = Tables.documents(spark, dir)
-    val nDocs = docs.count() // one scalar for the idf; bounded driver state
+    val nDocs = Tables.rowCount(spark, dir, "documents") // the idf's N
     val tf = docs
       .select(col("doc_id"), explode(TF.tokens(col("text"))).as("token"))
       .groupBy(col("doc_id"), col("token"))
@@ -639,7 +639,7 @@ object TextAnalysis {
                maxDf: Long = 1000000L): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val docs = Tables.documents(spark, dir)
-    val nDocs = docs.count() // one scalar for the idf; bounded driver state
+    val nDocs = Tables.rowCount(spark, dir, "documents") // the idf's N
     val tf = docs
       .select(col("doc_id"), explode(TF.tokens(col("text"))).as("token"))
       .groupBy(col("doc_id"), col("token"))
@@ -1784,12 +1784,12 @@ object TextAnalysis {
     // q59's two-arm contract: shingle-visible cross-split pairs PLUS the
     // exact-hash arm (empty on a hash-unique fixture, kept for contract)
     val contam = pairs
-      .filter((col("doc_a") % 10 === 0) =!= (col("doc_b") % 10 === 0))
-      .select(when(col("doc_a") % 10 === 0, col("doc_b"))
+      .filter(Dedup.evalSplit(col("doc_a")) =!= Dedup.evalSplit(col("doc_b")))
+      .select(when(Dedup.evalSplit(col("doc_a")), col("doc_b"))
         .otherwise(col("doc_a")).as("id"))
-      .unionByName(scalars.filter(col("doc_id") % 10 =!= 0)
+      .unionByName(scalars.filter(!Dedup.evalSplit(col("doc_id")))
         .select(col("doc_id").as("id"), col("h"))
-        .join(broadcast(scalars.filter(col("doc_id") % 10 === 0)
+        .join(broadcast(scalars.filter(Dedup.evalSplit(col("doc_id")))
             .select(col("h")).distinct()), Seq("h"), "left_semi")
         .select(col("id")))
       .agg(countDistinct(col("id")).as("eval_contaminated"))

@@ -119,13 +119,13 @@ object CorpusRelease {
       "release_nd")
 
     // --- stage 4: decontamination against the held-out split -----------
-    val isEval = col("doc_id") % 10 === 0
+    val isEval = Dedup.evalSplit(col("doc_id"))
     val ndIds = nd.select(col("doc_id"))
     val fuzzyContam = pairs
       .join(ndIds.select(col("doc_id").as("doc_a")), Seq("doc_a"), "left_semi")
       .join(ndIds.select(col("doc_id").as("doc_b")), Seq("doc_b"), "left_semi")
-      .filter((col("doc_a") % 10 === 0) =!= (col("doc_b") % 10 === 0))
-      .select(when(col("doc_a") % 10 === 0, col("doc_b"))
+      .filter(Dedup.evalSplit(col("doc_a")) =!= Dedup.evalSplit(col("doc_b")))
+      .select(when(Dedup.evalSplit(col("doc_a")), col("doc_b"))
         .otherwise(col("doc_a")).as("doc_id"))
     // exact-text arm (the q59 contract): identical train/eval text is
     // contamination even when shingling can't see it. Within THIS chain

@@ -64,26 +64,29 @@ object Sources {
     * schema inference over none would throw instead of returning empty. */
   private val spillSeq = new java.util.concurrent.atomic.AtomicLong(0L)
 
-  /** Session-memoized fixture-store builder — `ensureBucketedLayout`'s
-    * discipline on a scratch path: the first caller with a given
-    * (tag, key) builds the store under the memo lock; every later
-    * caller (including a concurrent one — the lock covers the build)
-    * reuses the same root. Store CONTENT must be a deterministic
-    * function of the key, so sharing changes COST, never results: the
-    * multi-commit lifecycle fixtures (4-tick zone-map/Bloom stores,
-    * aged IVF/PQ indexes) are build-once INGEST state that sibling
-    * audits consume, and rebuilding them per query measured ~20 s of
-    * pure repeated fixture construction at sf0.1 (r14 verdict #1).
-    * Crash-replay specs must NOT use this — they tear stores and need
-    * private roots (`Files.createTempDirectory`). */
-  /** One memo cell per (session, tag, key): the build runs under the
-    * CELL's own monitor (Scala lazy-val init), never a global lock, so a
-    * long build (pair generation, kNN scoring, ANALYZE) blocks only
-    * same-key callers — concurrent threads touching other store keys
-    * proceed. A build that throws leaves the cell uninitialized and the
-    * next caller retries (every build writes mode=overwrite). Nested
-    * different-key builds (ensureEmbedClusters → ensureEmbedPairs) lock
-    * distinct cells, so re-entry never deadlocks. */
+  /** The session memo of built state. The first caller with a given
+    * (session, tag, key) builds the store under a scratch root derived
+    * from that key; every later caller, a concurrent one included, gets
+    * the same root. Everything a build writes lives under its root, and a
+    * catalog build names its tables after the root ([[ensureTable]]), so
+    * a path or table name can never disagree with the key. Store CONTENT
+    * must be a deterministic function of the key, so sharing changes
+    * COST, never results: the multi-commit lifecycle fixtures (4-tick
+    * zone-map/Bloom stores, aged IVF/PQ indexes) are build-once INGEST
+    * state that sibling audits consume, and rebuilding them per query
+    * measured ~20 s of pure repeated fixture construction at sf0.1.
+    * Consumers leave the built state as it is, or replay an idempotent
+    * tick onto it (q94, q118); a mutating lifecycle clones it first
+    * ([[cloneStoreDir]], [[cloneTableOver]]). Crash-replay specs must NOT
+    * use this: they tear stores and need private roots
+    * (`Files.createTempDirectory`).
+    *
+    * One memo cell per key: the build runs under the CELL's own monitor
+    * (Scala lazy-val init), never a global lock, so a long build blocks
+    * only same-key callers. A build that throws leaves the cell
+    * uninitialized and the next caller retries (every build writes
+    * mode=overwrite). Nested different-key builds (ensureEmbedClusters →
+    * ensureEmbedPairs) lock distinct cells, so re-entry never deadlocks. */
   private final class StoreCell(build: () => String) {
     lazy val path: String = build()
   }
@@ -117,27 +120,14 @@ object Sources {
   private[graft] def scratchDirUnique(spark: SparkSession, tag: String): String =
     scratchDir(spark, s"${tag}_${spillSeq.incrementAndGet()}")
 
-  /** [[ensureStore]] for SIDE-EFFECT builds that land somewhere other
-    * than an ensureStore root (catalog tables, caller-named index sinks):
-    * the first caller with a given (tag, key) runs `build` under the memo
-    * cell's lock; later same-key callers skip it. Same contract as
-    * ensureStore — the built state must be a deterministic function of
-    * the key and must NOT be mutated by its consumers (mutating
-    * lifecycles clone the built state first: [[cloneStoreDir]] /
-    * [[cloneTableOver]]). The build is timed into [[storeBuildSeconds]],
-    * so the bench reports it as its own `leaf_builds` line instead of
-    * charging whichever consumer ran first. */
-  private[graft] def ensureBuild(spark: SparkSession, tag: String,
-                                 key: String)(build: () => Unit): Unit = {
-    ensuredStores.computeIfAbsent(s"${sessionTag(spark)}|$tag|$key",
-      _ => new StoreCell(() => {
-        val t0 = System.nanoTime()
-        build()
-        val label = s"$tag|${key.substring(key.lastIndexOf('/') + 1)}"
-        storeBuildSeconds.put(label, (System.nanoTime() - t0) / 1e9)
-        ""
-      })).path
-    ()
+  /** [[ensureStore]] for a catalog build: `build` receives, and the call
+    * returns, the name the store's tables derive from, which is the
+    * basename of the store's root (alphanumerics and underscores only, so
+    * a valid identifier). */
+  private[graft] def ensureTable(spark: SparkSession, tag: String,
+                                 key: String)(build: String => Unit): String = {
+    def name(root: String) = root.substring(root.lastIndexOf('/') + 1)
+    name(ensureStore(spark, tag, key)(root => build(name(root))))
   }
 
   /** Clone a catalog table (files + metadata) onto a new table name,

@@ -161,11 +161,11 @@ object ReleaseStream {
   def currentManifest(spark: SparkSession, root: String): DataFrame =
     graft.sources.Sources.shardManifest(spark, s"$root/shards")
 
-  /** The registry fixture form: the train split (doc_id % 10 ≠ 0 — the
-    * eval split is the static benchmark) as three doc_id-contiguous
-    * ticks, then the cumulative manifest. The oracle replays gates,
-    * first-occurrence hash dedup, static-eval decon, and the tick-by-tick
-    * index admission (q69 discipline) in chained CTEs. */
+  /** The registry fixture form: the train split (all but
+    * [[graft.operators.Dedup.evalSplit]], the static benchmark) as three
+    * doc_id-contiguous ticks, then the cumulative manifest. The oracle
+    * replays gates, first-occurrence hash dedup, static-eval decon, and
+    * the tick-by-tick index admission (q69 discipline) in chained CTEs. */
   def releaseTicks(spark: SparkSession, dir: String,
                    threshold: Double = 0.5,
                    targetBytes: Long = 16384L): DataFrame = {
@@ -176,7 +176,7 @@ object ReleaseStream {
     val docs = graft.Tables.documents(spark, dir)
       .select(col("doc_id"), col("lang"), col("text")).persist()
     try {
-      val isEval = col("doc_id") % 10 === 0
+      val isEval = Dedup.evalSplit(col("doc_id"))
       val root = graft.sources.Sources.scratchDir(spark,
         s"release_stream_${java.util.UUID.randomUUID.toString.take(8)}")
       // the static eval index is a SESSION leaf (r22): it's read-only
@@ -192,7 +192,7 @@ object ReleaseStream {
       val evalRoot = graft.sources.Sources.ensureStore(spark, "releval",
           dir) { p =>
         buildEvalIndex(docs.filter(isEval), p,
-          shOpt = Some(leaf.filter(col("doc_id") % 10 === 0)))
+          shOpt = Some(leaf.filter(isEval)))
       }
       val arriving = docs.filter(!isEval)
       val maxId = arriving.agg(max(col("doc_id"))).head().getLong(0)

@@ -71,7 +71,7 @@ object ReleaseProbe {
         val docs = graft.Tables.documents(spark, dir)
           .select(col("doc_id"), col("lang"), col("text")).persist()
         docs.count()
-        val isEval = col("doc_id") % 10 === 0
+        val isEval = graft.operators.Dedup.evalSplit(col("doc_id"))
         val root = graft.sources.Sources.scratchDirUnique(spark, "rp183")
         timed(lbl("q183 eval index build")) {
           graft.streaming.ReleaseStream.buildEvalIndex(docs.filter(isEval), root)

@@ -724,6 +724,26 @@ class DedupSpec extends AnyFunSuite {
     assert(hist.exists(_._1 >= 2), "no multi-doc cluster on the fixture")
   }
 
+  test("near-dup router: a documents table rewritten in the session routes on its new count") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_route").toString
+    val docs = Tables.documents(spark, TestSpark.Sf0001)
+    docs.write.parquet(s"$dir/documents.parquet")
+    val before = Tables.rowCount(spark, dir, "documents")
+    assert(before == docs.count())
+    // the MinHash signature leaf is scanned on the full-index route only
+    def fullIndexRoute(): Boolean =
+      TestSpark.pathsScannedBy(
+        Dedup.nearDupClusters(spark, dir, maxFullIndexDocs = before).collect())
+        .exists(_.contains("graft_ens_mhsigs_"))
+    assert(fullIndexRoute(), "at the cap the router must keep the full index")
+    // twice the rows: every document again under a fresh id
+    docs.unionByName(docs.withColumn("doc_id", col("doc_id") + 1000000L))
+      .write.mode("overwrite").parquet(s"$dir/documents.parquet")
+    assert(Tables.rowCount(spark, dir, "documents") == 2 * before,
+      "the count must follow the rewrite")
+    assert(!fullIndexRoute(), "past the cap the router must take the winnowed route")
+  }
+
   test("q181 dedup threshold curve: planted chain drops exactly per-threshold; curve is monotone") {
     // 3-shingle Jaccards by construction: J(1,2) = 7/9 -> 0.7778,
     // J(2,3) = 6/10 = 0.6, J(1,3) = 5/11 -> 0.4545 (below every gate).

@@ -198,8 +198,8 @@ class SimilaritySpec extends AnyFunSuite {
     }
     // the third call's memo hit vouches for the A build: its codebook must
     // still hold A lists, not the B codebook the second call wrote
-    val (cbPath, _) = Similarity.ivfIncrementalPaths(spark, TestSpark.Sf0001, a)
-    assert(Similarity.loadCentroids(spark, cbPath).length == a)
+    val root = Similarity.ivfBootRoot(spark, TestSpark.Sf0001, a)
+    assert(Similarity.loadCentroids(spark, s"$root/cb").length == a)
   }
 
   test("IVF partitions the corpus: every vector lands in exactly one list") {

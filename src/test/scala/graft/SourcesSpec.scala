@@ -872,6 +872,15 @@ class SourcesSpec extends AnyFunSuite {
     callers.foreach(_.start()); callers.foreach(_.join(10000))
     assert(built.get() == 1 && paths.size == 1,
       s"expected one shared build, got ${built.get()} builds, ${paths.size} paths")
+    // two parameter sets of one tag in one session: two roots, two table
+    // names, and each set's later callers reuse its own root
+    val rootA = Sources.ensureStore(spark, "spectag", s"$key|8") { _ => () }
+    val rootB = Sources.ensureStore(spark, "spectag", s"$key|4") { _ => () }
+    assert(rootA != rootB)
+    assert(Sources.ensureStore(spark, "spectag", s"$key|8") { _ =>
+      fail("a memoized parameter set rebuilt") } == rootA)
+    assert(Sources.ensureTable(spark, "spectab", s"$key|8") { _ => () } !=
+      Sources.ensureTable(spark, "spectab", s"$key|4") { _ => () })
     // different keys: key B completes WHILE key A's build is still held
     // open (the r16 advice finding: the old global monitor serialized them)
     val aEntered = new java.util.concurrent.CountDownLatch(1)

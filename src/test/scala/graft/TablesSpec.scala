@@ -59,6 +59,17 @@ class TablesSpec extends AnyFunSuite {
     assert(read(path)._1 == 0, "the appended path is memoized again")
   }
 
+  test("rowCount: counted once per listing, afresh after a rewrite") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_tables_count").toString
+    Seq(1L, 2L).toDF("doc_id").write.parquet(s"$dir/documents.parquet")
+    assert(Tables.rowCount(spark, dir, "documents") == 2L)
+    assert(TestSpark.jobsStartedBy(Tables.rowCount(spark, dir, "documents")) == 0,
+      "an unchanged table was counted again")
+    Seq(1L, 2L, 3L).toDF("doc_id").write.mode("overwrite")
+      .parquet(s"$dir/documents.parquet")
+    assert(Tables.rowCount(spark, dir, "documents") == 3L)
+  }
+
   test("parquet: two sessions keep separate entries") {
     val path = freshPath("sessions")
     Seq(1L).toDF("id").write.parquet(path)

@@ -46,4 +46,27 @@ object TestSpark {
       jobs.get
     } finally sc.removeSparkListener(listener)
   }
+
+  /** Root paths of every parquet scan in the queries `f` runs, from a
+    * QueryExecutionListener; drained like [[jobsStartedBy]], since the
+    * listener's events ride the same ordered queue as the marker job. */
+  def pathsScannedBy(f: => Any): Set[String] = {
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+    val paths = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(name: String, qe: QueryExecution, ns: Long): Unit =
+        qe.analyzed.foreach {
+          case LogicalRelation(r: HadoopFsRelation, _, _, _, _) =>
+            r.location.rootPaths.foreach(p => paths.add(p.toString))
+          case _ =>
+        }
+      override def onFailure(name: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try { jobsStartedBy(f); () }
+    finally spark.listenerManager.unregister(listener)
+    import scala.jdk.CollectionConverters._
+    paths.asScala.toSet
+  }
 }
